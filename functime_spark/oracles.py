@@ -2321,7 +2321,7 @@ def operator_oracles() -> dict:
 
     # dedup_minhash_incr: even ids = historical store, odd ids = new
     # batch; bucket caps are applied PER SIDE (mirroring the Spark
-    # _banded_sigs calls), candidates are new-vs-new (id_a < id_b)
+    # _cap_buckets calls), candidates are new-vs-new (id_a < id_b)
     # union new-vs-store (any order), verified on the shared sig table.
     o["dedup_minhash_incr"] = (
         f"WITH {mh_ctes}, "

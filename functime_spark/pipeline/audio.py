@@ -409,9 +409,9 @@ def audio_near_dups(
     ``offset`` column (frames of hop_s each).
 
     Scale shape (the dhash_near_dups discipline): fingerprinting is
-    row-local; the ONLY shuffle is the self-join on the 8-byte fp key,
-    and buckets past `max_bucket_size` drop first (_cap_buckets — a
-    landmark shared by the whole corpus is silence/boilerplate, not
+    row-local; the ONLY shuffle is the bucket-pairs stage on the 8-byte
+    fp key, and buckets past `max_bucket_size` drop first (_cap_buckets
+    — a landmark shared by the whole corpus is silence/boilerplate, not
     evidence); the match count is one hash aggregate on (id_a, id_b
     [, offset]); the coherent mode adds a second TINY aggregate on
     (id_a, id_b) — an associative struct-MAX argmax whose map-side
@@ -420,19 +420,15 @@ def audio_near_dups(
     corpus**2."""
     from functime_spark.pipeline.dedup import _bucket_pairs
 
-    # r11: no lineage cut — the one-aggregate bucket-pairs shape
-    # consumes the fingerprint pass exactly once (the old fp self-join
-    # read it on both sides, which is what the materialize paid for)
+    # no lineage cut: _bucket_pairs consumes the fingerprint pass
+    # exactly once
     fps = audio_fingerprints(
         media, decoder=decoder, with_time=offset_coherent,
         **kernel_kwargs,
     )
-    # r11: one-aggregate bucket pairs (dedup._bucket_pairs) — the old
-    # cap-window + fp self-join exchanged the fingerprint frame twice
-    # and paid a per-bucket count window; the aggregate applies the
-    # identical bucket wall. Offset mode's items carry the anchor
-    # frame, and the a.id < b.id filter drops same-clip pairs (one
-    # clip holds many (t, fp) rows per hash).
+    # Offset mode's items carry the anchor frame, and the a.id < b.id
+    # filter drops same-clip pairs (one clip holds many (t, fp) rows
+    # per hash).
     item_cols = ["media_id", "t"] if offset_coherent else ["media_id"]
     joined = _bucket_pairs(fps, ["fp"], max_bucket_size, item_cols).filter(
         F.col("a.media_id") < F.col("b.media_id")
@@ -517,15 +513,14 @@ def audio_dedup_incremental(
     new_fps = materialize(
         audio_fingerprints(new_media, decoder=decoder, **kernel_kwargs)
     )
-    capped_new = _cap_buckets(new_fps, ["fp"], max_bucket_size)
-    # new-vs-new via the one-aggregate bucket pairs (r11; identical
-    # per-bucket wall to the capped cross side below). The id filter is
-    # REQUIRED, not redundant (r12 fix): one clip can contribute the
-    # same fp to a bucket more than once (periodic/tonal audio repeats
-    # (f1, f2, dt) across anchors), and the sorted item struct only
-    # guarantees a.id <= b.id — without the filter a repeated-hash clip
-    # self-reports as its own duplicate (audio_near_dups:437 keeps the
-    # identical filter for the identical reason).
+    # new-vs-new via _bucket_pairs (the same _cap_buckets wall as the
+    # cross side below). The id filter is REQUIRED, not redundant: one
+    # clip can contribute the same fp to a bucket more than once
+    # (periodic/tonal audio repeats (f1, f2, dt) across anchors), and
+    # the sorted item struct only guarantees a.id <= b.id — without
+    # the filter a repeated-hash clip self-reports as its own
+    # duplicate (audio_near_dups keeps the identical filter for the
+    # identical reason).
     nn = (
         _bucket_pairs(new_fps, ["fp"], max_bucket_size, ["media_id"])
         .filter(F.col("a.media_id") < F.col("b.media_id"))
@@ -537,6 +532,7 @@ def audio_dedup_incremental(
     )
     if store_fps is None:
         return nn.filter(F.col("n_matches") >= min_matches), new_fps
+    capped_new = _cap_buckets(new_fps, ["fp"], max_bucket_size)
     capped_old = _cap_buckets(store_fps, ["fp"], max_bucket_size)
     cross = (
         capped_new.alias("a")

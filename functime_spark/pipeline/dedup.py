@@ -297,68 +297,31 @@ def _bucket_pairs(
     max_bucket_size: int,
     item_cols: list,
 ) -> DataFrame:
-    """Same-bucket candidate pairs as ONE hash aggregate + row-local
-    pair explode (r11 optimization).
-
-    The previous shape — cap-window + self-join — executed the banded
-    projection on BOTH join sides and paid two Exchange+Sort passes
-    plus a per-bucket count window. Collecting each bucket once
-    (`collect_list` behind the same single exchange the window used)
-    and emitting the i<j pairs from the sorted in-row array keeps the
-    identical candidate set (buckets over `max_bucket_size` drop
-    exactly as _cap_buckets dropped them) for one exchange, no sort,
-    no join. Bucket size is capped, so the in-row pair fan-out is
-    bounded by max_bucket_size**2 — never corpus-shaped.
+    """Same-bucket candidate pairs: buckets past `max_bucket_size` drop
+    whole (_cap_buckets), each survivor is collected once, and its i<j
+    pairs explode row-locally. The cap window and the collect share one
+    hash partitioning on `keys`, so the plan crosses ONE exchange and an
+    over-cap key never fills an aggregation buffer. NULL keys group
+    (and drop past the cap) like any other key.
 
     ``item_cols`` lead with the id column: `sort_array` orders the
     bucket's item structs lexicographically, so positional i<j pairs
     come out id-ordered (callers with non-unique ids per bucket — the
     timed audio constellation rows — still filter a.id < b.id).
-    Returns one row per pair with struct columns ``a`` and ``b``.
-
-    r12 hardening (guide §5, VERDICT r11 item 3): the bucket wall now
-    applies BEFORE the collect — the r11 shape size-filtered the
-    collected array, so a corpus-hot key (title-card frame hash,
-    silence landmark, boilerplate band value) assembled its ENTIRE
-    bucket into one aggregation buffer before being discarded: a
-    single-task OOM at crawl scale, not a slow task. One explicit
-    repartition on the bucket key is shared (ReusedExchange) by a
-    count-only pre-aggregate (8-byte buffers) and the collect
-    aggregate, so the upstream decode/signature kernel still computes
-    ONCE and the stream still crosses exactly one corpus-sized
-    exchange; over-cap keys leave through an anti-join whose build
-    side is the (tiny) hot-key set, and the join preserves the
-    exchange's partitioning so the collect adds no shuffle (the join
-    is null-safe so a hot NULL-key bucket drops too, exactly as the
-    post-collect size filter dropped it). The post-collect size filter
-    stays as the semantic belt — byte-identical candidate set to the
-    r11 shape, pinned by the cap-window identity test."""
+    Returns one row per pair with struct columns ``a`` and ``b``."""
     item = F.struct(*[F.col(c) for c in item_cols])
-    part = banded.repartition(*[F.col(k) for k in keys])
-    hot = (
-        part.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket_size)
-        .select(*[F.col(k).alias(f"__hot_{k}") for k in keys])
-    )
-    cond = None
-    for k in keys:
-        c = part[k].eqNullSafe(hot[f"__hot_{k}"])
-        cond = c if cond is None else (cond & c)
-    pruned = part.join(hot, cond, "left_anti")
     buckets = (
-        pruned.groupBy(*keys)
+        _cap_buckets(banded, keys, max_bucket_size)
+        .groupBy(*keys)
         .agg(F.sort_array(F.collect_list(item)).alias("__s"))
-        .filter(
-            (F.size("__s") >= 2) & (F.size("__s") <= max_bucket_size)
-        )
+        .filter(F.size("__s") >= 2)
     )
     # pair fan-out as TWO Generate (explode) steps — posexplode the
     # bucket, then explode each element's tail slice. A single nested
     # transform/flatten expression produces the same pairs but runs
     # through interpreted higher-order lambdas (in-session A/B over
     # the 111k-row audio fp frame: 2.6 s nested-HOF vs 1.2 s
-    # double-Generate vs 1.4 s for the old cap-window self-join).
+    # double-Generate).
     e1 = buckets.select("__s", F.posexplode("__s").alias("__i", "a"))
     return e1.select(
         "a",
@@ -369,7 +332,9 @@ def _bucket_pairs(
 
 
 def _cap_buckets(banded: DataFrame, keys: list, max_bucket_size: int) -> DataFrame:
-    """Drop buckets larger than max_bucket_size before the self-join.
+    """Drop buckets larger than max_bucket_size before pairing — the
+    one bucket wall of every LSH operator (_bucket_pairs and the
+    incremental store joins).
 
     One pathological bucket (empty/boilerplate docs that all hash
     identically) would otherwise emit O(b^2) candidate pairs and a
@@ -377,8 +342,8 @@ def _cap_buckets(banded: DataFrame, keys: list, max_bucket_size: int) -> DataFra
     EXACT duplicates, which exact_dedup already catches with a linear
     hash-aggregate — dropping them here loses only near-dups hiding
     inside a crowd of exact dups. The count window shares the
-    self-join's hash partitioning, so the guard adds no extra
-    shuffle."""
+    downstream aggregate's or join's hash partitioning on the bucket
+    key, so the guard adds no extra shuffle."""
     w = Window.partitionBy(*keys)
     return (
         banded.withColumn("__bsz", F.count(F.lit(1)).over(w))
@@ -417,6 +382,25 @@ def band_rows(
     )
 
 
+def bit_band_rows(sigs: DataFrame, sig_col: str, band_bits: int) -> DataFrame:
+    """``sigs`` plus (band, band_val) LSH band rows: the 64-bit
+    signature ``sig_col`` cut into ``band_bits``-wide slices — the
+    single band definition of the Hamming-distance tiers (simhash and
+    the dHash image, video and streaming operators)."""
+    mask = F.lit((1 << band_bits) - 1)
+    return sigs.select(
+        "*",
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftrightunsigned(sig_col, i * band_bits).bitwiseAND(mask)
+                    for i in range(64 // band_bits)
+                ]
+            )
+        ).alias("band", "band_val"),
+    )
+
+
 def minhash_lsh_candidates(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -426,10 +410,7 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """Band the signature; docs sharing any band-hash are candidate
     near-duplicate pairs (id_a < id_b). Buckets larger than
-    `max_bucket_size` are dropped (same wall as _cap_buckets, applied
-    inside _bucket_pairs' single aggregate — r11: the cap-window +
-    self-join shape paid the banded projection and an Exchange+Sort
-    on both sides)."""
+    `max_bucket_size` are dropped (see _cap_buckets)."""
     banded = band_rows(sigs, id_col, bands, hash_fn)
     pairs = _bucket_pairs(
         banded, ["band", "band_hash"], max_bucket_size, [id_col]
@@ -480,8 +461,8 @@ def minhash_dedup(
     # one row per doc (n_hashes longs); the signature projection is
     # shuffle-free but still the expensive pass (the shingle + hash
     # sweep over every doc). The banding aggregate and the two verify
-    # joins all consume sigs; pinning runs it once, not 3x. r11: lazy
-    # — every consumer executes inside the caller's single action, so
+    # joins all consume sigs; pinning runs it once, not 3x. Lazy:
+    # every consumer executes inside the caller's single action, so
     # the first computation pins it without a separate job.
     sigs = materialize(sigs, eager=False)
     cands = minhash_lsh_candidates(sigs, id_col, bands, hash_fn=hash_fn)
@@ -627,29 +608,12 @@ def simhash_near_dups(
     """Candidate pairs sharing any 16-bit simhash band, verified by
     exact Hamming distance <= max_hamming. Buckets larger than
     `max_bucket_size` are dropped (see _cap_buckets)."""
-    # r11: no lineage cut needed — the one-aggregate bucket-pairs
-    # shape consumes the signature projection exactly once (the old
-    # self-join read it on both sides, which is what the materialize
-    # paid for)
+    # no lineage cut: _bucket_pairs consumes the signature projection
+    # exactly once
     sigs = simhash(docs, text_col, id_col, hash_fn=hash_fn)
-    n_bands = 64 // band_bits
-    banded = sigs.select(
-        F.col(id_col),
-        "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", i * band_bits).bitwiseAND(
-                        F.lit((1 << band_bits) - 1)
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
-    # r11: one-aggregate bucket pairs (see _bucket_pairs) — the sig
-    # long rides in the item struct, so the Hamming verify needs no
-    # join back to the signature frame
+    banded = bit_band_rows(sigs, "simhash", band_bits)
+    # the sig long rides in the item struct, so the Hamming verify
+    # needs no join back to the signature frame
     pairs = _bucket_pairs(
         banded, ["band", "band_val"], max_bucket_size, [id_col, "simhash"]
     )
@@ -1274,34 +1238,6 @@ def scrub_duplicated_spans(
     )
 
 
-def _banded_sigs(
-    sigs: DataFrame,
-    id_col: str,
-    bands: int,
-    hash_fn: str,
-    max_bucket_size: int,
-) -> DataFrame:
-    """(id, band, band_hash) LSH index rows from a signature frame,
-    oversized buckets dropped (see _cap_buckets)."""
-    sig = F.col("sig")
-    r = F.floor(F.size(sig) / bands).cast("int")
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: _hash64(
-                    F.concat_ws(",", F.transform(
-                        F.slice(sig, b * r + 1, r), lambda v: v.cast("string")
-                    )),
-                    hash_fn=hash_fn,
-                ),
-            )
-        ).alias("band", "band_hash"),
-    )
-    return _cap_buckets(banded, ["band", "band_hash"], max_bucket_size)
-
-
 def minhash_dedup_incremental(
     new_docs: DataFrame,
     store_sigs: DataFrame | None = None,
@@ -1349,24 +1285,21 @@ def minhash_dedup_incremental(
     )
     # consumed by banding + both verify sides; run the shingle sweeps once
     new_sigs = materialize(new_sigs)
-    banded_new = _banded_sigs(new_sigs, id_col, bands, hash_fn, max_bucket_size)
-
-    nn = banded_new.alias("a").join(
-        banded_new.alias("b"),
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+    nn = minhash_lsh_candidates(
+        new_sigs, id_col, bands, max_bucket_size, hash_fn
     )
 
     if store_sigs is None:
-        cands = nn.distinct()
+        cands = nn
         all_sigs = new_sigs
         updated = new_sigs
     else:
-        banded_old = _banded_sigs(
-            store_sigs, id_col, bands, hash_fn, max_bucket_size
+        keys = ["band", "band_hash"]
+        banded_new = _cap_buckets(
+            band_rows(new_sigs, id_col, bands, hash_fn), keys, max_bucket_size
+        )
+        banded_old = _cap_buckets(
+            band_rows(store_sigs, id_col, bands, hash_fn), keys, max_bucket_size
         )
         cross = banded_new.alias("a").join(
             banded_old.alias("b"),

@@ -1388,61 +1388,6 @@ def dhash_media(
     return media.mapInPandas(run, schema=schema)
 
 
-def _banded_phash(
-    sigs: DataFrame, band_bits: int, max_bucket_size: int | None
-) -> DataFrame:
-    """(media_id, phash, band, band_val) LSH index rows from a
-    (media_id, phash) signature frame, oversized buckets dropped —
-    shared by dhash_near_dups and dhash_dedup_incremental (one
-    definition, no drift). ``max_bucket_size=None`` skips the cap
-    window for callers that apply the identical wall inside a
-    _bucket_pairs aggregate instead (r11)."""
-    from functime_spark.pipeline.dedup import _cap_buckets
-
-    n_bands = 64 // band_bits
-    banded = sigs.select(
-        "media_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("phash", i * band_bits).bitwiseAND(
-                        F.lit((1 << band_bits) - 1)
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
-    if max_bucket_size is None:
-        return banded
-    return _cap_buckets(banded, ["band", "band_val"], max_bucket_size)
-
-
-def _banded_phash_frames(sigs: DataFrame, band_bits: int) -> DataFrame:
-    """(media_id, frame_idx, phash, band, band_val) LSH index rows
-    from a PER-FRAME signature frame — the _banded_phash banding with
-    the frame index carried through (video_near_dups' offset voting
-    needs it on both pair sides). No cap window: the caller applies
-    the identical bucket wall inside its _bucket_pairs aggregate."""
-    n_bands = 64 // band_bits
-    return sigs.select(
-        "media_id",
-        "frame_idx",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("phash", i * band_bits).bitwiseAND(
-                        F.lit((1 << band_bits) - 1)
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
-
-
 def dhash_near_dups(
     media: DataFrame,
     decoder="ppm",
@@ -1458,16 +1403,12 @@ def dhash_near_dups(
     within a few bits). Buckets past `max_bucket_size` drop (the
     _cap_buckets wall). Returns (id_a, id_b, hamming)."""
     sigs = dhash_media(media, decoder=decoder, hash_size=hash_size)
-    # r11: no lineage cut — the one-aggregate bucket-pairs shape
-    # consumes the decode+hash pass exactly once (the old self-join
-    # read it on both sides, which is what the materialize paid for)
-    # r11: one-aggregate bucket pairs (dedup._bucket_pairs) — the
-    # phash rides in the item struct, so the Hamming verify is a pure
-    # projection; the old cap-window + self-join shape banded and
-    # exchanged the signature frame twice
-    from functime_spark.pipeline.dedup import _bucket_pairs
+    # no lineage cut: _bucket_pairs consumes the decode+hash pass
+    # exactly once, and the phash rides in the item struct, so the
+    # Hamming verify is a pure projection
+    from functime_spark.pipeline.dedup import _bucket_pairs, bit_band_rows
 
-    banded = _banded_phash(sigs, band_bits, None)
+    banded = bit_band_rows(sigs, "phash", band_bits)
     pairs = _bucket_pairs(
         banded, ["band", "band_val"], max_bucket_size, ["media_id", "phash"]
     )
@@ -1528,18 +1469,17 @@ def dhash_dedup_incremental(
     new_sigs = materialize(
         dhash_media(new_media, decoder=decoder, hash_size=hash_size)
     )
-    banded_new = _banded_phash(new_sigs, band_bits, max_bucket_size)
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    # new-vs-new via the one-aggregate bucket pairs (r11; identical
-    # candidate wall — the aggregate caps buckets exactly as the
-    # banded_new window does for the cross join below)
-    from functime_spark.pipeline.dedup import _bucket_pairs
+    from functime_spark.pipeline.dedup import (
+        _bucket_pairs,
+        _cap_buckets,
+        bit_band_rows,
+    )
 
+    keys = ["band", "band_val"]
+    banded_new = bit_band_rows(new_sigs, "phash", band_bits)
+    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
     nn_pairs = _bucket_pairs(
-        _banded_phash(new_sigs, band_bits, None),
-        ["band", "band_val"],
-        max_bucket_size,
-        ["media_id", "phash"],
+        banded_new, keys, max_bucket_size, ["media_id", "phash"]
     )
     nn = nn_pairs.select(
         F.col("a.media_id").alias("id_a"),
@@ -1549,11 +1489,14 @@ def dhash_dedup_incremental(
     if store_sigs is None:
         pairs = nn.distinct().filter(F.col("hamming") <= max_hamming)
         return pairs, new_sigs
-    banded_old = _banded_phash(store_sigs, band_bits, max_bucket_size)
+    capped_new = _cap_buckets(banded_new, keys, max_bucket_size)
+    capped_old = _cap_buckets(
+        bit_band_rows(store_sigs, "phash", band_bits), keys, max_bucket_size
+    )
     cross = (
-        banded_new.alias("a")
+        capped_new.alias("a")
         .join(
-            banded_old.alias("b"),
+            capped_old.alias("b"),
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_val") == F.col("b.band_val")),
         )
@@ -2007,18 +1950,15 @@ def video_near_dups(
     and the associative struct-MAX argmax both combine map-side.
     Candidate pairs track shared-frame-hash counts, never corpus**2.
 
-    r11 optimization: the candidate stage is the one-aggregate
-    _bucket_pairs shape the minhash/simhash/dhash/audio tiers use —
-    the old _cap_buckets window + banded self-join exchanged the
-    frame-hash stream twice and paid a per-bucket count window; the
-    aggregate applies the identical bucket wall, phash/frame_idx ride
-    the item struct (the Hamming verify is a pure projection, no join
-    back), and the signature materialize is gone because the single
-    consumer reads the decode pass exactly once."""
-    from functime_spark.pipeline.dedup import _bucket_pairs
+    The candidate stage is _bucket_pairs, shared with the minhash,
+    simhash, dhash and audio tiers: phash/frame_idx ride the item
+    struct (the Hamming verify is a pure projection, no join back),
+    and its single consumer reads the decode pass exactly once, so
+    the signatures need no materialize."""
+    from functime_spark.pipeline.dedup import _bucket_pairs, bit_band_rows
 
     sigs = video_dhash(media, every_n, hash_size)
-    banded = _banded_phash_frames(sigs, band_bits)
+    banded = bit_band_rows(sigs, "phash", band_bits)
     ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
     matched = (
         _bucket_pairs(

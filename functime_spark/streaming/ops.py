@@ -664,24 +664,11 @@ def stream_dhash_dedup(
     applies)."""
     import pandas as pd
 
+    from functime_spark.pipeline.dedup import bit_band_rows
     from functime_spark.pipeline.multimodal import dhash_media
 
     sigs = dhash_media(media, decoder=decoder, hash_size=hash_size)
-    n_bands = 64 // band_bits
-    banded = sigs.select(
-        "media_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("phash", i * band_bits).bitwiseAND(
-                        F.lit((1 << band_bits) - 1)
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_val"),
-    )
+    banded = bit_band_rows(sigs, "phash", band_bits)
 
     out_schema = "id_a bigint, id_b bigint, hamming int, band int"
     state_schema = "ids array<bigint>, phashes array<bigint>"

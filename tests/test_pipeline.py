@@ -5587,24 +5587,31 @@ def test_ivf_assign_and_pq_encode_kernels_match_expressions(emb):
 
 
 def test_bucket_pairs_matches_cap_window_self_join(spark):
-    """_bucket_pairs (r11) must emit exactly the candidate set of the
-    cap-window + self-join shape it replaced, including the bucket
-    wall semantics."""
-    from pyspark.sql import Window
-
+    """_bucket_pairs must emit exactly the candidate set of the
+    cap-window + null-safe self-join, including the bucket wall: a hot
+    key at 10x the cap and an over-cap NULL-key bucket drop whole,
+    while an under-cap NULL-key bucket still pairs."""
     from functime_spark.pipeline.dedup import _bucket_pairs, _cap_buckets
 
-    rows = [(i, i % 7) for i in range(60)] + [(100 + i, 99) for i in range(12)]
-    df = spark.createDataFrame(rows, "id long, b long")
-    cap = 10  # the 12-member bucket 99 must drop entirely
+    cap = 10
+    rows = (
+        [(i, 0, i % 7) for i in range(60)]
+        + [(100 + i, 0, 99) for i in range(10 * cap)]  # hot key
+        + [(300 + i, 0, None) for i in range(cap + 2)]  # over-cap NULL
+        + [(400 + i, 1, None) for i in range(3)]  # under-cap NULL
+    )
+    df = spark.createDataFrame(rows, "id long, g long, b long")
+    keys = ["g", "b"]
     got = {
         (r["a"]["id"], r["b"]["id"])
-        for r in _bucket_pairs(df, ["b"], cap, ["id"]).collect()
+        for r in _bucket_pairs(df, keys, cap, ["id"]).collect()
     }
-    capped = _cap_buckets(df, ["b"], cap)
+    capped = _cap_buckets(df, keys, cap)
     j = capped.alias("x").join(
         capped.alias("y"),
-        (F.col("x.b") == F.col("y.b")) & (F.col("x.id") < F.col("y.id")),
+        F.col("x.g").eqNullSafe(F.col("y.g"))
+        & F.col("x.b").eqNullSafe(F.col("y.b"))
+        & (F.col("x.id") < F.col("y.id")),
     )
     want = {
         (r["xi"], r["yi"])
@@ -5614,6 +5621,8 @@ def test_bucket_pairs_matches_cap_window_self_join(spark):
     }
     assert got == want
     assert all(a < b for a, b in got)
+    assert {(400, 401), (400, 402), (401, 402)} <= got
+    assert not any(a >= 100 and a < 400 for a, _ in got)
 
 
 def test_cosine_topk_kernel_matches_expression(emb):

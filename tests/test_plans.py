@@ -158,6 +158,20 @@ def test_dedup_signature_materialization_pins_scan_count(spark):
     assert count_file_scans(simhash_near_dups(docs)) == 1
 
 
+def test_bucket_pairs_single_exchange(spark):
+    """The bucket wall (_cap_buckets' count window) and the collect
+    share one hash partitioning: _bucket_pairs plans to ONE exchange
+    and no join, hot key or not."""
+    from functime_spark.pipeline.dedup import _bucket_pairs
+    from functime_spark.plans.checks import count_exchanges, explain_str
+
+    rows = [(i, i % 7) for i in range(60)] + [(100 + i, 99) for i in range(100)]
+    df = spark.createDataFrame(rows, "id long, b long")
+    pairs = _bucket_pairs(df, ["b"], 10, ["id"])
+    assert count_exchanges(pairs) == 1
+    assert "Join" not in explain_str(pairs, "simple")
+
+
 def test_text_scrub_ops_shuffle_free(spark):
     """pii_scan / url_stats / quality are stateless projections: zero
     exchanges, zero Python nodes — the corpus never shuffles."""
@@ -798,10 +812,11 @@ def test_python_kernel_group_stages_not_byte_coalesced(spark):
     parallelism instead of collapsing to 1 partition."""
     from functime_spark.functions.features_udf import extract_features_udf
     from functime_spark.operators.evaluation import normality_test
+    from functime_spark.pipeline._util import _cluster_parallelism
 
     rows = [(f"e{i % 40}", t, float(i % 7)) for i, t in enumerate(range(800))]
     y = spark.createDataFrame(rows, "entity string, t long, y double")
-    target = spark.sparkContext.defaultParallelism
+    target = _cluster_parallelism(y)
     out = extract_features_udf(y, ["sample_entropy"])
     assert out.rdd.getNumPartitions() == target
     assert normality_test(y).rdd.getNumPartitions() == target
