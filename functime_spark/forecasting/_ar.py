@@ -5,19 +5,24 @@ split of responsibilities:
 
 - the lag design matrix stays distributed (window lags, one shuffle:
   ref make_reduction at _reduction.py:21-41);
-- the global linear fit is a distributed MLlib `LinearRegression`
-  (normal-equations / L-BFGS over executors — the reference collects
-  to a single-node sklearn matrix at conversion.py:105-135);
-- recursive multi-step prediction runs as ONE Arrow pass
-  (`mapInPandas`): each batch of entities carries its lag buffer and
-  the loop over fh happens vectorized in numpy with the broadcast
-  coefficients. The reference's per-step Python loop over Spark jobs
-  (_ar.py:216-270) would pay fh job launches; this pays one.
+- the global linear fit is distributed (`LinearBackend`: one
+  sufficient-statistics aggregate, or MLlib for L1 without cd_iters;
+  the reference collects to a single-node sklearn matrix at
+  conversion.py:105-135);
+- `ARForecaster` is the one strategy layer every global forecaster
+  shares (ref fit_autoreg / predict_autoreg _ar.py:83-114, 337-374):
+  recursive, direct and ensemble fits, the X_future state and the
+  strategy dispatch;
+- multi-step prediction runs as ONE Arrow pass (`predict_ar`): each
+  batch of entities carries its lag buffer and the loop over fh
+  happens vectorized in numpy around a per-family step function. The
+  reference's per-step Python loop over Spark jobs (_ar.py:216-270)
+  would pay fh job launches; this pays one.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 
@@ -26,6 +31,7 @@ from pyspark.sql import functions as F
 
 from functime_spark.panel import panel_cols
 from functime_spark.compat import broadcast_value
+from functime_spark.forecasting.base import Forecaster
 
 
 def make_reduction(y: DataFrame, lags: int, X: DataFrame | None = None) -> DataFrame:
@@ -327,98 +333,175 @@ def _x_matrix(pdf, x_cols: list, fh: int, n_rows: int):
     return out
 
 
-def predict_recursive_linear(
-    y_lag: DataFrame,
-    coef: np.ndarray,
-    intercept: float,
+def predict_ar(
+    state: DataFrame,
     fh: int,
     lags: int,
-    n_x: int = 0,
+    payload,
+    make_step: Callable,
+    recursive: bool = True,
 ) -> DataFrame:
-    """One distributed Arrow pass: per-batch numpy recursion over fh.
+    """The one fh-step Arrow kernel: (entity, step, __yhat), step 0-based.
 
-    coef[:lags][j] multiplies lag_{j+1} (lag_1 = most recent);
-    coef[lags:] multiplies the exogenous features at the predicted
-    step. Output: (entity, step, yhat), step 0-based. Ref
-    predict_recursive _ar.py:216-270."""
-    entity = y_lag.columns[0]
-    entity_dtype = dict(y_lag.dtypes)[entity]
-    x_names = [c[len("__x_"):] for c in y_lag.columns if c.startswith("__x_")]
-    spark = y_lag.sparkSession
-    b_coef = broadcast_value(spark, (coef, intercept))
+    `payload` is broadcast once; `make_step(payload)` runs once per
+    task and returns ``step(h, lag_feats, x_h) -> yhat`` where
+    lag_feats is (n, lags) with lag_1 (most recent) first and x_h is
+    the horizon's (n, n_x) exogenous slice of the state's ``__x_``
+    arrays (None without X). Recursive mode appends each prediction
+    to the lag buffer (ref predict_recursive _ar.py:216-270); direct
+    mode keeps the last observed lags for every horizon (ref
+    predict_direct _ar.py:277-330)."""
+    entity = state.columns[0]
+    entity_dtype = dict(state.dtypes)[entity]
+    x_names = [c[len("__x_"):] for c in state.columns if c.startswith("__x_")]
+    b = broadcast_value(state.sparkSession, payload)
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        w, b = b_coef.value
-        w_lag, w_x = w[:lags], w[lags:]
+        step = make_step(b.value)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ents = pdf[entity].to_numpy()
             # state matrix: most recent last; columns = buffer
             buf = stack_buffers(pdf["__buf"], lags)
-            xs = _x_matrix(pdf, x_names, fh, len(ents)) if n_x else None
+            xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
             preds = np.empty((len(ents), fh), dtype="float64")
             for h in range(fh):
-                # features: lag_1 = buf[:, -1], lag_2 = buf[:, -2], ...
-                feats = buf[:, ::-1][:, :lags]
-                yhat = feats @ w_lag + b
-                if n_x:
-                    yhat = yhat + xs[:, h, :] @ w_x
+                yhat = step(
+                    h, buf[:, ::-1][:, :lags], None if xs is None else xs[:, h, :]
+                )
                 preds[:, h] = yhat
-                buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-            out = pd.DataFrame(
+                if recursive:
+                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
+            yield pd.DataFrame(
                 {
                     entity: np.repeat(ents, fh),
                     "step": np.tile(np.arange(fh), len(ents)),
-                    "yhat": preds.ravel(),
+                    "__yhat": preds.ravel(),
                 }
             )
-            yield out
 
-    schema = f"{entity} {entity_dtype}, step int, yhat double"
-    return y_lag.mapInPandas(run, schema=schema)
+    schema = f"{entity} {entity_dtype}, step int, __yhat double"
+    return state.mapInPandas(run, schema=schema)
 
 
-def predict_direct_linear(
-    y_lag: DataFrame, models: list, fh: int, lags: int, n_x: int = 0
-) -> DataFrame:
-    """Direct strategy: horizon h uses model_h on the last `lags`
-    observed values (no recursion). Ref predict_direct _ar.py:277-330."""
-    entity = y_lag.columns[0]
-    entity_dtype = dict(y_lag.dtypes)[entity]
-    x_names = [c[len("__x_"):] for c in y_lag.columns if c.startswith("__x_")]
-    spark = y_lag.sparkSession
-    b_models = broadcast_value(spark, models)
+def _per_horizon(make_step: Callable) -> Callable:
+    """make_step over a list of per-horizon models: horizon h runs
+    model min(h, H-1) (horizons past max_horizons reuse the last)."""
 
-    def run(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def make(models):
+        steps = [make_step(m) for m in models]
+        return lambda h, lag, x: steps[min(h, len(steps) - 1)](h, lag, x)
 
-        ms = b_models.value
-        use_fh = min(fh, len(ms))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ents = pdf[entity].to_numpy()
-            buf = stack_buffers(pdf["__buf"], lags)
-            feats = buf[:, ::-1][:, :lags]  # lag_1..lag_lags
-            xs = _x_matrix(pdf, x_names, fh, len(ents)) if n_x else None
-            preds = np.empty((len(ents), fh), dtype="float64")
-            for h in range(fh):
-                w, b = ms[min(h, use_fh - 1)]
-                w_lag, w_x = w[:lags], w[lags:]
-                preds[:, h] = feats @ w_lag + b
-                if n_x:
-                    preds[:, h] += xs[:, h, :] @ w_x
-            out = pd.DataFrame(
-                {
-                    entity: np.repeat(ents, fh),
-                    "step": np.tile(np.arange(fh), len(ents)),
-                    "yhat": preds.ravel(),
-                }
+    return make
+
+
+class ARForecaster(Forecaster):
+    """Global autoregressive forecaster: the strategy layer shared by
+    every lag-design family (ref fit_autoreg / predict_autoreg
+    _ar.py:83-114, 337-374).
+
+    A family supplies ``_fit_design(design, cols, target)`` (one model
+    on the named lag + exogenous columns) and ``_make_step(model)``
+    (the `predict_ar` step for one fitted model). Strategies:
+    recursive (default), direct (one model per horizon h on lag_h ..
+    lag_{h+lags-1} of one shared design, ref fit_direct _ar.py:53-80)
+    and ensemble (`mean_ensemble` of both)."""
+
+    # True when _fit_design reads its design in one pass: the
+    # recursive design is then not persisted (a cache-write for no reuse)
+    _reads_design_once = False
+
+    def __init__(
+        self,
+        freq: str,
+        lags: int,
+        strategy: str = "recursive",
+        max_horizons: int | None = None,
+        target_transform=None,
+    ):
+        super().__init__(freq=freq, lags=lags, target_transform=target_transform)
+        self.strategy = strategy
+        self.max_horizons = max_horizons
+        if strategy in ("direct", "ensemble") and max_horizons is None:
+            raise ValueError("direct/ensemble strategy requires max_horizons")
+
+    def _fit_design(self, design: DataFrame, cols: list, target: str):
+        raise NotImplementedError
+
+    @staticmethod
+    def _make_step(model) -> Callable:
+        raise NotImplementedError
+
+    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+        target = self.state["panel"].target
+        # exogenous feature columns ride along in the design matrix
+        # (ref make_reduction _reduction.py:32-34 keeps X columns)
+        x_cols = list(X.columns[2:]) if X is not None else []
+        self.state["x_cols"] = x_cols
+
+        def fit_models(width: int, horizons, persist: bool) -> list:
+            design = make_reduction(y, width, X)
+            if persist:
+                design = design.persist()
+            models = [
+                self._fit_design(
+                    design,
+                    [f"{target}__lag_{j}" for j in range(h, self.lags + h)] + x_cols,
+                    target,
+                )
+                for h in horizons
+            ]
+            if persist:
+                design.unpersist()
+            return models
+
+        if self.strategy in ("recursive", "ensemble"):
+            self.state["recursive_model"] = fit_models(
+                self.lags, [1], not self._reads_design_once
+            )[0]
+        if self.strategy in ("direct", "ensemble"):
+            mh = self.max_horizons
+            self.state["direct_models"] = fit_models(
+                self.lags + mh - 1, range(1, mh + 1), True
             )
-            yield out
+        self._fit_y_lag(y)
 
-    schema = f"{entity} {entity_dtype}, step int, yhat double"
-    return y_lag.mapInPandas(run, schema=schema)
+    def _fit_y_lag(self, y: DataFrame) -> None:
+        """Persist the recursion state and serve cutoffs from it
+        (make_y_lag carries `low`), so predict's future ranges read
+        n_entities cached rows instead of re-aggregating the panel."""
+        yl = make_y_lag(y, self.lags).persist()
+        self.state["y_lag"] = yl
+        self.state["cutoffs"] = yl.select(yl.columns[0], "low")
+
+    def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
+        state = self.state["y_lag"]
+        x_cols = self.state.get("x_cols") or []
+        if x_cols:
+            if X is None:
+                raise ValueError(
+                    "forecaster was fit with exogenous X; predict needs X_future"
+                )
+            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
+        return state
+
+    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
+        state = self._future_state(fh, X)
+        if self.strategy == "direct":
+            return self._predict_direct(fh, state)
+        preds = self._predict_recursive(fh, state)
+        if self.strategy == "ensemble":
+            preds = mean_ensemble(preds, self._predict_direct(fh, state))
+        return preds
+
+    def _predict_recursive(self, fh: int, state: DataFrame) -> DataFrame:
+        model = self.state["recursive_model"]
+        return predict_ar(state, fh, self.lags, model, self._make_step)
+
+    def _predict_direct(self, fh: int, state: DataFrame) -> DataFrame:
+        models = self.state["direct_models"]
+        step = _per_horizon(self._make_step)
+        return predict_ar(state, fh, self.lags, models, step, recursive=False)

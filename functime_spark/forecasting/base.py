@@ -20,8 +20,8 @@ from functime_spark.materialize import materialize as _materialize
 
 
 class Forecaster(SparkStatePickleMixin):
-    # exogenous-coverage policy consumed by attach_future_x at the
-    # _predict_values call sites: "raise" (eager check, direct predict)
+    # exogenous-coverage policy consumed by attach_future_x in
+    # ARForecaster._future_state: "raise" (eager check, direct predict)
     # or "drop" (backtest — short entities skip the split, no extra job)
     _x_on_short = "raise"
 
@@ -91,13 +91,6 @@ class Forecaster(SparkStatePickleMixin):
         for key, val in self.state.items():
             if isinstance(val, DataFrame):
                 self.state[key] = _materialize(val)
-
-    def _cutoffs_from_y_lag(self) -> None:
-        """Serve cutoffs from the persisted recursion state (make_y_lag
-        carries `low`) so predict's future ranges read n_entities
-        cached rows instead of re-aggregating the full panel."""
-        yl = self.state["y_lag"]
-        self.state["cutoffs"] = yl.select(yl.columns[0], "low")
 
     # -- evaluation --------------------------------------------------
     def backtest(

@@ -14,23 +14,20 @@ Spark-first split:
   collects to a single-node ``HistGradientBoostingClassifier``;
 - the two regressors are :class:`LinearBackend` normal-equation fits on
   the filtered subsets (same scan, two aggregate passes);
-- recursive multi-step prediction runs as ONE Arrow pass: the logistic
-  + two linear coefficient vectors are broadcast and the per-step blend
-  is closed-form numpy, so fh steps cost zero extra Spark jobs.
+- multi-step prediction runs in the shared `predict_ar` Arrow pass:
+  the logistic + two linear coefficient vectors are broadcast and the
+  per-step blend is closed-form numpy, so fh steps cost zero extra
+  Spark jobs.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import LinearBackend, make_reduction, make_y_lag, stack_buffers
-from functime_spark.forecasting.base import Forecaster
-from functime_spark.compat import broadcast_value
+from functime_spark.forecasting._ar import ARForecaster, LinearBackend
 
 
 def _fit_logistic(
@@ -98,8 +95,11 @@ def _newton_step(design, feature_cols, label_col, coef, intercept):
     return new[:-1], float(new[-1])
 
 
-class censored_model(Forecaster):
-    """Two-regime blend around `threshold`. Ref censored.py:32-118."""
+class censored_model(ARForecaster):
+    """Two-regime blend around `threshold`. Ref censored.py:32-118.
+
+    Exogenous columns join every blend's feature list (the reference's
+    censored regressors fit the full design, ref censored.py:34-76)."""
 
     def __init__(
         self,
@@ -111,13 +111,15 @@ class censored_model(Forecaster):
         target_transform=None,
         clf_params: dict | None = None,
     ):
-        super().__init__(freq=freq, lags=lags, target_transform=target_transform)
+        super().__init__(
+            freq=freq,
+            lags=lags,
+            strategy=strategy,
+            max_horizons=max_horizons,
+            target_transform=target_transform,
+        )
         self.threshold = threshold
-        self.strategy = strategy
-        self.max_horizons = max_horizons
         self.clf_params = clf_params
-        if strategy in ("direct", "ensemble") and max_horizons is None:
-            raise ValueError("direct/ensemble strategy requires max_horizons")
 
     def _init_kwargs(self) -> dict:
         return {
@@ -129,7 +131,7 @@ class censored_model(Forecaster):
             "clf_params": self.clf_params,
         }
 
-    def _fit_blend(self, design: DataFrame, feature_cols: list, target: str):
+    def _fit_design(self, design: DataFrame, feature_cols: list, target: str):
         """One (classifier, above-reg, below-reg) triple."""
         thr = float(self.threshold)
         labeled = design.withColumn(
@@ -148,111 +150,21 @@ class censored_model(Forecaster):
             reg_below = None
         return clf, reg_above, reg_below
 
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
-        p = self.state["panel"]
-        # exogenous columns join every blend's feature list (the
-        # reference's censored regressors fit the full design,
-        # ref censored.py:34-76)
-        x_cols = list(X.columns[2:]) if X is not None else []
-        self.state["x_cols"] = x_cols
-        if self.strategy in ("recursive", "ensemble"):
-            design = make_reduction(y, self.lags, X).persist()
-            cols = [
-                f"{p.target}__lag_{k}" for k in range(1, self.lags + 1)
-            ] + x_cols
-            self.state["blend"] = self._fit_blend(design, cols, p.target)
-            design.unpersist()
-        if self.strategy in ("direct", "ensemble"):
-            design = make_reduction(y, self.lags + self.max_horizons - 1, X).persist()
-            blends = []
-            for h in range(1, self.max_horizons + 1):
-                cols = [
-                    f"{p.target}__lag_{j}" for j in range(h, self.lags + h)
-                ] + x_cols
-                blends.append(self._fit_blend(design, cols, p.target))
-            self.state["direct_blends"] = blends
-            design.unpersist()
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
-
     @staticmethod
-    def _apply_blend(feats, blend, thr):
+    def _make_step(blend):
         (wc, bc), (wa, ba), below = blend
-        z = feats @ wc + bc
-        prob = 1.0 / (1.0 + np.exp(-np.clip(z, -500, 500)))
-        yhat = prob * (feats @ wa + ba)
-        if below is not None:
-            wb, bb = below
-            yhat = yhat + (1.0 - prob) * (feats @ wb + bb)
-        return yhat
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x, mean_ensemble
+        def step(h, lag, x):
+            feats = lag if x is None else np.hstack([lag, x])
+            z = feats @ wc + bc
+            prob = 1.0 / (1.0 + np.exp(-np.clip(z, -500, 500)))
+            yhat = prob * (feats @ wa + ba)
+            if below is not None:
+                wb, bb = below
+                yhat = yhat + (1.0 - prob) * (feats @ wb + bb)
+            return yhat
 
-        state = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
-        if self.strategy == "recursive":
-            return self._predict_blend(fh, state, recursive=True)
-        if self.strategy == "direct":
-            return self._predict_blend(fh, state, recursive=False)
-        return mean_ensemble(
-            self._predict_blend(fh, state, recursive=True),
-            self._predict_blend(fh, state, recursive=False),
-        )
-
-    def _predict_blend(self, fh: int, y_lag: DataFrame, recursive: bool) -> DataFrame:
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        thr = float(self.threshold)
-        x_cols = self.state.get("x_cols") or []
-        payload = (
-            self.state["blend"] if recursive else self.state["direct_blends"]
-        )
-        b = broadcast_value(spark, (payload, thr, recursive, x_cols))
-        apply_blend = censored_model._apply_blend
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            blend_state, t, rec, x_names = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    feats = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        feats = np.hstack([feats, xs[:, h, :]])
-                    if rec:
-                        yhat = apply_blend(feats, blend_state, t)
-                        preds[:, h] = yhat
-                        buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                    else:
-                        blend = blend_state[min(h, len(blend_state) - 1)]
-                        preds[:, h] = apply_blend(feats, blend, t)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return y_lag.mapInPandas(run, schema=schema)
+        return step
 
 
 class zero_inflated_model(censored_model):

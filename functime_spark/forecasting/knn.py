@@ -23,16 +23,11 @@ centroid buckets only, cutting the scan factor to ~n_probe/n_cells.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import make_reduction, make_y_lag, stack_buffers
-from functime_spark.forecasting.base import Forecaster
-from functime_spark.compat import broadcast_value
+from functime_spark.forecasting._ar import ARForecaster, make_reduction, predict_ar
 
 
 def _kmeans(X: np.ndarray, k: int, iters: int = 10, seed: int = 7) -> np.ndarray:
@@ -114,7 +109,37 @@ def _brute_knn_step(ref_payload):
     return step
 
 
-class knn(Forecaster):
+def _knn_query(make_scan):
+    """make_step for a kNN scan factory (payload -> fn(queries[E,k]) ->
+    yhat[E]): the query is the lag block, then the horizon's exogenous
+    values."""
+
+    def make(payload):
+        scan = make_scan(payload)
+        return lambda h, lag, x: scan(lag if x is None else np.hstack([lag, x]))
+
+    return make
+
+
+def _direct_query(payload):
+    """Horizon h scans reference columns h-1 .. h-1+lags (the direct
+    design slice) plus the exogenous block after all `width` lag
+    columns; the query is the last observed lags for every horizon.
+    Ref predict_direct _ar.py:277-330."""
+    wide, targs, k, lags, width, mh = payload
+
+    def step(h, lag, x):
+        lo = min(h, mh - 1)
+        ref = wide[:, lo : lo + lags]
+        if x is not None:
+            ref = np.hstack([ref, wide[:, width:]])
+        q = lag if x is None else np.hstack([lag, x])
+        return _brute_knn_step((np.ascontiguousarray(ref), targs, k))(q)
+
+    return step
+
+
+class knn(ARForecaster):
     """kNN regression on lag vectors. Ref knn.py:10-34. Strategies:
     recursive (default), direct (per-horizon reference-column slices
     of one shared broadcast matrix — no extra collects), ensemble.
@@ -137,13 +162,15 @@ class knn(Forecaster):
         on_scale_wall: str = "warn",
         target_transform=None,
     ):
-        super().__init__(freq=freq, lags=lags, target_transform=target_transform)
+        super().__init__(
+            freq=freq,
+            lags=lags,
+            strategy=strategy,
+            max_horizons=max_horizons,
+            target_transform=target_transform,
+        )
         self.n_neighbors = n_neighbors
         self.max_train_rows = max_train_rows
-        self.strategy = strategy
-        self.max_horizons = max_horizons
-        if strategy in ("direct", "ensemble") and max_horizons is None:
-            raise ValueError("direct/ensemble strategy requires max_horizons")
         if on_scale_wall not in ("warn", "auto", "ignore"):
             raise ValueError(
                 f"on_scale_wall must be warn|auto|ignore, got {on_scale_wall!r}"
@@ -208,8 +235,7 @@ class knn(Forecaster):
         self.state["train"] = self._collect_train(y, X)
         self.state.pop("n_entities", None)  # refit may change the panel
         self.state.pop("ivf", None)
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
+        self._fit_y_lag(y)
 
     def _route_scale_wall(self, fh: int) -> bool:
         """True when the recursive scan should re-route through IVF.
@@ -256,99 +282,34 @@ class knn(Forecaster):
         )
         return False
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import mean_ensemble
-
-        use_ivf = self._route_scale_wall(fh)
-        state = self._future_state(fh, X)
-        if self.strategy == "recursive":
-            return self._predict_recursive(fh, state, use_ivf=use_ivf)
-        if self.strategy == "direct":
-            return self._predict_direct(fh, state)
-        return mean_ensemble(
-            self._predict_recursive(fh, state), self._predict_direct(fh, state)
-        )
-
-    def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x
-
-        state = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
-        return state
-
-    def _predict_direct(self, fh: int, y_lag: DataFrame) -> DataFrame:
-        """Horizon h scans reference columns h-1 .. h-1+lags (the
-        direct design slice); query features are the last observed
-        lags for every horizon. Ref predict_direct _ar.py:277-330."""
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags, mh = self.lags, self.max_horizons
-        spark = y_lag.sparkSession
-        feats_ref, targs_ref = self.state["train"]
-        x_cols = self.state.get("x_cols") or []
-        width = self._design_width()
-        b = broadcast_value(spark, 
-            (feats_ref, targs_ref, self.n_neighbors, x_cols, width)
-        )
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            wide, targs, k, x_names, w = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                base_q = buf[:, ::-1][:, :lags]
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    lo = min(h, mh - 1)
-                    ref = np.ascontiguousarray(
-                        np.hstack([wide[:, lo : lo + lags], wide[:, w:]])
-                        if x_names
-                        else wide[:, lo : lo + lags]
-                    )
-                    step_fn = _brute_knn_step((ref, targs, k))
-                    q = (
-                        np.hstack([base_q, xs[:, h, :]]) if x_names else base_q
-                    )
-                    preds[:, h] = step_fn(q)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
+    def _scan(self, state, fh: int, payload, make_step, recursive=True):
         # the per-entity state frame is tiny after its aggregate, so AQE
         # coalesces it to ONE partition and the whole Arrow scan would run
         # in a single task; spread it across the cluster first (no-op when
         # the frame is already parallel)
         from functime_spark.pipeline._util import spread_for_cpu
 
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
+        return predict_ar(
+            spread_for_cpu(state), fh, self.lags, payload, make_step, recursive
+        )
 
-    def _predict_recursive(
-        self, fh: int, y_lag: DataFrame, use_ivf: bool = False
-    ) -> DataFrame:
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
+    def _predict_direct(self, fh: int, state: DataFrame) -> DataFrame:
+        if self.strategy == "direct":  # ensemble checks in its recursive half
+            self._route_scale_wall(fh)
         feats_ref, targs_ref = self.state["train"]
-        x_cols = self.state.get("x_cols") or []
+        payload = (
+            feats_ref,
+            targs_ref,
+            self.n_neighbors,
+            self.lags,
+            self._design_width(),
+            self.max_horizons,
+        )
+        return self._scan(state, fh, payload, _direct_query, recursive=False)
+
+    def _predict_recursive(self, fh: int, state: DataFrame) -> DataFrame:
+        feats_ref, targs_ref = self.state["train"]
+        lags = self.lags
         # recursive scan uses the first `lags` reference columns plus
         # the exogenous block, which sits AFTER all width lag columns —
         # width > lags under the ensemble strategy, so slice both
@@ -358,60 +319,21 @@ class knn(Forecaster):
             np.ascontiguousarray(
                 np.hstack([feats_ref[:, :lags], feats_ref[:, width:]])
             )
-            if x_cols
+            if self.state.get("x_cols")
             else np.ascontiguousarray(feats_ref[:, :lags])
         )
-        if use_ivf:
-            # the auto re-route past the bandwidth wall: one driver
-            # k-means over the already-collected reference (built once,
-            # cached on the fit state), ann-default cell/probe counts
-            ivf = self.state.get("ivf")
-            if ivf is None:
-                ivf = _ivf_pack(ref, targs_ref, n_cells=64)
-                self.state["ivf"] = ivf
-            fs, ts, cents, bounds = ivf
-            payload = (fs, ts, cents, bounds, self.n_neighbors, 4)
-        else:
+        if not self._route_scale_wall(fh):
             payload = (ref, targs_ref, self.n_neighbors)
-        b = broadcast_value(spark, (use_ivf, payload, x_cols))
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            ivf_mode, pl, x_names = b.value
-            step_fn = _ivf_knn_step(pl) if ivf_mode else _brute_knn_step(pl)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    q = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        q = np.hstack([q, xs[:, h, :]])
-                    yhat = step_fn(q)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        # the per-entity state frame is tiny after its aggregate, so AQE
-        # coalesces it to ONE partition and the whole Arrow scan would run
-        # in a single task; spread it across the cluster first (no-op when
-        # the frame is already parallel)
-        from functime_spark.pipeline._util import spread_for_cpu
-
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
+            return self._scan(state, fh, payload, _knn_query(_brute_knn_step))
+        # the auto re-route past the bandwidth wall: one driver
+        # k-means over the already-collected reference (built once,
+        # cached on the fit state), ann-default cell/probe counts
+        ivf = self.state.get("ivf")
+        if ivf is None:
+            ivf = _ivf_pack(ref, targs_ref, n_cells=64)
+            self.state["ivf"] = ivf
+        payload = (*ivf, self.n_neighbors, 4)
+        return self._scan(state, fh, payload, _knn_query(_ivf_knn_step))
 
 
 class ann(knn):
@@ -461,58 +383,9 @@ class ann(knn):
         feats, targs = self._collect_train(y, X)
         self.state["train"] = _ivf_pack(feats, targs, self.n_cells)
         self.state.pop("n_entities", None)
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
+        self._fit_y_lag(y)
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        # re-pack broadcast payload for the IVF step function; the
-        # centroid space spans lag + exogenous dims when fit with X
-        y_lag = self._future_state(fh, X)
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        feats_s, targs_s, cents, bounds = self.state["train"]
-        x_cols = self.state.get("x_cols") or []
-        b = broadcast_value(spark, 
-            (feats_s, targs_s, cents, bounds, self.n_neighbors, self.n_probe, x_cols)
-        )
-
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            from functime_spark.forecasting._ar import _x_matrix
-
-            feats_ref, targs_ref, C, bd, k, n_probe, x_names = b.value
-            step_fn = _ivf_knn_step((feats_ref, targs_ref, C, bd, k, n_probe))
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xs = _x_matrix(pdf, x_names, fh, len(ents)) if x_names else None
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    q = buf[:, ::-1][:, :lags]
-                    if x_names:
-                        q = np.hstack([q, xs[:, h, :]])
-                    yhat = step_fn(q)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
-                )
-
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        # the per-entity state frame is tiny after its aggregate, so AQE
-        # coalesces it to ONE partition and the whole Arrow scan would run
-        # in a single task; spread it across the cluster first (no-op when
-        # the frame is already parallel)
-        from functime_spark.pipeline._util import spread_for_cpu
-
-        return spread_for_cpu(y_lag).mapInPandas(run, schema=schema)
+    def _predict_recursive(self, fh: int, state: DataFrame) -> DataFrame:
+        # the centroid space spans lag + exogenous dims when fit with X
+        payload = (*self.state["train"], self.n_neighbors, self.n_probe)
+        return self._scan(state, fh, payload, _knn_query(_ivf_knn_step))

@@ -8,20 +8,10 @@ ensemble (mean of both — ref _ar.py:337-374).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from functime_spark.forecasting._ar import (
-    LinearBackend,
-    make_reduction,
-    make_y_lag,
-    predict_direct_linear,
-    predict_recursive_linear,
-)
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting._ar import ARForecaster, LinearBackend
 
 
-class linear_model(Forecaster):
+class linear_model(ARForecaster):
     _reg_param = 0.0
     _elastic_net_param = 0.0
 
@@ -37,15 +27,17 @@ class linear_model(Forecaster):
         cd_iters: int | None = None,
         target_transform=None,
     ):
-        super().__init__(freq=freq, lags=lags, target_transform=target_transform)
-        self.strategy = strategy
-        self.max_horizons = max_horizons
+        super().__init__(
+            freq=freq,
+            lags=lags,
+            strategy=strategy,
+            max_horizons=max_horizons,
+            target_transform=target_transform,
+        )
         self.fit_intercept = fit_intercept
         self.alpha = alpha
         self.l1_ratio = l1_ratio
         self.cd_iters = cd_iters
-        if strategy in ("direct", "ensemble") and max_horizons is None:
-            raise ValueError("direct/ensemble strategy requires max_horizons")
 
     def _init_kwargs(self) -> dict:
         return {
@@ -69,72 +61,26 @@ class linear_model(Forecaster):
             cd_iters=self.cd_iters,
         )
 
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
-        p = self.state["panel"]
-        backend = self._backend()
-        # exogenous feature columns ride along in the design matrix
-        # (ref make_reduction _reduction.py:32-34 keeps X columns)
-        x_cols = list(X.columns[2:]) if X is not None else []
-        self.state["x_cols"] = x_cols
-        if self.strategy in ("recursive", "ensemble"):
-            # normal-equation fits read the design exactly once — a
-            # persist would pay a cache-write for no reuse
-            design = make_reduction(y, self.lags, X)
-            if not backend.single_pass:
-                design = design.persist()
-            feature_cols = [
-                f"{p.target}__lag_{k}" for k in range(1, self.lags + 1)
-            ] + x_cols
-            self.state["recursive_model"] = backend.fit(design, feature_cols, p.target)
-            if not backend.single_pass:
-                design.unpersist()
-        if self.strategy in ("direct", "ensemble"):
-            # horizon h model: features lag_h .. lag_{h+lags-1}
-            # (ref fit_direct _ar.py:53-80)
-            design = make_reduction(y, self.lags + self.max_horizons - 1, X).persist()
-            models = []
-            for h in range(1, self.max_horizons + 1):
-                cols = [
-                    f"{p.target}__lag_{j}" for j in range(h, self.lags + h)
-                ] + x_cols
-                models.append(backend.fit(design, cols, p.target))
-            self.state["direct_models"] = models
-            design.unpersist()
-        max_buf = self.lags + (self.max_horizons or 1) - 1
-        self.state["y_lag"] = make_y_lag(y, max(self.lags, max_buf)).persist()
-        self._cutoffs_from_y_lag()
+    @property
+    def _reads_design_once(self) -> bool:
+        return self._backend().single_pass
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x
+    def _fit_design(self, design, cols: list, target: str):
+        return self._backend().fit(design, cols, target)
 
-        y_lag = self.state["y_lag"]
-        x_cols = self.state.get("x_cols") or []
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            y_lag = attach_future_x(y_lag, X, x_cols, fh, on_short=self._x_on_short)
-        preds = None
-        if self.strategy in ("recursive", "ensemble"):
-            coef, b = self.state["recursive_model"]
-            preds = predict_recursive_linear(
-                y_lag, coef, b, fh, self.lags, n_x=len(x_cols)
-            )
-        if self.strategy in ("direct", "ensemble"):
-            d = predict_direct_linear(
-                y_lag, self.state["direct_models"], fh, self.lags, n_x=len(x_cols)
-            )
-            if preds is None:
-                preds = d
-            else:  # ensemble = mean of recursive + direct (ref _ar.py:357-371)
-                e = preds.columns[0]
-                preds = (
-                    preds.withColumnRenamed("yhat", "__r")
-                    .join(d.withColumnRenamed("yhat", "__d"), on=[e, "step"])
-                    .select(e, "step", ((F.col("__r") + F.col("__d")) / 2).alias("yhat"))
-                )
-        return preds.withColumnRenamed("yhat", "__yhat")
+    @staticmethod
+    def _make_step(model):
+        """coef[:lags][j] multiplies lag_{j+1} (lag_1 = most recent);
+        coef[lags:] multiplies the exogenous features at the step."""
+        w, b = model
+
+        def step(h, lag, x):
+            yhat = lag @ w[: lag.shape[1]] + b
+            if x is not None:
+                yhat = yhat + x @ w[lag.shape[1] :]
+            return yhat
+
+        return step
 
 
 class lasso(linear_model):

@@ -26,19 +26,22 @@ buffer. Lineage is truncated with localCheckpoint every few steps
 
 from __future__ import annotations
 
+import numpy as np
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting._ar import make_reduction, make_y_lag
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting._ar import ARForecaster, make_reduction
 from functime_spark.materialize import materialize
-from functime_spark.compat import broadcast_value
 
 _CHECKPOINT_EVERY = 8
 
 
-class gradient_boosted_model(Forecaster):
-    """MLlib GBT on lag features, recursive strategy."""
+class gradient_boosted_model(ARForecaster):
+    """MLlib GBT on lag features. Exogenous columns ride in the design
+    via make_reduction's (entity, time) join and JOIN THE FEATURE
+    VECTOR — the reference's boosted regressors fit on lags + exog
+    alike (ref lightgbm.py:61-77 trains on the full design matrix)."""
 
     _algo = "gbt"
 
@@ -55,15 +58,17 @@ class gradient_boosted_model(Forecaster):
         target_transform=None,
         **_ignored,
     ):
-        super().__init__(freq=freq, lags=lags, target_transform=target_transform)
+        super().__init__(
+            freq=freq,
+            lags=lags,
+            strategy=strategy,
+            max_horizons=max_horizons,
+            target_transform=target_transform,
+        )
         self.max_iter = max_iter
         self.max_depth = max_depth
         self.step_size = step_size
         self.num_trees = num_trees
-        self.strategy = strategy
-        self.max_horizons = max_horizons
-        if strategy in ("direct", "ensemble") and max_horizons is None:
-            raise ValueError("direct/ensemble strategy requires max_horizons")
 
     def _init_kwargs(self) -> dict:
         return {
@@ -97,62 +102,14 @@ class gradient_boosted_model(Forecaster):
             seed=7,
         )
 
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_design(self, design: DataFrame, cols: list, target: str):
+        """One full distributed MLlib fit on the named design columns."""
         from pyspark.ml.feature import VectorAssembler
 
-        p = self.state["panel"]
-        # exogenous columns ride in the design via make_reduction's
-        # (entity, time) join and JOIN THE FEATURE VECTOR — the
-        # reference's boosted regressors fit on lags + exog alike
-        # (ref lightgbm.py:61-77 trains on the full design matrix)
-        x_cols = list(X.columns[2:]) if X is not None else []
-        self.state["x_cols"] = x_cols
-        if self.strategy in ("recursive", "ensemble"):
-            design = make_reduction(y, self.lags, X).persist()
-            feature_cols = [
-                f"{p.target}__lag_{k}" for k in range(1, self.lags + 1)
-            ] + x_cols
-            assembled = VectorAssembler(
-                inputCols=feature_cols, outputCol="__features", handleInvalid="skip"
-            ).transform(design)
-            self.state["model"] = self._regressor().fit(assembled)
-            design.unpersist()
-        if self.strategy in ("direct", "ensemble"):
-            # per-horizon models on shifted lag slices (fit_direct
-            # _ar.py:53-80) — each fit is a full distributed GBT job
-            design = make_reduction(y, self.lags + self.max_horizons - 1, X).persist()
-            models = []
-            for h in range(1, self.max_horizons + 1):
-                cols = [
-                    f"{p.target}__lag_{j}" for j in range(h, self.lags + h)
-                ] + x_cols
-                assembled = VectorAssembler(
-                    inputCols=cols, outputCol="__features", handleInvalid="skip"
-                ).transform(design)
-                models.append(self._regressor().fit(assembled))
-            self.state["direct_models"] = models
-            design.unpersist()
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
-
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from functime_spark.forecasting._ar import attach_future_x, mean_ensemble
-
-        x_cols = self.state.get("x_cols") or []
-        state = self.state["y_lag"]
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(state, X, x_cols, fh, on_short=self._x_on_short)
-        if self.strategy == "direct":
-            return self._predict_direct(fh, state)
-        if self.strategy == "ensemble":
-            return mean_ensemble(
-                self._predict_recursive(fh, state), self._predict_direct(fh, state)
-            )
-        return self._predict_recursive(fh, state)
+        assembled = VectorAssembler(
+            inputCols=cols, outputCol="__features", handleInvalid="skip"
+        ).transform(design)
+        return self._regressor().fit(assembled)
 
     def _predict_direct(self, fh: int, state: DataFrame) -> DataFrame:
         """Direct: every horizon scores the same observed-lag features
@@ -217,7 +174,7 @@ class gradient_boosted_model(Forecaster):
         from pyspark.ml.feature import VectorAssembler
 
         p = self.state["panel"]
-        model = self.state["model"]
+        model = self.state["recursive_model"]
         lags = self.lags
         x_cols = self.state.get("x_cols") or []
         xarr = [f"__x_{c}" for c in x_cols]  # fh-long future arrays
@@ -613,7 +570,7 @@ class catboost(_native_flavor):
     rsm->featureSubsetStrategy, random_seed->seed, ...)."""
 
 
-class boosted_stumps(Forecaster):
+class boosted_stumps(ARForecaster):
     """Exact-greedy depth-1 gradient-boosted stumps, Spark-native.
 
     Same boosting semantics as the reference's tree forecasters
@@ -780,71 +737,39 @@ class boosted_stumps(Forecaster):
                 (int(row["__f"]), row["__v"], lr * row["ml"], lr * row["mr"])
             )
         self.state["stumps"] = stumps
-        design.unpersist()
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
-
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from typing import Iterator
-
-        import numpy as np
-
-        from functime_spark.forecasting._ar import stack_buffers
-
-        y_lag = self.state["y_lag"]
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        spark = y_lag.sparkSession
-        b = broadcast_value(spark, 
-            (self.state["f0"], self.state["stumps"], self.state["snap_edges"])
+        self.state["recursive_model"] = (
+            self.state["f0"],
+            stumps,
+            self.state["snap_edges"],
         )
+        design.unpersist()
+        self._fit_y_lag(y)
 
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
+    @staticmethod
+    def _make_step(model):
+        f0, stumps, snap_edges = model
 
-            f0, stumps, snap_edges = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    feats = buf[:, ::-1][:, :lags]
-                    if snap_edges is not None:
-                        # same snap-down rule as training: largest
-                        # edge <= x (values below all edges -> edge 0)
-                        feats = np.column_stack(
-                            [
-                                np.asarray(e)[
-                                    np.clip(
-                                        np.searchsorted(e, feats[:, j], "right") - 1,
-                                        0,
-                                        None,
-                                    )
-                                ]
-                                for j, e in enumerate(snap_edges)
-                            ]
-                        )
-                    yhat = np.full(len(ents), f0)
-                    for j, v, dl, dr in stumps:
-                        yhat = yhat + np.where(feats[:, j] <= v, dl, dr)
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
+        def step(h, feats, x):
+            if snap_edges is not None:
+                # same snap-down rule as training: largest edge
+                # <= value (values below all edges -> edge 0)
+                feats = np.column_stack(
+                    [
+                        np.asarray(e)[
+                            np.clip(np.searchsorted(e, feats[:, j], "right") - 1, 0, None)
+                        ]
+                        for j, e in enumerate(snap_edges)
+                    ]
                 )
+            yhat = np.full(feats.shape[0], f0)
+            for j, v, dl, dr in stumps:
+                yhat = yhat + np.where(feats[:, j] <= v, dl, dr)
+            return yhat
 
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return y_lag.mapInPandas(run, schema=schema)
+        return step
 
 
-class boosted_trees_d2(Forecaster):
+class boosted_trees_d2(ARForecaster):
     """Histogram-binned greedy depth-2 gradient-boosted trees.
 
     Round-6 redesign of the r5 exact-greedy version (the one perf-weak
@@ -1138,90 +1063,45 @@ class boosted_trees_d2(Forecaster):
                     children.append(("split", sj, sv, lr * dl, lr * dr))
             trees.append((rj, rv, children[0], children[1]))
         self.state["trees"] = trees
+        self.state["recursive_model"] = (
+            self.state["f0"],
+            trees,
+            self.state["bins"],
+            self.max_bins,
+        )
         binned.unpersist()
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
-        self._cutoffs_from_y_lag()
+        self._fit_y_lag(y)
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        from typing import Iterator
-
-        import numpy as np
-
-        from functime_spark.forecasting._ar import (
-            _x_matrix,
-            attach_future_x,
-            stack_buffers,
-        )
-
-        y_lag = self.state["y_lag"]
-        entity = y_lag.columns[0]
-        entity_dtype = dict(y_lag.dtypes)[entity]
-        lags = self.lags
-        x_cols = self.state.get("x_cols") or []
-        state = y_lag
-        if x_cols:
-            if X is None:
-                raise ValueError(
-                    "forecaster was fit with exogenous X; predict needs X_future"
-                )
-            state = attach_future_x(y_lag, X, x_cols, fh, on_short=self._x_on_short)
-        spark = y_lag.sparkSession
-        b = broadcast_value(
-            spark,
-            (self.state["f0"], self.state["trees"], self.state["bins"], self.max_bins),
-        )
+    @staticmethod
+    def _make_step(model):
+        f0, trees, bins, B = model
 
         def child_eval(child, feats):
-            import numpy as np
-
             if child[0] == "leaf":
                 return np.full(feats.shape[0], child[1])
             _, j, v, dl, dr = child
             return np.where(feats[:, j] <= v, dl, dr)
 
-        def run(batches: Iterator) -> Iterator:
-            import pandas as pd
-
-            f0, trees, bins, B = b.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ents = pdf[entity].to_numpy()
-                buf = stack_buffers(pdf["__buf"], lags)
-                xmat = (
-                    _x_matrix(pdf, x_cols, fh, len(ents)) if x_cols else None
-                )  # (n, fh, n_x)
-                preds = np.empty((len(ents), fh), dtype="float64")
-                for h in range(fh):
-                    raw = buf[:, ::-1][:, :lags]
-                    if xmat is not None:
-                        raw = np.concatenate([raw, xmat[:, h, :]], axis=1)
-                    # same IEEE binning as training; recursion values
-                    # outside the train range clamp into [0, B-1]
-                    feats = np.column_stack(
-                        [
-                            np.zeros(raw.shape[0])
-                            if w == 0.0
-                            else np.clip(np.floor((raw[:, j] - lo) / w), 0, B - 1)
-                            for j, (lo, w) in enumerate(bins)
-                        ]
-                    )
-                    yhat = np.full(len(ents), f0)
-                    for rj, rv, left, right in trees:
-                        yhat = yhat + np.where(
-                            feats[:, rj] <= rv,
-                            child_eval(left, feats),
-                            child_eval(right, feats),
-                        )
-                    preds[:, h] = yhat
-                    buf = np.concatenate([buf[:, 1:], yhat[:, None]], axis=1)
-                yield pd.DataFrame(
-                    {
-                        entity: np.repeat(ents, fh),
-                        "step": np.tile(np.arange(fh), len(ents)),
-                        "__yhat": preds.ravel(),
-                    }
+        def step(h, raw, x):
+            if x is not None:
+                raw = np.concatenate([raw, x], axis=1)
+            # same IEEE binning as training; recursion values
+            # outside the train range clamp into [0, B-1]
+            feats = np.column_stack(
+                [
+                    np.zeros(raw.shape[0])
+                    if w == 0.0
+                    else np.clip(np.floor((raw[:, j] - lo) / w), 0, B - 1)
+                    for j, (lo, w) in enumerate(bins)
+                ]
+            )
+            yhat = np.full(raw.shape[0], f0)
+            for rj, rv, left, right in trees:
+                yhat = yhat + np.where(
+                    feats[:, rj] <= rv,
+                    child_eval(left, feats),
+                    child_eval(right, feats),
                 )
+            return yhat
 
-        schema = f"{entity} {entity_dtype}, step int, __yhat double"
-        return state.mapInPandas(run, schema=schema)
+        return step

@@ -104,28 +104,12 @@ def smape_original(y_true, y_pred):
     return j.groupBy(e).agg(_smape_original_expr().alias("smape_original"))
 
 
-def _naive_scale(y_train: DataFrame, sp: int, squared: bool):
-    """Per-entity in-sample seasonal-naive error (ref point.py:167-200)."""
-    e, t = y_train.columns[:2]
-    v = y_train.columns[-1]
-    w = Window.partitionBy(e).orderBy(t)
-    d = F.col(v) - F.lag(v, sp).over(w)
-    err = (d * d) if squared else F.abs(d)
-    return (
-        y_train.withColumn("__e", err)
-        .groupBy(e)
-        .agg(F.avg("__e").alias("__naive"))
-    )
-
-
 def _naive_scale_both(y_train: DataFrame, sp: int):
-    """Per-entity in-sample naive MAE and MSE in ONE window + ONE
-    aggregate — score_forecast needs both (mase + rmsse), and two
-    separate _naive_scale calls cost two scans and two
-    Exchange+Sort+Window passes over y_train for arithmetic that
-    shares the same lag diff (r11 optimization: plan went from two
-    naive-scale subtrees to one; the groupBy reuses the window's
-    entity partitioning, so the branch is one exchange total)."""
+    """Per-entity in-sample seasonal-naive MAE (`__naive_abs`) and MSE
+    (`__naive_sq`) in ONE window + ONE aggregate (ref point.py:167-200)
+    — the one naive-scale definition: mase and rmsse select their
+    column, and score_forecast reads both off a single Exchange+Sort+
+    Window pass (the groupBy reuses the window's entity partitioning)."""
     e, t = y_train.columns[:2]
     v = y_train.columns[-1]
     w = Window.partitionBy(e).orderBy(t)
@@ -142,21 +126,21 @@ def _naive_scale_both(y_train: DataFrame, sp: int):
 
 def mase(y_true, y_pred, y_train, sp: int = 1):
     e = y_true.columns[0]
-    scale = _naive_scale(y_train, sp, squared=False)
+    scale = _naive_scale_both(y_train, sp).select(e, "__naive_abs")
     return (
         mae(y_true, y_pred)
         .join(F.broadcast(scale), on=e, how="left")
-        .select(e, (F.col("mae") / F.col("__naive")).alias("mase"))
+        .select(e, (F.col("mae") / F.col("__naive_abs")).alias("mase"))
     )
 
 
 def rmsse(y_true, y_pred, y_train, sp: int = 1):
     e = y_true.columns[0]
-    scale = _naive_scale(y_train, sp, squared=True)
+    scale = _naive_scale_both(y_train, sp).select(e, "__naive_sq")
     return (
         mse(y_true, y_pred)
         .join(F.broadcast(scale), on=e, how="left")
-        .select(e, F.sqrt(F.col("mse") / F.col("__naive")).alias("rmsse"))
+        .select(e, F.sqrt(F.col("mse") / F.col("__naive_sq")).alias("rmsse"))
     )
 
 

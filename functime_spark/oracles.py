@@ -51,9 +51,10 @@ def _ar_gauss_ctes(lags: int, fh: int) -> list:
     substitution) is numerically stable; each elimination step is a
     generated single-row CTE. Emits coefficients x0..x{lags-1}
     (x_i multiplies lag_{i+1}, most recent first — matching
-    predict_recursive_linear _ar.py:223) and intercept x{lags},
-    per-entity tails q1..q{lags} + cutoff `low` in `qv`, and chained
-    predictions p1..p{fh} with the final CTE named p{fh}."""
+    linear_model._make_step in the shared predict_ar kernel) and
+    intercept x{lags}, per-entity tails q1..q{lags} + cutoff `low` in
+    `qv`, and chained predictions p1..p{fh} with the final CTE named
+    p{fh}."""
     m = lags + 1
 
     def col(i):
@@ -128,7 +129,7 @@ def _ar_exog_sin_ctes(lags: int, fh: int) -> list:
     fit and fh-step recursion — design columns l1..lL, sx, cx,
     intercept, with the future exogenous values recomputed from the
     per-entity cutoff (`low + h hours`), exactly what
-    attach_future_x + predict_recursive_linear do with X_future.
+    attach_future_x + predict_ar (linear step) do with X_future.
     Expects a prior CTE `panel` (e, t, y); final CTE is p{fh}."""
     m = lags + 3
     names = [f"l{k}" for k in range(1, lags + 1)] + ["sx", "cx", None]
@@ -335,7 +336,7 @@ def _direct_linear_ctes(L: int, H: int, pfx: str = "d") -> list:
     """Per-horizon pooled OLS of the DIRECT strategy (ref fit_direct
     _ar.py:53-80): model h trains on features lag_h..lag_{h+L-1}
     (rows i >= L+H-1) but predicts from the LAST L observed values
-    (the direct-forecast time shift — predict_direct_linear applies
+    (the direct-forecast time shift — predict_ar in direct mode applies
     model h's coefficients to lag_1..lag_L). Emits per-entity
     predictions in CTEs {pfx}p1..{pfx}pH."""
     m = L + 1

@@ -1170,12 +1170,10 @@ def scrub_duplicated_spans(
     exploded = base.select(
         F.col(id_col), F.posexplode(grams).alias("__pos", "__g")
     )
-    # r11: the gram occurrence count is a COUNT-ONLY hash aggregate in
-    # both modes. The previous form folded keep_first's winner into
-    # the same aggregate as min(struct(doc, pos)) — a struct buffer
-    # downgrades the whole aggregate to SortAggregate, i.e. two full
-    # sorts of the exploded gram stream (captured in
-    # plans/r11/span_dedup_keepfirst_before.txt).
+    # the gram occurrence count is a COUNT-ONLY hash aggregate in both
+    # modes: folding keep_first's winner into the same aggregate as
+    # min(struct(doc, pos)) would downgrade it to SortAggregate (a
+    # struct buffer), i.e. two full sorts of the exploded gram stream.
     counts = exploded.groupBy("__g").agg(F.count(F.lit(1)).alias("__cnt"))
     dup_occ = exploded.join(
         counts.where(F.col("__cnt") >= min_count).select("__g"), on="__g"

@@ -212,6 +212,24 @@ def test_metrics(spark):
     assert set(scores.columns) == {
         "entity", "mae", "mase", "mse", "overforecast", "rmse", "rmsse", "smape", "underforecast",
     }
+    # mase / rmsse read the same naive scale as score_forecast
+    fused = {r["entity"]: r for r in scores.collect()}
+    for name in ("mase", "rmsse"):
+        got = {
+            r["entity"]: r[name]
+            for r in getattr(M, name)(y_true, y_pred, y_true, sp=1).collect()
+        }
+        assert got["a"] == pytest.approx(fused["a"][name])
+        assert got["b"] is None and fused["b"][name] is None
+    # sp=2: lag-2 diffs of [1, 4, 2, 2] are [1, -2] -> MAE 1.5, MSE 2.5
+    y_train = spark.createDataFrame(
+        [("a", t, v) for t, v in enumerate([1.0, 4.0, 2.0, 2.0])],
+        "entity string, time int, value double",
+    )
+    mase2 = {r["entity"]: r["mase"] for r in M.mase(y_true, y_pred, y_train, sp=2).collect()}
+    assert mase2["a"] == pytest.approx(2.0 / 1.5)
+    rmsse2 = {r["entity"]: r["rmsse"] for r in M.rmsse(y_true, y_pred, y_train, sp=2).collect()}
+    assert rmsse2["a"] == pytest.approx(np.sqrt(4.0 / 2.5))
 
 
 def test_cv_splits(events, events_pdf):
@@ -603,9 +621,11 @@ def test_linear_model_with_exogenous(spark):
 
 def test_direct_and_ensemble_strategies_all_forecasters(spark):
     """Strategy parity: direct/ensemble must run and produce sane
-    output for knn, censored, zero-inflated, and tree forecasters."""
-    from functime_spark.forecasting.censored import zero_inflated_model
+    output for knn, linear, censored (both regimes), zero-inflated,
+    and tree forecasters."""
+    from functime_spark.forecasting.censored import censored_model, zero_inflated_model
     from functime_spark.forecasting.knn import knn
+    from functime_spark.forecasting.linear import linear_model
     from functime_spark.forecasting.tree import gradient_boosted_model
 
     rng = np.random.RandomState(1)
@@ -618,6 +638,10 @@ def test_direct_and_ensemble_strategies_all_forecasters(spark):
 
     makers = [
         lambda s: knn(freq="1i", lags=4, n_neighbors=3, strategy=s, max_horizons=3),
+        lambda s: linear_model(freq="1i", lags=4, strategy=s, max_horizons=3),
+        lambda s: censored_model(
+            freq="1i", lags=4, threshold=20.0, strategy=s, max_horizons=3
+        ),
         lambda s: zero_inflated_model(freq="1i", lags=4, strategy=s, max_horizons=3),
         lambda s: gradient_boosted_model(
             freq="1i", lags=4, max_iter=3, strategy=s, max_horizons=3
@@ -1095,13 +1119,17 @@ def test_auto_cfo_local_search(spark):
 
 
 def test_gbt_exogenous_features(spark):
-    """Exogenous X must flow into the GBT feature vector at fit AND
-    into every prediction step: on a target driven by a binary exog
-    column, the forecast must track the FUTURE x pattern per entity
-    (it cannot do that from lags alone), for both the recursive and
-    direct strategies. Predicting without X_future raises."""
+    """Exogenous X must flow into the feature vector at fit AND into
+    every prediction step: on a target driven by a binary exog column,
+    the forecast must track the FUTURE x pattern per entity (it cannot
+    do that from lags alone), for both the recursive and direct
+    strategies — the direct kernel must read x at step h. Covers the
+    JVM GBT path and the shared Arrow kernel (linear, censored).
+    Predicting without X_future raises."""
     import numpy as np
 
+    from functime_spark.forecasting.censored import censored_model
+    from functime_spark.forecasting.linear import linear_model
     from functime_spark.forecasting.tree import gradient_boosted_model
 
     rng = np.random.default_rng(9)
@@ -1117,18 +1145,26 @@ def test_gbt_exogenous_features(spark):
     y = spark.createDataFrame(rows, "entity string, t long, y double")
     X = spark.createDataFrame(xrows, "entity string, t long, x double")
     want = {"a": np.array([60.0, 60.0, 10.0, 10.0]), "b": np.array([10.0, 10.0, 60.0, 60.0])}
-    fitted = None
-    for strat in ("recursive", "direct"):
-        fc = gradient_boosted_model(
-            freq="1i", lags=2, strategy=strat, max_horizons=4, max_iter=10, seed=7
-        ).fit(y, X)
-        fitted = fc
-        pred = fc.predict(4, X.filter("t >= 80")).toPandas().sort_values(["entity", "t"])
-        for e in ("a", "b"):
-            got = pred[pred.entity == e]["y"].to_numpy()
-            np.testing.assert_allclose(got, want[e], atol=2.0)
-    with pytest.raises(ValueError, match="X_future"):
-        fitted.predict(4)
+    makers = [
+        lambda s: gradient_boosted_model(
+            freq="1i", lags=2, strategy=s, max_horizons=4, max_iter=10, seed=7
+        ),
+        lambda s: linear_model(freq="1i", lags=2, strategy=s, max_horizons=4),
+        # threshold 0: every row is in the above regime. A threshold
+        # between the regimes would fail here for a data reason: at
+        # h >= 2, entity b's last observed lags (both high) never
+        # co-occur with x = 1 in training, so the classifier hedges
+        lambda s: censored_model(freq="1i", lags=2, strategy=s, max_horizons=4),
+    ]
+    for maker in makers:
+        for strat in ("recursive", "direct"):
+            fc = maker(strat).fit(y, X)
+            pred = fc.predict(4, X.filter("t >= 80")).toPandas().sort_values(["entity", "t"])
+            for e in ("a", "b"):
+                got = pred[pred.entity == e]["y"].to_numpy()
+                np.testing.assert_allclose(got, want[e], atol=2.0)
+        with pytest.raises(ValueError, match="X_future"):
+            fc.predict(4)
 
 
 def test_knn_censored_exogenous_features(spark):
