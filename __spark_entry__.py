@@ -1018,9 +1018,10 @@ def q_future_holidays(spark, sf_dir):
 
 def q_stream_minhash(spark, sf_dir):
     """The streaming MinHash near-dup operator executed in batch mode
-    (applyInPandasWithState degrades to a grouped map on a static
-    frame): distinct verified pairs must equal the batch minhash
-    pipeline's, so the dedup_minhash oracle replays it directly."""
+    (on a static frame it pairs through the batch bucket layer,
+    _bucket_pairs): distinct verified pairs must equal the batch
+    minhash pipeline's, so the dedup_minhash oracle replays it
+    directly."""
     _ensure_nanos_conf(spark)
     from functime_spark.streaming import stream_minhash_dedup
 
@@ -1033,8 +1034,8 @@ def q_stream_minhash(spark, sf_dir):
 
 
 def q_stream_dhash(spark, sf_dir):
-    """The streaming image near-dup operator executed in batch mode
-    (r9): deduped (id_a, id_b, hamming) pairs over the group-payload
+    """The streaming image near-dup operator executed in batch mode:
+    deduped (id_a, id_b, hamming) pairs over the group-payload
     construction must equal the batch dhash_near_dups pipeline's, so
     the media_dhash_dedup oracle replays it directly."""
     _ensure_nanos_conf(spark)

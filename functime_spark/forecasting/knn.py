@@ -26,6 +26,7 @@ from __future__ import annotations
 import numpy as np
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from functime_spark.forecasting._ar import ARForecaster, make_reduction, predict_ar
 
@@ -190,14 +191,11 @@ class knn(ARForecaster):
 
     def _scale_evals(self, fh: int) -> float:
         """Predicted brute-force distance-evaluation count for this
-        predict call: n_ref * n_entities * fh. n_entities comes from
-        one count of the persisted n_entities-row recursion state,
-        cached on the fit state."""
-        n_ent = self.state.get("n_entities")
-        if n_ent is None:
-            n_ent = self.state["y_lag"].count()
-            self.state["n_entities"] = n_ent
-        return float(len(self.state["train"][0])) * float(n_ent) * float(fh)
+        predict call: n_ref * n_entities * fh. n_entities is the
+        design's entity count, taken by the fit's one count action
+        (_collect_train), so predict runs no job for it."""
+        n_ref = float(len(self.state["train"][0]))
+        return n_ref * float(self.state["n_entities"]) * float(fh)
 
     def _design_width(self) -> int:
         if self.strategy in ("direct", "ensemble"):
@@ -215,14 +213,20 @@ class knn(ARForecaster):
         feature_cols = [f"{p.target}__lag_{k}" for k in range(1, width + 1)]
         cached = (
             make_reduction(y, width, X)
-            .select(*feature_cols, *x_cols, p.target)
+            .select(*feature_cols, *x_cols, p.target, p.entity)
             .persist()
         )
-        n = cached.count()  # materializes the cache; the collect below re-reads it
+        # one action materializes the cache (the collect below re-reads
+        # it) and counts the rows and the entities the scale wall needs
+        counts = cached.agg(
+            F.count(F.lit(1)).alias("n"), F.countDistinct(p.entity).alias("e")
+        ).first()
+        n = counts["n"]
+        self.state["n_entities"] = counts["e"]
         self.state["sampled"] = n > self.max_train_rows
-        design = cached
+        design = cached.select(*feature_cols, *x_cols, p.target)
         if self.state["sampled"]:
-            design = cached.sample(
+            design = design.sample(
                 fraction=min(1.0, self.max_train_rows / n * 1.05), seed=7
             ).limit(self.max_train_rows)
         pdf = design.toPandas()
@@ -233,7 +237,6 @@ class knn(ARForecaster):
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         self.state["train"] = self._collect_train(y, X)
-        self.state.pop("n_entities", None)  # refit may change the panel
         self.state.pop("ivf", None)
         self._fit_y_lag(y)
 
@@ -382,7 +385,6 @@ class ann(knn):
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         feats, targs = self._collect_train(y, X)
         self.state["train"] = _ivf_pack(feats, targs, self.n_cells)
-        self.state.pop("n_entities", None)
         self._fit_y_lag(y)
 
     def _predict_recursive(self, fh: int, state: DataFrame) -> DataFrame:

@@ -570,6 +570,58 @@ class catboost(_native_flavor):
     rsm->featureSubsetStrategy, random_seed->seed, ...)."""
 
 
+def _scored_candidates(df, cols, resid, side_col=None):
+    """The fused one-pass split-candidate frame of the boosted
+    families: all features ride ONE posexplode projection into a
+    single (side?, feature, value) hash aggregate of residual
+    sufficient stats; prefix/total sums run in windows PARTITIONED by
+    (side?, feature) — never a global-ordered window, even in the
+    stumps' exact mode. Returns (side?, __f, __v, gain, ml, mr)."""
+    from pyspark.sql import Window
+
+    keys = ["__s"] if side_col is not None else []
+    sel = ([side_col.alias("__s")] if side_col is not None else []) + [
+        resid.alias("__r"),
+        F.posexplode(F.array(*cols)).alias("__f", "__v"),
+    ]
+    cand = df.select(*sel).groupBy(*keys, "__f", "__v").agg(
+        F.sum("__r").alias("s"), F.count(F.lit(1)).alias("c")
+    )
+    wl = (
+        Window.partitionBy(*keys, "__f")
+        .orderBy("__v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    wt = Window.partitionBy(*keys, "__f")
+    return (
+        cand.select(
+            *keys,
+            "__f",
+            "__v",
+            F.sum("s").over(wl).alias("sl"),
+            F.sum("c").over(wl).alias("cl"),
+            F.sum("s").over(wt).alias("st"),
+            F.sum("c").over(wt).alias("ct"),
+        )
+        .filter(F.col("ct") > F.col("cl"))
+        .select(
+            *keys,
+            "__f",
+            "__v",
+            (
+                F.col("sl") * F.col("sl") / F.col("cl")
+                + (F.col("st") - F.col("sl"))
+                * (F.col("st") - F.col("sl"))
+                / (F.col("ct") - F.col("cl"))
+            ).alias("gain"),
+            (F.col("sl") / F.col("cl")).alias("ml"),
+            ((F.col("st") - F.col("sl")) / (F.col("ct") - F.col("cl"))).alias(
+                "mr"
+            ),
+        )
+    )
+
+
 class boosted_stumps(ARForecaster):
     """Exact-greedy depth-1 gradient-boosted stumps, Spark-native.
 
@@ -632,55 +684,6 @@ class boosted_stumps(ARForecaster):
             ).otherwise(F.lit(float(dr)))
         return expr
 
-    @staticmethod
-    def _scored_candidates(design, cols, resid):
-        """The fused one-pass candidate frame: all features ride ONE
-        posexplode projection into a single (feature, value) hash
-        aggregate of residual sufficient stats; prefix/total sums run
-        in windows PARTITIONED BY feature — never a global-ordered
-        window, even in exact mode. Returns (__f, __v, gain, ml, mr)."""
-        from pyspark.sql import Window
-
-        cand = (
-            design.select(
-                resid.alias("__r"),
-                F.posexplode(F.array(*cols)).alias("__f", "__v"),
-            )
-            .groupBy("__f", "__v")
-            .agg(F.sum("__r").alias("s"), F.count(F.lit(1)).alias("c"))
-        )
-        wl = (
-            Window.partitionBy("__f")
-            .orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wt = Window.partitionBy("__f")
-        return (
-            cand.select(
-                "__f",
-                "__v",
-                F.sum("s").over(wl).alias("sl"),
-                F.sum("c").over(wl).alias("cl"),
-                F.sum("s").over(wt).alias("st"),
-                F.sum("c").over(wt).alias("ct"),
-            )
-            .filter(F.col("ct") > F.col("cl"))
-            .select(
-                "__f",
-                "__v",
-                (
-                    F.col("sl") * F.col("sl") / F.col("cl")
-                    + (F.col("st") - F.col("sl"))
-                    * (F.col("st") - F.col("sl"))
-                    / (F.col("ct") - F.col("cl"))
-                ).alias("gain"),
-                (F.col("sl") / F.col("cl")).alias("ml"),
-                (
-                    (F.col("st") - F.col("sl")) / (F.col("ct") - F.col("cl"))
-                ).alias("mr"),
-            )
-        )
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         if X is not None:
             raise ValueError(
@@ -727,7 +730,7 @@ class boosted_stumps(ARForecaster):
             # PARTITIONED BY feature (never global); the cross-feature
             # argmax is the same (gain desc, feature asc, value asc)
             # tie-break the old per-feature loop applied
-            scored = self._scored_candidates(design, cols, resid)
+            scored = _scored_candidates(design, cols, resid)
             row = scored.orderBy(
                 F.desc("gain"), F.asc("__f"), F.asc("__v")
             ).first()
@@ -875,56 +878,6 @@ class boosted_trees_d2(ARForecaster):
                 )
         return out
 
-    def _scored_candidates(self, df, bcols, resid, side_col=None):
-        """The fused one-pass candidate frame: all features ride ONE
-        posexplode projection into a single (side?, feature, bin) hash
-        aggregate of residual sufficient stats; prefix/total sums run
-        in windows PARTITIONED by (side?, feature) over <= max_bins
-        rows each. Returns (side?, __f, __v, gain, ml, mr)."""
-        from pyspark.sql import Window
-
-        keys = ["__s"] if side_col is not None else []
-        sel = ([side_col.alias("__s")] if side_col is not None else []) + [
-            resid.alias("__r"),
-            F.posexplode(F.array(*bcols)).alias("__f", "__v"),
-        ]
-        cand = df.select(*sel).groupBy(*keys, "__f", "__v").agg(
-            F.sum("__r").alias("s"), F.count(F.lit(1)).alias("c")
-        )
-        wl = (
-            Window.partitionBy(*keys, "__f")
-            .orderBy("__v")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wt = Window.partitionBy(*keys, "__f")
-        return (
-            cand.select(
-                *keys,
-                "__f",
-                "__v",
-                F.sum("s").over(wl).alias("sl"),
-                F.sum("c").over(wl).alias("cl"),
-                F.sum("s").over(wt).alias("st"),
-                F.sum("c").over(wt).alias("ct"),
-            )
-            .filter(F.col("ct") > F.col("cl"))
-            .select(
-                *keys,
-                "__f",
-                "__v",
-                (
-                    F.col("sl") * F.col("sl") / F.col("cl")
-                    + (F.col("st") - F.col("sl"))
-                    * (F.col("st") - F.col("sl"))
-                    / (F.col("ct") - F.col("cl"))
-                ).alias("gain"),
-                (F.col("sl") / F.col("cl")).alias("ml"),
-                ((F.col("st") - F.col("sl")) / (F.col("ct") - F.col("cl"))).alias(
-                    "mr"
-                ),
-            )
-        )
-
     def _round_splits(self, binned, bcols, resid):
         """Root argmax AND both children's argmaxes in ONE action
         (r12, guide §5: the per-round two-action shape paid a full
@@ -943,7 +896,7 @@ class boosted_trees_d2(ARForecaster):
         Windows stay PARTITIONED; the broadcast carries one row."""
         from pyspark.sql import Window
 
-        scored = self._scored_candidates(binned, bcols, resid)
+        scored = _scored_candidates(binned, bcols, resid)
         best = (
             scored.agg(
                 F.max(
@@ -972,7 +925,7 @@ class boosted_trees_d2(ARForecaster):
             <= F.col("__rv"),
             0,
         ).otherwise(1)
-        child_scored = self._scored_candidates(
+        child_scored = _scored_candidates(
             withroot, bcols, resid, side_col=side
         )
         rn = F.row_number().over(

@@ -418,7 +418,7 @@ def audio_near_dups(
     partials shrink the extra shuffle to one row per pair per
     partition. Candidate pairs track shared-landmark counts, never
     corpus**2."""
-    from functime_spark.pipeline.dedup import _bucket_pairs
+    from functime_spark.pipeline.dedup import _best_offset, _bucket_pairs
 
     # no lineage cut: _bucket_pairs consumes the fingerprint pass
     # exactly once
@@ -447,29 +447,7 @@ def audio_near_dups(
         F.col("b.media_id").alias("id_b"),
         (F.col("a.t") - F.col("b.t")).alias("offset"),
     ).agg(F.count(F.lit(1)).alias("n_matches"))
-    # argmax as a lexicographic struct MAX (n DESC via max, offset ASC
-    # via negated tiebreak) — an associative aggregate, so the
-    # per-pair reduction combines map-side and the second shuffle
-    # carries at most one row per pair per partition (a row_number
-    # window here would re-shuffle ALL vote rows and sort them)
-    best = F.max(
-        F.struct(
-            F.col("n_matches"),
-            (-F.col("offset")).alias("noff"),
-            F.col("offset"),
-        )
-    ).alias("b")
-    return (
-        votes.groupBy("id_a", "id_b")
-        .agg(best)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("b.offset").alias("offset"),
-            F.col("b.n_matches").alias("n_matches"),
-        )
-        .filter(F.col("n_matches") >= min_matches)
-    )
+    return _best_offset(votes, min_matches)
 
 
 def audio_dedup_incremental(
@@ -506,44 +484,31 @@ def audio_dedup_incremental(
             f"first batch; got {type(store_fps).__name__}"
         )
     from functime_spark.materialize import materialize
-    from functime_spark.pipeline.dedup import _bucket_pairs, _cap_buckets
+    from functime_spark.pipeline.dedup import _store_pairs
 
     # one decode+fingerprint pass over the new batch, pinned: feeds
-    # both join sides and the updated store
+    # both candidate sides and the updated store
     new_fps = materialize(
         audio_fingerprints(new_media, decoder=decoder, **kernel_kwargs)
     )
-    # new-vs-new via _bucket_pairs (the same _cap_buckets wall as the
-    # cross side below). The id filter is REQUIRED, not redundant: one
-    # clip can contribute the same fp to a bucket more than once
-    # (periodic/tonal audio repeats (f1, f2, dt) across anchors), and
-    # the sorted item struct only guarantees a.id <= b.id — without
-    # the filter a repeated-hash clip self-reports as its own
-    # duplicate (audio_near_dups keeps the identical filter for the
-    # identical reason).
-    nn = (
-        _bucket_pairs(new_fps, ["fp"], max_bucket_size, ["media_id"])
-        .filter(F.col("a.media_id") < F.col("b.media_id"))
+    # The id filter is REQUIRED, not redundant: one clip can contribute
+    # the same fp to a bucket more than once (periodic/tonal audio
+    # repeats (f1, f2, dt) across anchors), and the sorted item struct
+    # only guarantees a.id <= b.id among new-vs-new pairs — without it a
+    # repeated-hash clip self-reports as its own duplicate
+    # (audio_near_dups keeps the same filter for the same reason). A
+    # new-vs-store pair never has equal ids (ids are unique across
+    # store and batch), so its (id_a, id_b) never meets a new-vs-new
+    # key either: one aggregate counts both kinds.
+    pairs = (
+        _store_pairs(new_fps, store_fps, ["fp"], max_bucket_size, ["media_id"])
+        .filter(F.col("a.media_id") != F.col("b.media_id"))
         .groupBy(
             F.col("a.media_id").alias("id_a"),
             F.col("b.media_id").alias("id_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_matches"))
+        .filter(F.col("n_matches") >= min_matches)
     )
-    if store_fps is None:
-        return nn.filter(F.col("n_matches") >= min_matches), new_fps
-    capped_new = _cap_buckets(new_fps, ["fp"], max_bucket_size)
-    capped_old = _cap_buckets(store_fps, ["fp"], max_bucket_size)
-    cross = (
-        capped_new.alias("a")
-        .join(capped_old.alias("b"), F.col("a.fp") == F.col("b.fp"))
-        .groupBy(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_matches"))
-    )
-    pairs = nn.unionByName(cross).filter(
-        F.col("n_matches") >= min_matches
-    )
-    return pairs, store_fps.unionByName(new_fps)
+    updated = new_fps if store_fps is None else store_fps.unionByName(new_fps)
+    return pairs, updated

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from functime_spark.pipeline._util import spread_for_cpu as _spread_for_cpu
+from functime_spark.pipeline.similarity import _dot, _norm
 from functime_spark.materialize import materialize
 
 # Lane-derivation scheme of minhash_signatures. Persist next to any
@@ -352,6 +353,93 @@ def _cap_buckets(banded: DataFrame, keys: list, max_bucket_size: int) -> DataFra
     )
 
 
+def _store_pairs(
+    new: DataFrame,
+    store: DataFrame | None,
+    keys: list,
+    max_bucket_size: int,
+    item_cols: list,
+    new_pairs: bool = True,
+) -> DataFrame:
+    """Candidate pairs of a new batch against a store (a persisted
+    signature store, or a probe set): the new-vs-new pairs of
+    _bucket_pairs (unless ``new_pairs`` is False), unioned with every
+    new item joined to every store item of its bucket, each side
+    capped by _cap_buckets first. Same ``a``/``b`` struct rows as
+    _bucket_pairs; ``a`` is always a new item. The cross join is a
+    plain equi-join on the keys, so it reuses the cap windows' hash
+    partitioning (no exchange of its own, and no broadcast hint: AQE
+    still broadcasts a small side); a NULL key therefore pairs within
+    the new batch but never across to the store (a null-safe join
+    would re-shuffle both sides on coalesce/isnull keys). ``store``
+    None leaves the new-vs-new pairs alone."""
+    pairs = _bucket_pairs(new, keys, max_bucket_size, item_cols) if new_pairs else None
+    if store is None:
+        return pairs
+
+    def side(df, name):
+        return _cap_buckets(df, keys, max_bucket_size).select(
+            *keys, F.struct(*[F.col(c) for c in item_cols]).alias(name)
+        )
+
+    cross = side(new, "__a").join(side(store, "__b"), keys).select(
+        F.col("__a").alias("a"), F.col("__b").alias("b")
+    )
+    return cross if pairs is None else pairs.unionByName(cross)
+
+
+# The verify formulas of the near-dup operators, each written once over
+# the ``a``/``b`` item structs of _bucket_pairs / _store_pairs.
+
+
+def _hamming(field: str):
+    """Hamming distance between the a and b items' 64-bit ``field``."""
+    return F.bit_count(F.col(f"a.{field}").bitwiseXOR(F.col(f"b.{field}")))
+
+
+def _slot_agreement(field: str = "sig"):
+    """MinHash Jaccard estimate: the share of the a and b signature
+    slots that agree (NULL slots never agree)."""
+    a, b = F.col(f"a.{field}"), F.col(f"b.{field}")
+    agree = F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda v: v)
+    return F.size(agree) / F.size(a)
+
+
+def _cosine():
+    """Cosine of the a and b items' vectors ``__v`` from their L2
+    norms ``__n``."""
+    return _dot(F.col("a.__v"), F.col("b.__v")) / (F.col("a.__n") * F.col("b.__n"))
+
+
+def _best_offset(votes: DataFrame, min_matches: int) -> DataFrame:
+    """(id_a, id_b, offset, n_matches): each pair's best offset among
+    its (id_a, id_b, offset, n_matches) vote rows — most matches,
+    smallest offset on ties — kept when it has >= ``min_matches``.
+    The argmax is a lexicographic struct MAX (n DESC via max, offset
+    ASC via the negated tiebreak): an associative aggregate, so the
+    per-pair reduction combines map-side and its shuffle carries at
+    most one row per pair per partition (a row_number window would
+    re-shuffle and sort every vote row)."""
+    best = F.max(
+        F.struct(
+            F.col("n_matches"),
+            (-F.col("offset")).alias("noff"),
+            F.col("offset"),
+        )
+    ).alias("b")
+    return (
+        votes.groupBy("id_a", "id_b")
+        .agg(best)
+        .select(
+            "id_a",
+            "id_b",
+            F.col("b.offset").alias("offset"),
+            F.col("b.n_matches").alias("n_matches"),
+        )
+        .filter(F.col("n_matches") >= min_matches)
+    )
+
+
 def band_rows(
     sigs: DataFrame,
     id_col: str = "doc_id",
@@ -361,8 +449,8 @@ def band_rows(
 ) -> DataFrame:
     """(id[, sig], band, band_hash) LSH band rows from a signature
     frame — the single definition of the band payload (concat of the
-    band's signature slots), shared by the batch candidate join and
-    the streaming bucket-state op so their bucketing can never drift."""
+    band's signature slots), shared by the batch operators and the
+    streaming bucket-state op so their bucketing can never drift."""
     sig = F.col("sig")
     r = F.floor(F.size(sig) / bands).cast("int")
     cols = [F.col(id_col)] + ([F.col("sig")] if with_sig else [])
@@ -401,26 +489,6 @@ def bit_band_rows(sigs: DataFrame, sig_col: str, band_bits: int) -> DataFrame:
     )
 
 
-def minhash_lsh_candidates(
-    sigs: DataFrame,
-    id_col: str = "doc_id",
-    bands: int = 8,
-    max_bucket_size: int = 512,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Band the signature; docs sharing any band-hash are candidate
-    near-duplicate pairs (id_a < id_b). Buckets larger than
-    `max_bucket_size` are dropped (see _cap_buckets)."""
-    banded = band_rows(sigs, id_col, bands, hash_fn)
-    pairs = _bucket_pairs(
-        banded, ["band", "band_hash"], max_bucket_size, [id_col]
-    )
-    return pairs.select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    ).distinct()
-
-
 def lsh_tuning(n_hashes: int = 32, bands: int = 8) -> dict:
     """Banding-parameter diagnostics for MinHash-LSH: the S-curve
     threshold t ~ (1/b)^(1/r) where candidate probability crosses 1/2,
@@ -455,29 +523,25 @@ def minhash_dedup(
     threshold: float = 0.8,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Full MinHash+LSH near-dup pipeline: signatures → banded
-    candidates → signature-similarity verify → (id_a, id_b, est_jaccard)."""
+    """Full MinHash+LSH near-dup pipeline: signatures → band buckets
+    (the 512-item _cap_buckets wall) → signature-similarity verify →
+    (id_a, id_b, est_jaccard), one row per pair (id_a < id_b).
+
+    The signature rides in the item struct, so the verify is a
+    projection of each candidate pair and the signature pass has one
+    consumer: no lineage cut and no join back. A pair sharing several
+    bands is verified once per band, then deduplicated."""
     sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n, hash_fn)
-    # one row per doc (n_hashes longs); the signature projection is
-    # shuffle-free but still the expensive pass (the shingle + hash
-    # sweep over every doc). The banding aggregate and the two verify
-    # joins all consume sigs; pinning runs it once, not 3x. Lazy:
-    # every consumer executes inside the caller's single action, so
-    # the first computation pins it without a separate job.
-    sigs = materialize(sigs, eager=False)
-    cands = minhash_lsh_candidates(sigs, id_col, bands, hash_fn=hash_fn)
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    ) / F.size("sig_a")
+    banded = band_rows(sigs, id_col, bands, hash_fn, with_sig=True)
+    pairs = _bucket_pairs(banded, ["band", "band_hash"], 512, [id_col, "sig"])
     return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+        pairs.select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            _slot_agreement().alias("est_jaccard"),
+        )
         .filter(F.col("est_jaccard") >= threshold)
+        .distinct()
     )
 
 
@@ -617,12 +681,11 @@ def simhash_near_dups(
     pairs = _bucket_pairs(
         banded, ["band", "band_val"], max_bucket_size, [id_col, "simhash"]
     )
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
         pairs.select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            ham.alias("hamming"),
+            _hamming("simhash").alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -668,12 +731,7 @@ def _lsh_hashed(
     bits = F.transform(
         F.col("__planes"),
         lambda p, i: F.when(
-            F.aggregate(
-                F.zip_with(v, p, lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
+            _dot(v, p) > 0,
             # SQL shiftleft accepts a column bit-count; the Python
             # wrapper F.shiftleft only takes a literal int
             F.call_function("shiftleft", F.lit(1).cast("long"), i),
@@ -682,11 +740,8 @@ def _lsh_hashed(
     bucket = F.aggregate(
         bits, F.lit(0).cast("long"), lambda acc, x: acc + x
     )
-    norm = F.sqrt(
-        F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
-    )
     return emb.crossJoin(F.broadcast(pl_frame)).select(
-        F.col(id_col), v.alias("__v"), bucket.alias("__bkt"), norm.alias("__n")
+        F.col(id_col), v.alias("__v"), bucket.alias("__bkt"), _norm(v).alias("__n")
     )
 
 
@@ -711,28 +766,14 @@ def embedding_near_dups(
     production configs don't blow up codegen; the 2-arg transform
     lambda's index argument supplies each plane's bit weight."""
     hashed = _lsh_hashed(emb, vec_col, id_col, n_planes, seed)
-    hashed = _cap_buckets(hashed, ["__bkt"], max_bucket_size)
-    a = hashed.alias("a")
-    b = hashed.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.__v", "b.__v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    pairs = _bucket_pairs(
+        hashed, ["__bkt"], max_bucket_size, [id_col, "__v", "__n"]
     )
-    cos = dot / (F.col("a.__n") * F.col("b.__n"))
-    return (
-        a.join(
-            b,
-            (F.col("a.__bkt") == F.col("b.__bkt"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs.select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        _cosine().alias("cosine"),
+    ).filter(F.col("cosine") >= threshold)
 
 
 def semantic_decontaminate(
@@ -751,12 +792,11 @@ def semantic_decontaminate(
     eval-set probe vector clears ``threshold`` — catches paraphrased
     contamination the n-gram `decontaminate` overlap misses.
 
-    Both sides hash with the SAME seeded hyperplanes (the probe frame
-    is typically tiny — a benchmark's worth of embeddings — so its
-    bucket rows broadcast into the join); the exact cosine verify
-    touches only same-bucket pairs. Bucket caps apply per side, like
-    minhash_dedup_incremental. Anti-join the result on corpus id to
-    scrub."""
+    Both sides hash with the SAME seeded hyperplanes; the exact cosine
+    verify touches only same-bucket corpus-vs-probe pairs
+    (_store_pairs, probe as the store side). Bucket caps apply per
+    side, like minhash_dedup_incremental. Anti-join the result on
+    corpus id to scrub."""
     dc = emb.select(F.size(vec_col).alias("d")).first()
     dp = probe_emb.select(F.size(vec_col).alias("d")).first()
     if dc is not None and dp is not None and dc["d"] != dp["d"]:
@@ -766,32 +806,19 @@ def semantic_decontaminate(
             f"corpus ({dc['d']}-dim) and probe ({dp['d']}-dim) embeddings "
             "must come from the same model/dimension"
         )
-    hc = _cap_buckets(
-        _lsh_hashed(emb, vec_col, id_col, n_planes, seed),
-        ["__bkt"],
-        max_bucket_size,
+    hc = _lsh_hashed(emb, vec_col, id_col, n_planes, seed)
+    hp = _lsh_hashed(
+        probe_emb, vec_col, probe_id_col, n_planes, seed
+    ).withColumnRenamed(probe_id_col, id_col)
+    pairs = _store_pairs(
+        hc, hp, ["__bkt"], max_bucket_size, [id_col, "__v", "__n"],
+        new_pairs=False,
     )
-    hp = _cap_buckets(
-        _lsh_hashed(probe_emb, vec_col, probe_id_col, n_planes, seed),
-        ["__bkt"],
-        max_bucket_size,
-    )
-    a, b = hc.alias("a"), hp.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.__v", "b.__v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos = dot / (F.col("a.__n") * F.col("b.__n"))
-    return (
-        a.join(F.broadcast(b), F.col("a.__bkt") == F.col("b.__bkt"))
-        .select(
-            F.col(f"a.{id_col}").alias("corpus_id"),
-            F.col(f"b.{probe_id_col}").alias("probe_id"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs.select(
+        F.col(f"a.{id_col}").alias("corpus_id"),
+        F.col(f"b.{id_col}").alias("probe_id"),
+        _cosine().alias("cosine"),
+    ).filter(F.col("cosine") >= threshold)
 
 
 def connected_components(
@@ -924,7 +951,8 @@ def semantic_dedup_pairs(
     `max_bucket_size` are dropped like every other bucketed verify
     (see _cap_buckets). At 100 TB the assignment is a one-pass
     projection (or a partition column via IVFIndex.write_index) and
-    the verify self-join shuffles on the cluster id."""
+    the in-cluster pairs (_bucket_pairs) shuffle once on the cluster
+    id."""
     from functime_spark.pipeline.similarity import IVFIndex
 
     idx = index
@@ -933,33 +961,17 @@ def semantic_dedup_pairs(
             emb, vec_col=vec_col, id_col=id_col
         )
     v = F.col(vec_col).cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-    )
     assigned = idx.assign(emb, vec_col).select(
-        F.col(id_col), v.alias("__v"), norm.alias("__n"), "__cell"
+        F.col(id_col), v.alias("__v"), _norm(v).alias("__n"), "__cell"
     )
-    assigned = _cap_buckets(assigned, ["__cell"], max_bucket_size)
-    a, b = assigned.alias("a"), assigned.alias("b")
-    dot = F.aggregate(
-        F.zip_with("a.__v", "b.__v", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    pairs = _bucket_pairs(
+        assigned, ["__cell"], max_bucket_size, [id_col, "__v", "__n"]
     )
-    cos = dot / (F.col("a.__n") * F.col("b.__n"))
-    return (
-        a.join(
-            b,
-            (F.col("a.__cell") == F.col("b.__cell"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            cos.alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return pairs.select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        _cosine().alias("cosine"),
+    ).filter(F.col("cosine") >= threshold)
 
 
 def semantic_dedup(
@@ -1281,50 +1293,26 @@ def minhash_dedup_incremental(
     new_sigs = minhash_signatures(
         new_docs, text_col, id_col, n_hashes, shingle_n, hash_fn
     )
-    # consumed by banding + both verify sides; run the shingle sweeps once
+    # consumed by both candidate sides and the updated store; run the
+    # shingle sweeps once
     new_sigs = materialize(new_sigs)
-    nn = minhash_lsh_candidates(
-        new_sigs, id_col, bands, max_bucket_size, hash_fn
-    )
 
-    if store_sigs is None:
-        cands = nn
-        all_sigs = new_sigs
-        updated = new_sigs
-    else:
-        keys = ["band", "band_hash"]
-        banded_new = _cap_buckets(
-            band_rows(new_sigs, id_col, bands, hash_fn), keys, max_bucket_size
-        )
-        banded_old = _cap_buckets(
-            band_rows(store_sigs, id_col, bands, hash_fn), keys, max_bucket_size
-        )
-        cross = banded_new.alias("a").join(
-            banded_old.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash")),
-        ).select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        cands = nn.unionByName(cross).distinct()
-        all_sigs = new_sigs.unionByName(store_sigs)
-        updated = store_sigs.unionByName(new_sigs)
+    def banded(sigs):
+        return band_rows(sigs, id_col, bands, hash_fn, with_sig=True)
 
-    a = all_sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    b = all_sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v
-        )
-    ) / F.size("sig_a")
-    pairs = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
+    pairs = _store_pairs(
+        banded(new_sigs),
+        None if store_sigs is None else banded(store_sigs),
+        ["band", "band_hash"],
+        max_bucket_size,
+        [id_col, "sig"],
+    ).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        _slot_agreement().alias("est_jaccard"),
     )
-    return pairs, updated
+    updated = new_sigs if store_sigs is None else store_sigs.unionByName(new_sigs)
+    return pairs.filter(F.col("est_jaccard") >= threshold).distinct(), updated
 
 
 def exact_dedup_incremental(

@@ -1396,7 +1396,7 @@ def dhash_near_dups(
     band_bits: int = 16,
     max_bucket_size: int = 512,
 ) -> DataFrame:
-    """Near-duplicate IMAGE pairs (r9): dHash fingerprints -> 16-bit
+    """Near-duplicate IMAGE pairs: dHash fingerprints -> 16-bit
     band buckets -> exact Hamming verify <= max_hamming — the
     simhash_near_dups recipe pointed at pixels instead of tokens (the
     scraped-corpus shape: re-encoded/resized copies keep their dHash
@@ -1406,18 +1406,17 @@ def dhash_near_dups(
     # no lineage cut: _bucket_pairs consumes the decode+hash pass
     # exactly once, and the phash rides in the item struct, so the
     # Hamming verify is a pure projection
-    from functime_spark.pipeline.dedup import _bucket_pairs, bit_band_rows
+    from functime_spark.pipeline.dedup import _bucket_pairs, _hamming, bit_band_rows
 
     banded = bit_band_rows(sigs, "phash", band_bits)
     pairs = _bucket_pairs(
         banded, ["band", "band_val"], max_bucket_size, ["media_id", "phash"]
     )
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
     return (
         pairs.select(
             F.col("a.media_id").alias("id_a"),
             F.col("b.media_id").alias("id_b"),
-            ham.alias("hamming"),
+            _hamming("phash").alias("hamming"),
         )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
@@ -1434,7 +1433,7 @@ def dhash_dedup_incremental(
     max_bucket_size: int = 512,
 ) -> tuple:
     """Batch-over-batch perceptual IMAGE dedup against a persisted
-    dHash store (r10) — the daily-crawl shape the exact/minhash
+    dHash store — the daily-crawl shape the exact/minhash
     incremental tiers already pin (dedup.exact_dedup_incremental /
     minhash_dedup_incremental), pointed at pixels: each arriving
     media batch is fingerprinted ONCE and checked against the
@@ -1453,9 +1452,9 @@ def dhash_dedup_incremental(
     Ids must be unique across store and batch (the incremental-dedup
     convention). At 100 TB of images the store is ~one long per image
     and per-batch cost is O(new x matching buckets), never O(corpus);
-    buckets are capped per side before the band join. The streaming
-    twin is stream_dhash_dedup (arrival-order state); this is the
-    horizon-free batch path for unbounded crawls."""
+    buckets are capped per side before the band join (_store_pairs).
+    The streaming twin is stream_dhash_dedup (arrival-order state);
+    this is the horizon-free batch path for unbounded crawls."""
     if store_sigs is not None and not isinstance(store_sigs, DataFrame):
         raise TypeError(
             "store_sigs must be a signature DataFrame (media_id, phash) "
@@ -1463,55 +1462,31 @@ def dhash_dedup_incremental(
             f"first batch; got {type(store_sigs).__name__}"
         )
     from functime_spark.materialize import materialize
+    from functime_spark.pipeline.dedup import _hamming, _store_pairs, bit_band_rows
 
-    # one decode+hash pass over the new batch, pinned: feeds banding,
-    # the updated store, and (via banded rows) both join sides
+    # one decode+hash pass over the new batch, pinned: feeds both
+    # candidate sides and the updated store
     new_sigs = materialize(
         dhash_media(new_media, decoder=decoder, hash_size=hash_size)
     )
-    from functime_spark.pipeline.dedup import (
-        _bucket_pairs,
-        _cap_buckets,
-        bit_band_rows,
-    )
-
-    keys = ["band", "band_val"]
-    banded_new = bit_band_rows(new_sigs, "phash", band_bits)
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    nn_pairs = _bucket_pairs(
-        banded_new, keys, max_bucket_size, ["media_id", "phash"]
-    )
-    nn = nn_pairs.select(
-        F.col("a.media_id").alias("id_a"),
-        F.col("b.media_id").alias("id_b"),
-        ham.alias("hamming"),
-    )
-    if store_sigs is None:
-        pairs = nn.distinct().filter(F.col("hamming") <= max_hamming)
-        return pairs, new_sigs
-    capped_new = _cap_buckets(banded_new, keys, max_bucket_size)
-    capped_old = _cap_buckets(
-        bit_band_rows(store_sigs, "phash", band_bits), keys, max_bucket_size
-    )
-    cross = (
-        capped_new.alias("a")
-        .join(
-            capped_old.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .select(
-            F.col("a.media_id").alias("id_a"),
-            F.col("b.media_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
+    pairs = _store_pairs(
+        bit_band_rows(new_sigs, "phash", band_bits),
+        None if store_sigs is None else bit_band_rows(store_sigs, "phash", band_bits),
+        ["band", "band_val"],
+        max_bucket_size,
+        ["media_id", "phash"],
     )
     pairs = (
-        nn.unionByName(cross)
+        pairs.select(
+            F.col("a.media_id").alias("id_a"),
+            F.col("b.media_id").alias("id_b"),
+            _hamming("phash").alias("hamming"),
+        )
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
-    return pairs, store_sigs.unionByName(new_sigs)
+    updated = new_sigs if store_sigs is None else store_sigs.unionByName(new_sigs)
+    return pairs, updated
 
 
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -1955,11 +1930,15 @@ def video_near_dups(
     struct (the Hamming verify is a pure projection, no join back),
     and its single consumer reads the decode pass exactly once, so
     the signatures need no materialize."""
-    from functime_spark.pipeline.dedup import _bucket_pairs, bit_band_rows
+    from functime_spark.pipeline.dedup import (
+        _best_offset,
+        _bucket_pairs,
+        _hamming,
+        bit_band_rows,
+    )
 
     sigs = video_dhash(media, every_n, hash_size)
     banded = bit_band_rows(sigs, "phash", band_bits)
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
     matched = (
         _bucket_pairs(
             banded,
@@ -1968,7 +1947,7 @@ def video_near_dups(
             ["media_id", "frame_idx", "phash"],
         )
         .filter(F.col("a.media_id") < F.col("b.media_id"))
-        .filter(ham <= max_hamming)
+        .filter(_hamming("phash") <= max_hamming)
         .select(
             F.col("a.media_id").alias("id_a"),
             F.col("b.media_id").alias("id_b"),
@@ -1982,21 +1961,4 @@ def video_near_dups(
     votes = matched.groupBy(
         "id_a", "id_b", (F.col("fa") - F.col("fb")).alias("offset")
     ).agg(F.count(F.lit(1)).alias("n_matches"))
-    best = F.max(
-        F.struct(
-            F.col("n_matches"),
-            (-F.col("offset")).alias("noff"),
-            F.col("offset"),
-        )
-    ).alias("b")
-    return (
-        votes.groupBy("id_a", "id_b")
-        .agg(best)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("b.offset").alias("offset"),
-            F.col("b.n_matches").alias("n_matches"),
-        )
-        .filter(F.col("n_matches") >= min_matches)
-    )
+    return _best_offset(votes, min_matches)

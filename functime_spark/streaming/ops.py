@@ -519,6 +519,68 @@ def stream_anomaly(
     )
 
 
+def _bucket_state(
+    banded: DataFrame,
+    keys: list,
+    cols: list,
+    max_bucket_size: int,
+    match,
+    marker,
+    out_schema: str,
+    state_schema: str,
+) -> DataFrame:
+    """The one streaming bucket-state kernel of the near-dup ops. Per
+    bucket key the state holds the members' ``cols`` (id first) as
+    parallel lists. Each micro-batch's arrivals, in id order, are
+    matched against the earlier members and then join them, up to
+    ``max_bucket_size``: the arrival-order prefix, because a stream
+    cannot retro-drop pairs it already emitted, so it cannot drop an
+    oversize bucket whole as the batch path (_bucket_pairs) does. An
+    arrival at a full bucket emits ``marker(tag, id)`` — an OVERFLOW
+    MARKER row — instead of vanishing silently. ``match(tag, member,
+    arrival)`` returns an output row or None; ``tag`` is the bucket's
+    first key. State shards across executors on the bucket key, the
+    batch path's partitioning, and never expires (near-dups have no
+    watermarkable horizon)."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in out_schema.split(",")]
+
+    def py(v):
+        # numpy scalars/arrays -> Python values the state store takes
+        return v.tolist() if hasattr(v, "tolist") else v
+
+    def update(key, pdfs, state):
+        tag = int(key[0])
+        members = (
+            [[py(v) for v in c] for c in state.get]
+            if state.exists
+            else [[] for _ in cols]
+        )
+        rows = []
+        chunks = [p for p in pdfs if len(p)]
+        if chunks:
+            whole = pd.concat(chunks).sort_values(cols[0])
+            for arrival in zip(*(whole[c] for c in cols)):
+                arrival = [py(v) for v in arrival]
+                if len(members[0]) >= max_bucket_size:
+                    rows.append(marker(tag, arrival[0]))
+                    continue
+                for member in zip(*members):
+                    row = match(tag, member, arrival)
+                    if row is not None:
+                        rows.append(row)
+                for m, v in zip(members, arrival):
+                    m.append(v)
+        state.update(tuple(members))
+        if rows:
+            yield pd.DataFrame(rows, columns=names)
+
+    return banded.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, state_schema, "append", "NoTimeout"
+    )
+
+
 def stream_minhash_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -539,94 +601,55 @@ def stream_minhash_dedup(
     Shape: the signature + banding projection is STATELESS (the exact
     band payload of the batch op, via pipeline.dedup.band_rows — one
     definition, no drift); the only state is per-(band, band_hash) —
-    the bucket's (id, signature) list. Oversize buckets: the batch
-    fallback sees each final bucket whole and DROPS buckets larger
-    than ``max_bucket_size`` exactly like minhash_lsh_candidates (so
-    its pair set is oracle-identical at any scale); the streaming path
-    cannot retro-drop already-emitted pairs, so it keeps the
-    arrival-order prefix instead — the one documented divergence.
-    A streaming arrival landing in an already-FULL bucket is not
-    compared silently: it emits an OVERFLOW MARKER row
-    (id_a == id_b == its id, est_jaccard = -1.0) so consumers can
-    count dropped comparisons per hot bucket (filter
-    ``est_jaccard >= 0`` for the pair stream). State shards across
-    executors on the bucket key, exactly how the batch LSH join
-    partitions.
+    the bucket's (id, signature) list (_bucket_state). Oversize
+    buckets: a batch frame pairs through _bucket_pairs and DROPS
+    buckets larger than ``max_bucket_size`` whole, exactly like
+    minhash_dedup (so its pair set is oracle-identical at any scale);
+    the streaming path keeps the arrival-order prefix instead — the
+    one documented divergence. A streaming arrival landing in an
+    already-FULL bucket is not compared silently: it emits an
+    OVERFLOW MARKER row (id_a == id_b == its id, est_jaccard = -1.0)
+    so consumers can count dropped comparisons per hot bucket (filter
+    ``est_jaccard >= 0`` for the pair stream).
 
     For unbounded crawls prefer the persisted-store batch twin
     (pipeline.dedup.minhash_dedup_incremental): streaming dedup state
     never expires here (near-dups have no watermarkable horizon).
     """
-    import pandas as pd
-
-    from functime_spark.pipeline.dedup import band_rows, minhash_signatures
+    from functime_spark.pipeline.dedup import (
+        _bucket_pairs,
+        _slot_agreement,
+        band_rows,
+        minhash_signatures,
+    )
 
     sigs = minhash_signatures(docs, text_col, id_col, n_hashes, shingle_n, hash_fn)
     banded = band_rows(sigs, id_col, bands, hash_fn, with_sig=True)
-
-    out_schema = "id_a bigint, id_b bigint, est_jaccard double, band int"
-    state_schema = "ids array<bigint>, sigs array<array<bigint>>"
-
-    def scan_bucket(band, pdf, ids, sigs_st, cap, markers=False):
-        """Score each row (in id order) against earlier bucket members,
-        appending to the member lists up to ``cap``. Shared by the
-        streaming state update and the batch grouped map; ``markers``
-        (streaming only) emits the overflow marker row for arrivals a
-        full bucket can no longer compare or admit."""
-        rows = []
-        for did, sg in zip(pdf[id_col], pdf["sig"]):
-            did = int(did)
-            sg = [int(x) for x in sg]
-            if len(ids) < cap:
-                for pid, psig in zip(ids, sigs_st):
-                    est = sum(a == b for a, b in zip(psig, sg)) / float(n_hashes)
-                    if est >= threshold:
-                        rows.append((pid, did, est, band))
-                ids.append(did)
-                sigs_st.append(sg)
-            elif markers:
-                rows.append((did, did, -1.0, band))
-        return rows
+    keys = ["band", "band_hash"]
 
     if docs.isStreaming:
 
-        def update(key, pdfs, state):
-            band = int(key[0])
-            ids, sigs_st = (
-                (list(state.get[0]), [list(x) for x in state.get[1]])
-                if state.exists
-                else ([], [])
-            )
-            rows = []
-            chunks = [p for p in pdfs if len(p)]
-            if chunks:
-                whole = pd.concat(chunks).sort_values(id_col)
-                rows = scan_bucket(
-                    band, whole, ids, sigs_st, max_bucket_size, markers=True
-                )
-            state.update((ids, sigs_st))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["id_a", "id_b", "est_jaccard", "band"]
-                )
+        def match(band, member, arrival):
+            (pid, psig), (did, sig) = member, arrival
+            est = sum(a == b for a, b in zip(psig, sig)) / float(n_hashes)
+            return (pid, did, est, band) if est >= threshold else None
 
-        return banded.groupBy("band", "band_hash").applyInPandasWithState(
-            update, out_schema, state_schema, "append", "NoTimeout"
+        return _bucket_state(
+            banded, keys, [id_col, "sig"], max_bucket_size, match,
+            lambda band, did: (did, did, -1.0, band),
+            "id_a bigint, id_b bigint, est_jaccard double, band int",
+            "ids array<bigint>, sigs array<array<bigint>>",
         )
 
-    def batch_bucket(pdf):
-        cols = ["id_a", "id_b", "est_jaccard", "band"]
-        if len(pdf) > max_bucket_size:
-            # whole-bucket drop, matching _cap_buckets (and the oracle)
-            return pd.DataFrame(columns=cols)
-        band = int(pdf["band"].iloc[0])
-        rows = scan_bucket(
-            band, pdf.sort_values(id_col), [], [], max_bucket_size
+    return (
+        _bucket_pairs(banded, keys, max_bucket_size, [id_col, "sig", "band"])
+        .select(
+            F.col(f"a.{id_col}").cast("long").alias("id_a"),
+            F.col(f"b.{id_col}").cast("long").alias("id_b"),
+            _slot_agreement().alias("est_jaccard"),
+            F.col("a.band").alias("band"),
         )
-        return pd.DataFrame(rows, columns=cols)
-
-    return banded.groupBy("band", "band_hash").applyInPandas(
-        batch_bucket, schema=out_schema
+        .filter(F.col("est_jaccard") >= threshold)
     )
 
 
@@ -638,7 +661,7 @@ def stream_dhash_dedup(
     band_bits: int = 16,
     max_bucket_size: int = 512,
 ) -> DataFrame:
-    """Streaming perceptual IMAGE near-dup detection (r9): the
+    """Streaming perceptual IMAGE near-dup detection: the
     stream_minhash_dedup recipe pointed at pixels — as media rows
     arrive, each is dHash-fingerprinted (multimodal.dhash_media, the
     same stateless mapInPandas the batch op uses) and checked against
@@ -649,83 +672,49 @@ def stream_dhash_dedup(
 
     Shape: signature + banding are STATELESS projections; the only
     state is per-(band, band_val) — the bucket's (id, phash) list,
-    capped at ``max_bucket_size`` (the batch fallback drops oversize
-    buckets whole, matching dhash_near_dups/_cap_buckets so its
-    deduped pair set is oracle-identical; the streaming path keeps the
-    arrival-order prefix — the same documented divergence as
-    stream_minhash_dedup). An arrival landing in an already-full
-    bucket emits an OVERFLOW MARKER row (id_a == id_b == its id,
-    hamming = -1) instead of vanishing silently — consumers filter
-    ``hamming >= 0`` for the pair stream and count markers to detect
-    hot bands whose comparisons were dropped. State is two longs per
-    member. For unbounded crawls the batch banded join over a
-    persisted phash store is the horizon-free twin
-    (dhash_dedup_incremental; near-dups never expire, so no watermark
-    applies)."""
-    import pandas as pd
-
-    from functime_spark.pipeline.dedup import bit_band_rows
+    capped at ``max_bucket_size`` (_bucket_state; a batch frame pairs
+    through _bucket_pairs and drops oversize buckets whole, matching
+    dhash_near_dups so its deduped pair set is oracle-identical; the
+    streaming path keeps the arrival-order prefix — the same
+    documented divergence as stream_minhash_dedup). An arrival landing
+    in an already-full bucket emits an OVERFLOW MARKER row
+    (id_a == id_b == its id, hamming = -1) instead of vanishing
+    silently — consumers filter ``hamming >= 0`` for the pair stream
+    and count markers to detect hot bands whose comparisons were
+    dropped. State is two longs per member. For unbounded crawls the
+    batch banded join over a persisted phash store is the
+    horizon-free twin (dhash_dedup_incremental; near-dups never
+    expire, so no watermark applies)."""
+    from functime_spark.pipeline.dedup import _bucket_pairs, _hamming, bit_band_rows
     from functime_spark.pipeline.multimodal import dhash_media
 
     sigs = dhash_media(media, decoder=decoder, hash_size=hash_size)
     banded = bit_band_rows(sigs, "phash", band_bits)
-
-    out_schema = "id_a bigint, id_b bigint, hamming int, band int"
-    state_schema = "ids array<bigint>, phashes array<bigint>"
-
-    def scan_bucket(band, pdf, ids, hashes, cap, markers=False):
-        rows = []
-        for mid, ph in zip(pdf["media_id"], pdf["phash"]):
-            mid, ph = int(mid), int(ph)
-            if len(ids) < cap:
-                for pid, pph in zip(ids, hashes):
-                    ham = bin((pph ^ ph) & ((1 << 64) - 1)).count("1")
-                    if ham <= max_hamming:
-                        rows.append((pid, mid, ham, band))
-                ids.append(mid)
-                hashes.append(ph)
-            elif markers:
-                rows.append((mid, mid, -1, band))
-        return rows
+    keys = ["band", "band_val"]
 
     if media.isStreaming:
 
-        def update(key, pdfs, state):
-            band = int(key[0])
-            ids, hashes = (
-                (list(state.get[0]), list(state.get[1]))
-                if state.exists
-                else ([], [])
-            )
-            rows = []
-            chunks = [p for p in pdfs if len(p)]
-            if chunks:
-                whole = pd.concat(chunks).sort_values("media_id")
-                rows = scan_bucket(
-                    band, whole, ids, hashes, max_bucket_size, markers=True
-                )
-            state.update((ids, hashes))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["id_a", "id_b", "hamming", "band"]
-                )
+        def match(band, member, arrival):
+            (pid, pph), (mid, ph) = member, arrival
+            ham = bin((pph ^ ph) & ((1 << 64) - 1)).count("1")
+            return (pid, mid, ham, band) if ham <= max_hamming else None
 
-        return banded.groupBy("band", "band_val").applyInPandasWithState(
-            update, out_schema, state_schema, "append", "NoTimeout"
+        return _bucket_state(
+            banded, keys, ["media_id", "phash"], max_bucket_size, match,
+            lambda band, mid: (mid, mid, -1, band),
+            "id_a bigint, id_b bigint, hamming int, band int",
+            "ids array<bigint>, phashes array<bigint>",
         )
 
-    def batch_bucket(pdf):
-        cols = ["id_a", "id_b", "hamming", "band"]
-        if len(pdf) > max_bucket_size:
-            return pd.DataFrame(columns=cols)
-        band = int(pdf["band"].iloc[0])
-        rows = scan_bucket(
-            band, pdf.sort_values("media_id"), [], [], max_bucket_size
+    return (
+        _bucket_pairs(banded, keys, max_bucket_size, ["media_id", "phash", "band"])
+        .select(
+            F.col("a.media_id").alias("id_a"),
+            F.col("b.media_id").alias("id_b"),
+            _hamming("phash").alias("hamming"),
+            F.col("a.band").alias("band"),
         )
-        return pd.DataFrame(rows, columns=cols)
-
-    return banded.groupBy("band", "band_val").applyInPandas(
-        batch_bucket, schema=out_schema
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -735,78 +724,46 @@ def stream_audio_dedup(
     max_bucket_size: int = 1024,
     **kernel_kwargs,
 ) -> DataFrame:
-    """Streaming AUDIO near-dup detection (r11): the stream_dhash
-    recipe pointed at constellation fingerprints — as clips arrive,
-    each is landmark-hashed (audio.audio_fingerprints, the same
-    stateless mapInPandas the batch op uses) and checked against
-    every earlier clip sharing a landmark, emitting one
-    (id_a, id_b, fp) MATCH EVENT per shared hash (id_a = the earlier
-    arrival). Consumers aggregate ``groupBy(id_a, id_b).count() >=
-    min_matches`` for the pair verdict — the count equals
-    audio_near_dups' n_matches when arrival order == id order and no
-    bucket overflows.
+    """Streaming AUDIO near-dup detection: the stream_dhash recipe
+    pointed at constellation fingerprints — as clips arrive, each is
+    landmark-hashed (audio.audio_fingerprints, the same stateless
+    mapInPandas the batch op uses) and checked against every earlier
+    clip sharing a landmark, emitting one (id_a, id_b, fp) MATCH EVENT
+    per shared hash (id_a = the earlier arrival). Consumers aggregate
+    ``groupBy(id_a, id_b).count() >= min_matches`` for the pair
+    verdict — the count equals audio_near_dups' n_matches when arrival
+    order == id order and no bucket overflows.
 
     Shape: fingerprinting is a STATELESS projection; the only state
     is per-fp — the bucket's id list, capped at ``max_bucket_size``
-    (the batch fallback drops oversize buckets whole, matching
-    _cap_buckets so its aggregated pair counts are oracle-identical;
-    the streaming path keeps the arrival-order prefix — the same
-    documented divergence as stream_minhash_dedup). An arrival
-    landing in a full bucket emits an OVERFLOW MARKER row
+    (_bucket_state; a batch frame pairs through _bucket_pairs and
+    drops oversize buckets whole, so its aggregated pair counts are
+    oracle-identical; the streaming path keeps the arrival-order
+    prefix — the same documented divergence as stream_minhash_dedup).
+    An arrival landing in a full bucket emits an OVERFLOW MARKER row
     (id_a == id_b == its id, fp = -1) instead of vanishing silently.
     State is one long per member. For unbounded crawls the batch
     join over a persisted fingerprint store is the horizon-free twin
     (audio.audio_dedup_incremental; near-dups never expire, so no
     watermark applies)."""
-    import pandas as pd
-
     from functime_spark.pipeline.audio import audio_fingerprints
+    from functime_spark.pipeline.dedup import _bucket_pairs
 
     fps = audio_fingerprints(media, decoder=decoder, **kernel_kwargs)
 
-    out_schema = "id_a bigint, id_b bigint, fp bigint"
-    state_schema = "ids array<bigint>"
-
-    def scan_bucket(fp, pdf, ids, cap, markers=False):
-        rows = []
-        for mid in pdf["media_id"]:
-            mid = int(mid)
-            if len(ids) < cap:
-                for pid in ids:
-                    rows.append((pid, mid, fp))
-                ids.append(mid)
-            elif markers:
-                rows.append((mid, mid, -1))
-        return rows
-
     if media.isStreaming:
-
-        def update(key, pdfs, state):
-            fp = int(key[0])
-            ids = list(state.get[0]) if state.exists else []
-            rows = []
-            chunks = [p for p in pdfs if len(p)]
-            if chunks:
-                whole = pd.concat(chunks).sort_values("media_id")
-                rows = scan_bucket(
-                    fp, whole, ids, max_bucket_size, markers=True
-                )
-            state.update((ids,))
-            if rows:
-                yield pd.DataFrame(rows, columns=["id_a", "id_b", "fp"])
-
-        return fps.groupBy("fp").applyInPandasWithState(
-            update, out_schema, state_schema, "append", "NoTimeout"
+        return _bucket_state(
+            fps, ["fp"], ["media_id"], max_bucket_size,
+            lambda fp, member, arrival: (member[0], arrival[0], fp),
+            lambda fp, mid: (mid, mid, -1),
+            "id_a bigint, id_b bigint, fp bigint",
+            "ids array<bigint>",
         )
 
-    def batch_bucket(pdf):
-        cols = ["id_a", "id_b", "fp"]
-        if len(pdf) > max_bucket_size:
-            return pd.DataFrame(columns=cols)
-        fp = int(pdf["fp"].iloc[0])
-        rows = scan_bucket(
-            fp, pdf.sort_values("media_id"), [], max_bucket_size
-        )
-        return pd.DataFrame(rows, columns=cols)
-
-    return fps.groupBy("fp").applyInPandas(batch_bucket, schema=out_schema)
+    # a clip repeating a landmark pairs with itself here, as it does on
+    # the stream: one match event per pair of bucket entries
+    return _bucket_pairs(fps, ["fp"], max_bucket_size, ["media_id", "fp"]).select(
+        F.col("a.media_id").alias("id_a"),
+        F.col("b.media_id").alias("id_b"),
+        F.col("a.fp").alias("fp"),
+    )

@@ -825,7 +825,10 @@ def test_boosted_trees_d2_fit_is_two_actions_per_round(spark):
     import numpy as np
     from pyspark.sql import DataFrame
 
-    from functime_spark.forecasting.tree import boosted_trees_d2
+    from functime_spark.forecasting.tree import (
+        _scored_candidates,
+        boosted_trees_d2,
+    )
 
     rng = np.random.default_rng(3)
     rows = [
@@ -859,7 +862,7 @@ def test_boosted_trees_d2_fit_is_two_actions_per_round(spark):
         .select("__y", *[F.col(c).cast("int").alias(f"__b{j}")
                          for j, c in enumerate(["l1", "l2"])])
     )
-    scored = fc._scored_candidates(
+    scored = _scored_candidates(
         binned, [F.col("__b0"), F.col("__b1")], resid
     )
     plan = scored._jdf.queryExecution().executedPlan().toString()
@@ -1448,7 +1451,7 @@ def test_boosted_stumps_default_bounded_one_action_per_round(spark):
     import numpy as np
     from pyspark.sql import DataFrame
 
-    from functime_spark.forecasting.tree import boosted_stumps
+    from functime_spark.forecasting.tree import _scored_candidates, boosted_stumps
 
     rng = np.random.default_rng(5)
     rows = [
@@ -1481,7 +1484,7 @@ def test_boosted_stumps_default_bounded_one_action_per_round(spark):
     # plan pin: partitioned windows only — in EXACT mode as well
     resid = F.col("y").cast("double") - F.lit(fc.state["f0"])
     design = y.selectExpr("y", "y AS l1", "y AS l2")
-    scored = boosted_stumps._scored_candidates(
+    scored = _scored_candidates(
         design, [F.col("l1").cast("double"), F.col("l2").cast("double")], resid
     )
     plan = scored._jdf.queryExecution().executedPlan().toString()
@@ -1653,6 +1656,30 @@ def test_knn_scale_wall_warn_and_auto_route(spark):
     with pytest.warns(UserWarning, match="recursive"):
         fc_dir.predict(3).count()
     assert "ivf" not in fc_dir.state
+
+
+def test_knn_scale_evals_runs_no_job(spark):
+    """The scale-wall estimate reads the entity count taken by the
+    fit's own count action: a predict (and each backtest refit's
+    predict) pays no extra Spark job for it."""
+    from functime_spark.forecasting.knn import knn
+
+    rows = [
+        (e, t, float((t * 7 + i) % 11))
+        for i, e in enumerate(("a", "b", "c"))
+        for t in range(30)
+    ]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    fc = knn(freq="1i", lags=3, n_neighbors=2).fit(y)
+    sc = spark.sparkContext
+    group = "test-knn-scale-evals"
+    sc.setJobGroup(group, "knn scale-wall estimate")
+    try:
+        evals = fc._scale_evals(3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert evals == float(len(fc.state["train"][0]) * 3 * 3)
 
 
 def test_ann_clone_and_backtest_roundtrip(spark):

@@ -5590,8 +5590,15 @@ def test_bucket_pairs_matches_cap_window_self_join(spark):
     """_bucket_pairs must emit exactly the candidate set of the
     cap-window + null-safe self-join, including the bucket wall: a hot
     key at 10x the cap and an over-cap NULL-key bucket drop whole,
-    while an under-cap NULL-key bucket still pairs."""
-    from functime_spark.pipeline.dedup import _bucket_pairs, _cap_buckets
+    while an under-cap NULL-key bucket still pairs. _store_pairs adds
+    exactly the cap-window equi-join against a store, each side capped
+    on its own: a key hot on one side only pairs nothing across, and a
+    NULL key pairs within the batch but never across."""
+    from functime_spark.pipeline.dedup import (
+        _bucket_pairs,
+        _cap_buckets,
+        _store_pairs,
+    )
 
     cap = 10
     rows = (
@@ -5623,6 +5630,31 @@ def test_bucket_pairs_matches_cap_window_self_join(spark):
     assert all(a < b for a, b in got)
     assert {(400, 401), (400, 402), (401, 402)} <= got
     assert not any(a >= 100 and a < 400 for a, _ in got)
+
+    store_rows = (
+        [(1000 + i, 0, i % 3) for i in range(9)]
+        + [(1100 + i, 0, 3) for i in range(10 * cap)]  # hot in the store only
+        + [(1300 + i, 0, 99) for i in range(2)]  # hot in the batch only
+        + [(1400 + i, 1, None) for i in range(2)]  # NULL key on both sides
+    )
+    store = spark.createDataFrame(store_rows, "id long, g long, b long")
+    got_store = sorted(
+        (r["a"]["id"], r["b"]["id"])
+        for r in _store_pairs(df, store, keys, cap, ["id"]).collect()
+    )
+    cross = capped.alias("x").join(
+        _cap_buckets(store, keys, cap).alias("y"),
+        (F.col("x.g") == F.col("y.g")) & (F.col("x.b") == F.col("y.b")),
+    )
+    want_cross = [
+        (r["xi"], r["yi"])
+        for r in cross.select(
+            F.col("x.id").alias("xi"), F.col("y.id").alias("yi")
+        ).collect()
+    ]
+    assert got_store == sorted(list(want) + want_cross)
+    assert not any(b >= 1100 for _, b in got_store)
+    assert any(1000 <= b < 1100 for _, b in got_store)
 
 
 def test_cosine_topk_kernel_matches_expression(emb):

@@ -141,28 +141,32 @@ def test_newton_polish_aggregate_is_native(events):
 @requires_local_checkpoint
 def test_dedup_signature_materialization_pins_scan_count(spark):
     """The expensive signature pass runs exactly ONCE per near-dup
-    call. minhash_dedup still pins its signatures (three consumers:
-    banding + both verify joins — the lazy checkpoint enters the plan
-    as an RDD scan, zero source scans). simhash_near_dups (r11) has a
-    SINGLE consumer since the one-aggregate bucket-pairs rewrite, so
-    it deliberately carries NO checkpoint: exactly one source scan,
-    the optimal shape (the old pin of zero scans existed to stop the
-    self-join from running the token-vote projection twice — that
-    self-join no longer exists)."""
+    call. minhash_dedup and simhash_near_dups each have a SINGLE
+    consumer of their signatures — _bucket_pairs, with the signature
+    riding in the item struct so the verify is a projection, not a
+    join back — so neither carries a checkpoint: exactly one source
+    scan each, the optimal shape."""
     from functime_spark.pipeline.dedup import minhash_dedup, simhash_near_dups
     from functime_spark.plans.checks import count_file_scans
     from functime_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    assert count_file_scans(minhash_dedup(docs)) == 0
+    assert count_file_scans(minhash_dedup(docs)) == 1
     assert count_file_scans(simhash_near_dups(docs)) == 1
 
 
 def test_bucket_pairs_single_exchange(spark):
     """The bucket wall (_cap_buckets' count window) and the collect
     share one hash partitioning: _bucket_pairs plans to ONE exchange
-    and no join, hot key or not."""
-    from functime_spark.pipeline.dedup import _bucket_pairs
+    and no join, hot key or not. The embedding operators pair through
+    it too: semantic_dedup_pairs plans no join at all, and the only
+    join left in embedding_near_dups is the hyperplane frame's
+    one-row broadcast cross join — no pairing join."""
+    from functime_spark.pipeline.dedup import (
+        _bucket_pairs,
+        embedding_near_dups,
+        semantic_dedup_pairs,
+    )
     from functime_spark.plans.checks import count_exchanges, explain_str
 
     rows = [(i, i % 7) for i in range(60)] + [(100 + i, 99) for i in range(100)]
@@ -170,6 +174,18 @@ def test_bucket_pairs_single_exchange(spark):
     pairs = _bucket_pairs(df, ["b"], 10, ["id"])
     assert count_exchanges(pairs) == 1
     assert "Join" not in explain_str(pairs, "simple")
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * j) % 7) - 3.0 for j in range(8)]) for i in range(50)],
+        "vec_id long, embedding array<double>",
+    )
+    assert "Join" not in explain_str(semantic_dedup_pairs(emb), "simple")
+    joins = [
+        line
+        for line in explain_str(embedding_near_dups(emb), "simple").split("\n")
+        if "Join" in line
+    ]
+    assert len(joins) == 1 and "BroadcastNestedLoopJoin" in joins[0], joins
 
 
 def test_text_scrub_ops_shuffle_free(spark):

@@ -60,6 +60,12 @@ def main():
     argv = [a for a in argv if a != "--ansi"]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        # a mistyped name would otherwise run nothing and exit 0
+        print("unknown queries:", " ".join(unknown))
+        sys.exit(2)
     extra = {"spark.sql.ansi.enabled": "true"} if ansi else None
     spark = get_session("correctness", extra_conf=extra)
     if ansi:
@@ -69,7 +75,6 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_con(sf_dir)
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
     failures = []
