@@ -1,4 +1,14 @@
-"""Forecasters: naive family (pure DataFrame) + global AR models (MLlib)."""
+"""Forecasters, all on one `Forecaster` lifecycle (fit / predict /
+backtest / conformalize, `base.py`):
+
+- classical per-entity families (naive, snaive, ses, holt, theta,
+  croston, holt_winters): one per-entity state frame each, forecasts
+  as closed-form horizon expressions (`EntityForecaster`);
+- global autoregressive models on the lag design (linear, censored,
+  knn/ann, trees), sharing one fh-step recursion kernel (`_ar.py`);
+- ensembles over both: elite (per-entity selection and blending) and
+  the automl searches.
+"""
 
 from functime_spark.forecasting.base import Forecaster  # noqa: F401
 from functime_spark.forecasting.linear import (  # noqa: F401

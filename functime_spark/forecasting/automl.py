@@ -114,18 +114,6 @@ class _auto_base(Forecaster):
         self.best_params_: dict = {}
         self.n_fit_trials_: int = 0
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "min_lags": self.min_lags,
-            "max_lags": self.max_lags,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
-
     def _space(self) -> list:
         """List of param dicts to try (beyond lags)."""
         return [{}]
@@ -454,7 +442,7 @@ class auto_lightgbm(_auto_base):
 
 
 class _auto_smoothing(_auto_base):
-    """Parameter search for the exponential-smoothing family (r11):
+    """Parameter search for the exponential-smoothing family:
     the smoothing constants ARE the hyperparameters — there is no lag
     design matrix — so candidates come straight from _space() and the
     CFO space carries no lags dim. Reuses the ENTIRE _auto_base
@@ -483,16 +471,6 @@ class _auto_smoothing(_auto_base):
             cfo_max_trials=cfo_max_trials,
             **family_kwargs,
         )
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
 
     def _candidates(self) -> list:
         return [
@@ -614,17 +592,6 @@ class _fixed_lag_cv(_auto_base):
             search=search,
             **family_kwargs,
         )
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.min_lags,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "search": self.search,
-            "cfo_max_trials": self.cfo_max_trials,
-            **self.family_kwargs,
-        }
 
 
 class lasso_cv(_fixed_lag_cv):

@@ -5,13 +5,18 @@ driver-held DataFrames: `cutoffs` (entity, low = max time — ref
 forecaster.py:196-199) plus whatever the concrete forecaster stores
 (last values, lag buffers, fitted model params).
 
+Two shapes share this lifecycle: the global autoregressive models
+(`_ar.ARForecaster`) and the classical per-entity families
+(`EntityForecaster`: one per-entity state frame, a closed-form
+horizon expression over it).
+
 The reference's entity string-cache (model.py:10-44) is skipped:
 Tungsten handles string group keys natively (SURVEY §4.2).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from functime_spark.panel import panel_cols
@@ -72,6 +77,18 @@ class Forecaster(SparkStatePickleMixin):
         predictions, used by both predict() and backtest()."""
         raise NotImplementedError
 
+    def _clone(self) -> "Forecaster":
+        """An unfitted copy for a backtest split: a new object of the
+        same type holding the instance's attributes (shallow) and an
+        empty state. Not copy.copy: the pickle mixin's __getstate__
+        would collect every fitted state frame. __init__ does not run
+        again, so constructor-time work (the GBT flavours'
+        hyperparameter translation and its warnings) happens once."""
+        fc = object.__new__(type(self))
+        fc.__dict__.update(self.__dict__)
+        fc.state = {}
+        return fc
+
     def __call__(self, y: DataFrame, fh: int, X: DataFrame | None = None, X_future: DataFrame | None = None) -> DataFrame:
         return self.fit(y, X).predict(fh, X_future)
 
@@ -100,7 +117,6 @@ class Forecaster(SparkStatePickleMixin):
         step_size: int = 1,
         n_splits: int = 5,
         window_size: int | None = None,
-        materialize: bool = True,
         X: DataFrame | None = None,
     ) -> DataFrame:
         """Expanding/sliding-window refit-and-predict; returns stacked
@@ -110,7 +126,7 @@ class Forecaster(SparkStatePickleMixin):
         step join), so irregular panels backtest correctly — the
         reference assumes freq-regular series here.
 
-        The stacked result is localCheckpoint-ed by default: it is tiny
+        The stacked result is localCheckpoint-ed: it is tiny
         (n_splits x n_entities x test_size rows) while its lineage embeds
         n_splits window-split + refit subtrees. Materializing cuts every
         downstream plan (conformalize / rank / elite) from ~20 re-scans
@@ -119,9 +135,7 @@ class Forecaster(SparkStatePickleMixin):
         reuse in the deep union-of-joins plan (session-sticky row
         duplication — every output row matched a second, column-swapped
         quantile row; spark.sql.exchange.reuse=false confirmed the
-        diagnosis). Pass materialize=False to keep the lazy plan."""
-        from pyspark.sql import Window
-
+        diagnosis)."""
         from functime_spark.operators.cross_validation import _annotate, _window_split
 
         p = panel_cols(y)
@@ -136,11 +150,11 @@ class Forecaster(SparkStatePickleMixin):
         )
         preds = []
         for i, (train, test) in splits.items():
-            # refits share self.target_transform (fit-on-transform
-            # resets its state each split; the loop is sequential, so
-            # each split's invert sees that split's fitted params)
-            fitted = type(self)(**self._init_kwargs())
-            fitted.target_transform = self.target_transform
+            # each split refits a clone. Clones share
+            # self.target_transform (fit-on-transform resets its state
+            # each split; the loop is sequential, so each split's
+            # invert sees that split's fitted params)
+            fitted = self._clone()
             # short-coverage entities (series shorter than this split's
             # test window, or too short for a forecaster's init — e.g.
             # holt_winters' two-cycle requirement) drop out of the
@@ -174,9 +188,8 @@ class Forecaster(SparkStatePickleMixin):
         out = preds[0]
         for nxt in preds[1:]:
             out = out.unionByName(nxt)
-        if materialize:
-            # eager: runs while the annotated frame is still cached
-            out = _materialize(out)
+        # eager: runs while the annotated frame is still cached
+        out = _materialize(out)
         annotated[0].unpersist()
         return out
 
@@ -240,8 +253,61 @@ class Forecaster(SparkStatePickleMixin):
             p.entity, p.time, f"__pair.{target}", "__pair.quantile"
         )
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq}
+
+class EntityForecaster(Forecaster):
+    """Fit/predict skeleton of the classical per-entity families
+    (naive, snaive, ses, holt, theta, croston, holt_winters). A family
+    supplies two things: `_fit_entities`, one frame (entity, low,
+    params...) with one row per entity, and `_horizon`, the forecast
+    at the 0-based `step` column as an expression over that row.
+    Cutoffs and the step explode are served here, once."""
+
+    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+        entities = self._fit_entities(y)
+        self.state["entities"] = entities
+        # cutoffs ride in the same per-entity frame: predict's future
+        # ranges read it, not a second full-panel aggregate
+        self.state["cutoffs"] = entities.select(self.state["panel"].entity, "low")
+
+    def _fit_entities(self, y: DataFrame) -> DataFrame:  # pragma: no cover
+        raise NotImplementedError
+
+    def _horizon(self, step: Column) -> Column:  # pragma: no cover
+        raise NotImplementedError
+
+    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
+        entity = self.state["panel"].entity
+        rows = self.state["entities"].select(
+            "*", F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
+        )
+        return rows.select(
+            entity, "step", self._horizon(F.col("step")).alias("__yhat")
+        )
+
+
+def positions(y: DataFrame, p) -> DataFrame:
+    """(entity, __y double, __t 1-based position, time): the one
+    window pass the closed-form smoothing families (ses, holt, theta,
+    croston) fit over."""
+    w = Window.partitionBy(p.entity).orderBy(p.time)
+    return y.select(
+        p.entity,
+        F.col(p.target).cast("double").alias("__y"),
+        F.row_number().over(w).alias("__t"),
+        F.col(p.time),
+    )
+
+
+def ses_weight(alpha: float, t: Column, n: Column) -> Column:
+    """Closed-form SES weight of position t (1-based) in a length-n
+    sequence. The recursion l_t = a x_t + (1-a) l_{t-1}, l_1 = x_1
+    unrolls to l_n = (1-a)^(n-1) x_1 + sum_{t>=2} a (1-a)^(n-t) x_t.
+    The exponents are exact integers, so every caller's weighted sum
+    is bit-stable."""
+    a = float(alpha)
+    return F.when(t == 1, F.pow(F.lit(1.0 - a), n - 1)).otherwise(
+        F.lit(a) * F.pow(F.lit(1.0 - a), n - t)
+    )
 
 
 def _akey(a: float) -> str:

@@ -121,16 +121,6 @@ class censored_model(ARForecaster):
         self.threshold = threshold
         self.clf_params = clf_params
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "threshold": self.threshold,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "clf_params": self.clf_params,
-        }
-
     def _fit_design(self, design: DataFrame, feature_cols: list, target: str):
         """One (classifier, above-reg, below-reg) triple."""
         thr = float(self.threshold)
@@ -188,12 +178,3 @@ class zero_inflated_model(censored_model):
             target_transform=target_transform,
             clf_params=clf_params,
         )
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "clf_params": self.clf_params,
-        }

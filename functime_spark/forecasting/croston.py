@@ -24,13 +24,14 @@ frame is n_entities rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.materialize import materialize
 
 
-class croston(Forecaster):
+class croston(EntityForecaster):
     """Croston intermittent-demand forecaster; `alpha` in (0, 1) is
     the shared SES constant, `variant` is 'croston' (classic) or
     'sba' (Syntetos-Boylan (1 - alpha/2) bias correction). Zeros are
@@ -46,25 +47,9 @@ class croston(Forecaster):
         self.alpha = alpha
         self.variant = variant
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "alpha": self.alpha,
-            "variant": self.variant,
-        }
-
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        a = float(self.alpha)
-        w = Window.partitionBy(p.entity).orderBy(p.time)
-        rows = y.select(
-            p.entity,
-            F.col(p.target).cast("double").alias("__y"),
-            F.row_number().over(w).alias("__t"),
-            F.col(p.time),
-        )
-        from functime_spark.materialize import materialize
-
+        rows = positions(y, p)
         cut = materialize(
             rows.groupBy(p.entity).agg(F.max(p.time).alias("low"))
         )
@@ -79,32 +64,21 @@ class croston(Forecaster):
             ).cast("double").alias("__p"),
             F.row_number().over(wd).alias("__i"),  # demand index 1..k
         )
-        # closed-form SES weights over the demand index: x_1 gets
-        # (1-a)^(k-1), x_i (i >= 2) gets a * (1-a)^(k-i) — the theta
-        # recipe, applied to BOTH the size and interval sequences in
-        # the SAME aggregate
+        # closed-form SES weights over the demand index, applied to
+        # BOTH the size and interval sequences in the SAME aggregate
         stats = nz.groupBy(p.entity).agg(F.max("__i").alias("__k"))
         j = nz.join(stats, on=p.entity)
-        back = F.col("__k") - F.col("__i")
-        c = F.when(
-            F.col("__i") == 1,
-            F.pow(F.lit(1.0 - a), F.col("__k") - F.lit(1)),
-        ).otherwise(F.lit(a) * F.pow(F.lit(1.0 - a), back))
+        c = ses_weight(self.alpha, F.col("__i"), F.col("__k"))
         lv = j.groupBy(p.entity).agg(
             F.sum(c * F.col("__z")).alias("__lz"),
             F.sum(c * F.col("__p")).alias("__lp"),
         )
         # all-zero entities have no nz rows: left join -> null levels
         # -> forecast 0
-        self.state["croston"] = materialize(cut.join(lv, on=p.entity, how="left"))
-        self.state["cutoffs"] = self.state["croston"].select(p.entity, "low")
+        return materialize(cut.join(lv, on=p.entity, how="left"))
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        st = self.state["croston"]
+    def _horizon(self, step: Column) -> Column:
         bias = 1.0 - self.alpha / 2.0 if self.variant == "sba" else 1.0
-        step = F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
-        flat = F.coalesce(
+        return F.coalesce(
             F.lit(bias) * F.col("__lz") / F.col("__lp"), F.lit(0.0)
         )
-        return st.select(p.entity, step, flat.alias("__yhat"))

@@ -115,17 +115,6 @@ class elite(Forecaster):
             raise ValueError(f"ensemble_strategy must be mean|lasso, got {ensemble_strategy}")
         self.ensemble_strategy = ensemble_strategy
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "sp": self.sp,
-            "top_k": self.top_k,
-            "test_size": self.test_size,
-            "n_splits": self.n_splits,
-            "ensemble_strategy": self.ensemble_strategy,
-        }
-
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
         y = y.persist()

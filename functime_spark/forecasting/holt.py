@@ -30,13 +30,14 @@ entity-partitioned and the state frame is n_entities rows.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster, positions
+from functime_spark.materialize import materialize
 
 
-class holt(Forecaster):
+class holt(EntityForecaster):
     """Holt linear-trend smoothing: `alpha` (level), `beta` (trend)
     in (0, 1); `phi` in (0, 1] damps the trend (1 = classic Holt).
     Fixed constants — no in-fit optimization, keeping the plan
@@ -59,14 +60,6 @@ class holt(Forecaster):
         self.beta = beta
         self.phi = phi
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "alpha": self.alpha,
-            "beta": self.beta,
-            "phi": self.phi,
-        }
-
     def _weight_tables(self, kmax: int):
         """u[k] = M^k c, v1[k] = M^k (1,-1)', v2[k] = M^k (0,1)' for
         k = 0..kmax — the position weights of y_t / y_1 / y_2 in the
@@ -88,20 +81,12 @@ class holt(Forecaster):
             v2[k] = M @ v2[k - 1]
         return u, v1, v2
 
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        w = Window.partitionBy(p.entity).orderBy(p.time)
-        rows = y.select(
-            p.entity,
-            F.col(p.target).cast("double").alias("__y"),
-            F.row_number().over(w).alias("__t"),  # 1-based position
-            F.col(p.time),
-        )
+        rows = positions(y, p)
         stats = rows.groupBy(p.entity).agg(
             F.count(F.lit(1)).alias("__n"), F.max(p.time).alias("low")
         )
-        from functime_spark.materialize import materialize
-
         stats = materialize(stats)
         kmax = int(
             stats.agg(F.max("__n")).first()[0] or 1
@@ -153,18 +138,13 @@ class holt(Forecaster):
             F.sum(wl * F.col("__y")).alias("__l"),
             F.sum(wb * F.col("__y")).alias("__b"),
         )
-        self.state["holt"] = materialize(
+        return materialize(
             state.join(stats.select(p.entity, "low"), on=p.entity)
         )
-        self.state["cutoffs"] = self.state["holt"].select(p.entity, "low")
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        st = self.state["holt"]
+    def _horizon(self, step: Column) -> Column:
         phi = float(self.phi)
-        step = F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
-        rows = st.select(p.entity, step, "__l", "__b")
-        h = F.col("step") + 1
+        h = step + 1
         if phi == 1.0:
             damp = h.cast("double")
         else:
@@ -172,8 +152,4 @@ class holt(Forecaster):
             damp = F.lit(phi) * (
                 1.0 - F.pow(F.lit(phi), h.cast("double"))
             ) / F.lit(1.0 - phi)
-        return rows.select(
-            p.entity,
-            "step",
-            (F.col("__l") + damp * F.col("__b")).alias("__yhat"),
-        )
+        return F.col("__l") + damp * F.col("__b")

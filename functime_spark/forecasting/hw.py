@@ -26,13 +26,15 @@ the recursion never leaves the executor that holds the series.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster
 
 
-class holt_winters(Forecaster):
+class holt_winters(EntityForecaster):
     """Holt-Winters seasonal smoothing: `alpha`/`beta`/`gamma` in
     (0, 1), `sp` the seasonal period (>= 2). Fixed constants —
     deterministic and SQL-replayable; sweep with backtest/auto tooling
@@ -41,7 +43,7 @@ class holt_winters(Forecaster):
     direct fit; inside backtest() they drop out of the split (the
     _x_on_short='drop' convention).
 
-    ``seasonal="multiplicative"`` (r11) switches to the classic
+    ``seasonal="multiplicative"`` switches to the classic
     Winters 1960 ratio form, the standard shape for retail/M5-like
     panels whose seasonal amplitude scales with level:
 
@@ -77,17 +79,7 @@ class holt_winters(Forecaster):
         self.gamma = gamma
         self.seasonal = seasonal
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "sp": self.sp,
-            "alpha": self.alpha,
-            "beta": self.beta,
-            "gamma": self.gamma,
-            "seasonal": self.seasonal,
-        }
-
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
         m = self.sp
         a, be, g = self.alpha, self.beta, self.gamma
@@ -133,6 +125,11 @@ class holt_winters(Forecaster):
             f"__s array<double>, low {time_dtype}"
         )
 
+        # the mode picks only the de-seasonalise operation and the
+        # seasonal observation (additive: y - l_{t-1} - b_{t-1};
+        # multiplicative: y / l_t); init, loop and output are shared
+        deseason = operator.truediv if mult else operator.sub
+
         def fit_group(pdf):
             import pandas as pd
 
@@ -140,28 +137,12 @@ class holt_winters(Forecaster):
             yv = pdf[target].to_numpy(dtype=float)
             lvl = float(yv[:m].mean())
             trd = float((yv[m:2 * m].mean() - yv[:m].mean()) / m)
-            if mult:
-                seas = [float(v / lvl) for v in yv[:m]]  # s_{i+1} = y/l_m
-                for t in range(m, len(yv)):
-                    s_tm = seas[t - m]
-                    l_new = a * (yv[t] / s_tm) + (1 - a) * (lvl + trd)
-                    seas.append(g * (yv[t] / l_new) + (1 - g) * s_tm)
-                    trd = be * (l_new - lvl) + (1 - be) * trd
-                    lvl = l_new
-                return pd.DataFrame(
-                    {
-                        entity: [pdf[entity].iloc[0]],
-                        "__l": [lvl],
-                        "__b": [trd],
-                        "__s": [seas[-m:]],
-                        "low": [pdf[time].iloc[-1]],
-                    }
-                )
-            seas = [float(v - lvl) for v in yv[:m]]  # seas[i] = s_{i+1}
+            seas = [float(deseason(v, lvl)) for v in yv[:m]]  # seas[i] = s_{i+1}
             for t in range(m, len(yv)):
                 s_tm = seas[t - m]
-                l_new = a * (yv[t] - s_tm) + (1 - a) * (lvl + trd)
-                seas.append(g * (yv[t] - lvl - trd) + (1 - g) * s_tm)
+                l_new = a * deseason(yv[t], s_tm) + (1 - a) * (lvl + trd)
+                obs = yv[t] / l_new if mult else yv[t] - lvl - trd
+                seas.append(g * obs + (1 - g) * s_tm)
                 trd = be * (l_new - lvl) + (1 - be) * trd
                 lvl = l_new
             return pd.DataFrame(
@@ -182,25 +163,18 @@ class holt_winters(Forecaster):
             .groupBy(p.entity)
             .applyInPandas(fit_group, schema=schema)
         )
-        self.state["hw"] = materialize(state)
-        self.state["cutoffs"] = self.state["hw"].select(p.entity, "low")
+        return materialize(state)
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        st = self.state["hw"]
-        m = self.sp
-        step = F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
-        rows = st.select(p.entity, step, "__l", "__b", "__s")
-        h = F.col("step") + 1
+    def _horizon(self, step: Column) -> Column:
+        h = step + 1
         # __s holds the LAST m seasonal states oldest-first, so
         # forecast h uses __s[(h-1) mod m] (element_at is 1-based)
         seas = F.element_at(
-            "__s", (F.pmod(h - 1, F.lit(m)) + 1).cast("int")
+            "__s", (F.pmod(h - 1, F.lit(self.sp)) + 1).cast("int")
         )
         trend = F.col("__l") + h.cast("double") * F.col("__b")
-        yhat = (
+        return (
             (trend * seas)
             if self.seasonal == "multiplicative"
             else (trend + seas)
         )
-        return rows.select(p.entity, "step", yhat.alias("__yhat"))

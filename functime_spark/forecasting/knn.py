@@ -178,17 +178,6 @@ class knn(ARForecaster):
             )
         self.on_scale_wall = on_scale_wall
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_neighbors": self.n_neighbors,
-            "max_train_rows": self.max_train_rows,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "on_scale_wall": self.on_scale_wall,
-        }
-
     def _scale_evals(self, fh: int) -> float:
         """Predicted brute-force distance-evaluation count for this
         predict call: n_ref * n_entities * fh. n_entities is the
@@ -355,10 +344,9 @@ class ann(knn):
         on_scale_wall: str = "warn",
         target_transform=None,
     ):
-        # strategy/max_horizons/on_scale_wall are accepted so the
-        # backtest clone path (type(self)(**self._init_kwargs()),
-        # base.py) round-trips — ann itself is recursive-only, like
-        # the reference's IVF forecaster (ref lance.py:16-113)
+        # strategy/max_horizons/on_scale_wall keep knn's signature;
+        # ann itself is recursive-only, like the reference's IVF
+        # forecaster (ref lance.py:16-113)
         if strategy != "recursive":
             raise ValueError(
                 f"ann supports only the recursive strategy, got {strategy!r}; "
@@ -376,11 +364,6 @@ class ann(knn):
         )
         self.n_cells = n_cells
         self.n_probe = n_probe
-
-    def _init_kwargs(self) -> dict:
-        kw = super()._init_kwargs()
-        kw.update({"n_cells": self.n_cells, "n_probe": self.n_probe})
-        return kw
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         feats, targs = self._collect_train(y, X)

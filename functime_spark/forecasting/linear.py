@@ -39,18 +39,6 @@ class linear_model(ARForecaster):
         self.l1_ratio = l1_ratio
         self.cd_iters = cd_iters
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            "fit_intercept": self.fit_intercept,
-            "alpha": self.alpha,
-            "l1_ratio": self.l1_ratio,
-            "cd_iters": self.cd_iters,
-        }
-
     def _backend(self) -> LinearBackend:
         reg = self.alpha if self.alpha is not None else self._reg_param
         l1 = self.l1_ratio if self.l1_ratio is not None else self._elastic_net_param

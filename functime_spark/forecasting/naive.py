@@ -8,35 +8,27 @@ state frame is broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster
 
 
-class naive(Forecaster):
+class naive(EntityForecaster):
     """Last value carried forward. Ref naive.py:9-60."""
 
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        # cutoff rides in the same aggregate: predict's future ranges
-        # read this n_entities-row frame, not a second full-panel agg
-        self.state["y_last"] = y.groupBy(p.entity).agg(
+        return y.groupBy(p.entity).agg(
             F.max_by(p.target, p.time).alias("__last"),
             F.max(p.time).alias("low"),
         )
-        self.state["cutoffs"] = self.state["y_last"].select(p.entity, "low")
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        return self.state["y_last"].select(
-            p.entity,
-            F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step"),
-            F.col("__last").alias("__yhat"),
-        )
+    def _horizon(self, step: Column) -> Column:
+        return F.col("__last")
 
 
-class snaive(Forecaster):
+class snaive(EntityForecaster):
     """Tile the last seasonal cycle. Ref snaive.py:9-64:
     prediction step i (0-based) = tail_sp[i mod sp]."""
 
@@ -44,10 +36,7 @@ class snaive(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.sp = sp
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "sp": self.sp}
-
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
         # one hash aggregate (collect + in-expression sort + tail
         # slice) instead of a window pass building a list per row
@@ -58,16 +47,11 @@ class snaive(Forecaster):
         tail = F.when(
             F.size(sorted_vals) <= self.sp, sorted_vals
         ).otherwise(F.slice(sorted_vals, -self.sp, self.sp))
-        self.state["y_tail"] = y.groupBy(p.entity).agg(
+        return y.groupBy(p.entity).agg(
             tail.alias("__tail"), F.max(p.time).alias("low")
         )
-        self.state["cutoffs"] = self.state["y_tail"].select(p.entity, "low")
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        step = F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
-        rows = self.state["y_tail"].select(p.entity, step, "__tail")
-        val = F.element_at(
-            F.col("__tail"), (F.col("step") % F.size("__tail") + 1).cast("int")
+    def _horizon(self, step: Column) -> Column:
+        return F.element_at(
+            F.col("__tail"), (step % F.size("__tail") + 1).cast("int")
         )
-        return rows.select(p.entity, "step", val.alias("__yhat"))

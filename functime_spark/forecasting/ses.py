@@ -13,13 +13,14 @@ iteration; state is n_entities rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.materialize import materialize
 
 
-class ses(Forecaster):
+class ses(EntityForecaster):
     """Flat simple-exponential-smoothing forecaster; `alpha` in
     (0, 1), fixed (sweep with backtest/auto tooling)."""
 
@@ -29,39 +30,17 @@ class ses(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.alpha = alpha
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "alpha": self.alpha}
-
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        a = float(self.alpha)
-        w = Window.partitionBy(p.entity).orderBy(p.time)
-        rows = y.select(
-            p.entity,
-            F.col(p.target).cast("double").alias("__y"),
-            F.row_number().over(w).alias("__t"),
-            F.col(p.time),
-        )
+        rows = positions(y, p)
         stats = rows.groupBy(p.entity).agg(
             F.max("__t").alias("__n"), F.max(p.time).alias("low")
         )
-        j = rows.join(stats, on=p.entity)
-        back = (F.col("__n") - F.col("__t")).cast("double")
-        c = F.when(
-            F.col("__t") == 1, F.pow(F.lit(1.0 - a), F.col("__n") - F.lit(1))
-        ).otherwise(F.lit(a) * F.pow(F.lit(1.0 - a), back))
-        from functime_spark.materialize import materialize
-
-        lvl = j.groupBy(p.entity).agg(
+        c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
+        lvl = rows.join(stats, on=p.entity).groupBy(p.entity).agg(
             F.sum(c * F.col("__y")).alias("__l"), F.max("low").alias("low")
         )
-        self.state["ses"] = materialize(lvl)
-        self.state["cutoffs"] = self.state["ses"].select(p.entity, "low")
+        return materialize(lvl)
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        return self.state["ses"].select(
-            p.entity,
-            F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step"),
-            F.col("__l").alias("__yhat"),
-        )
+    def _horizon(self, step: Column) -> Column:
+        return F.col("__l")

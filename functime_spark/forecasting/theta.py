@@ -22,13 +22,14 @@ entity-partitioned; the state frame is n_entities rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.materialize import materialize
 
 
-class theta(Forecaster):
+class theta(EntityForecaster):
     """Classical two-line Theta: OLS trend (theta=0) + SES-smoothed
     theta=2 line, equal-weight combination; `alpha` is the SES
     smoothing constant (fixed — no in-fit optimization, keeping the
@@ -40,20 +41,11 @@ class theta(Forecaster):
         super().__init__(freq=freq, lags=1)
         self.alpha = alpha
 
-    def _init_kwargs(self) -> dict:
-        return {"freq": self.freq, "alpha": self.alpha}
-
-    def _fit(self, y: DataFrame, X: DataFrame | None = None):
+    def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        a = float(self.alpha)
-        w = Window.partitionBy(p.entity).orderBy(p.time)
-        rows = y.select(
-            p.entity,
-            F.col(p.target).alias("__y"),
-            (F.row_number().over(w) - 1).alias("__i"),
-            F.col(p.time),
-        )
-        i, yv = F.col("__i").cast("double"), F.col("__y").cast("double")
+        rows = positions(y, p)
+        i0 = F.col("__t") - 1  # 0-based trend index
+        i, yv = i0.cast("double"), F.col("__y")
         ols = rows.groupBy(p.entity).agg(
             F.count(F.lit(1)).cast("double").alias("__n"),
             F.sum(i).alias("__si"),
@@ -68,8 +60,6 @@ class theta(Forecaster):
             (F.col("__n") * F.col("__siy") - F.col("__si") * F.col("__sy"))
             / den,
         ).otherwise(F.lit(0.0))
-        from functime_spark.materialize import materialize
-
         coef = materialize(
             ols.select(
                 p.entity,
@@ -82,14 +72,9 @@ class theta(Forecaster):
             )
         )
         j = rows.join(coef, on=p.entity)
-        # closed-form SES over z = 2y - (a + b*i):
-        #   l_n = (1-alpha)^(n-1) * z_1  +  sum_{t>=2} alpha*(1-alpha)^(n-t) * z_t
-        # with n - t expressed row-locally as (n-1) - i — no second window
-        z = 2.0 * F.col("__y") - (F.col("__a") + F.col("__b") * F.col("__i"))
-        back = F.col("__n") - 1.0 - F.col("__i")
-        c = F.when(
-            F.col("__i") == 0, F.pow(F.lit(1.0 - a), F.col("__n") - 1.0)
-        ).otherwise(F.lit(a) * F.pow(F.lit(1.0 - a), back))
+        # closed-form SES over z = 2y - (a + b*i)
+        z = 2.0 * F.col("__y") - (F.col("__a") + F.col("__b") * i0)
+        c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
         lvl = j.groupBy(p.entity).agg(F.sum(c * z).alias("__l"))
         # both per-entity frames are materialized (n_entities rows):
         # coef above so the SES join consumes a pinned table instead of
@@ -97,18 +82,9 @@ class theta(Forecaster):
         # state here so predict() is a window-free read of a tiny
         # frame — the full-panel window runs exactly twice total
         # (once per aggregate)
-        self.state["theta"] = materialize(coef.join(lvl, on=p.entity))
-        self.state["cutoffs"] = self.state["theta"].select(p.entity, "low")
+        return materialize(coef.join(lvl, on=p.entity))
 
-    def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        p = self.state["panel"]
-        st = self.state["theta"]
-        step = F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
-        rows = st.select(p.entity, step, "__a", "__b", "__n", "__l")
+    def _horizon(self, step: Column) -> Column:
         # step s = horizon s+1 => trend index n - 1 + (s+1) = n + s
-        trend = F.col("__a") + F.col("__b") * (F.col("__n") + F.col("step"))
-        return rows.select(
-            p.entity,
-            "step",
-            (0.5 * trend + 0.5 * F.col("__l")).alias("__yhat"),
-        )
+        trend = F.col("__a") + F.col("__b") * (F.col("__n") + step)
+        return 0.5 * trend + 0.5 * F.col("__l")

@@ -70,18 +70,6 @@ class gradient_boosted_model(ARForecaster):
         self.step_size = step_size
         self.num_trees = num_trees
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "max_iter": self.max_iter,
-            "max_depth": self.max_depth,
-            "step_size": self.step_size,
-            "num_trees": self.num_trees,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-        }
-
     def _regressor(self):
         from pyspark.ml.regression import GBTRegressor, RandomForestRegressor
 
@@ -362,8 +350,8 @@ class _native_flavor(gradient_boosted_model):
     """Shared constructor for the lightgbm/xgboost/catboost facades:
     accepts the NATIVE hyperparameter vocabulary (the reference's
     kwargs contract), translates it for the MLlib backbone, and keeps
-    the original kwargs for (a) backtest refits and (b) the native
-    distributed integrations when their packages are importable."""
+    the original kwargs for the native distributed integrations when
+    their packages are importable."""
 
     def __init__(
         self,
@@ -387,15 +375,6 @@ class _native_flavor(gradient_boosted_model):
         self._mllib_extra = extra
         self.dropped_params = dropped
         self._objective = params.get("objective")
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "strategy": self.strategy,
-            "max_horizons": self.max_horizons,
-            **self._native_kwargs,
-        }
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         y = _enforce_label_constraint(
@@ -666,15 +645,6 @@ class boosted_stumps(ARForecaster):
         self.learning_rate = learning_rate
         self.max_candidates = max_candidates
 
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_iter": self.n_iter,
-            "learning_rate": self.learning_rate,
-            "max_candidates": self.max_candidates,
-        }
-
     def _stump_expr(self, stumps, cols):
         """Column expression F0 + sum of fitted stump contributions."""
         expr = F.lit(float(self.state["f0"]))
@@ -823,15 +793,6 @@ class boosted_trees_d2(ARForecaster):
         self.n_iter = n_iter
         self.learning_rate = learning_rate
         self.max_bins = max_bins
-
-    def _init_kwargs(self) -> dict:
-        return {
-            "freq": self.freq,
-            "lags": self.lags,
-            "n_iter": self.n_iter,
-            "learning_rate": self.learning_rate,
-            "max_bins": self.max_bins,
-        }
 
     @staticmethod
     def _child_expr(child, bcols):

@@ -692,33 +692,41 @@ def simhash_near_dups(
     )
 
 
+def _vec_dim(emb: DataFrame, vec_col: str) -> int | None:
+    """Dimension of the first vector, None for an empty frame — the
+    one plan-time job per embedding side, shared by the dimension
+    check and the plane draw."""
+    first = emb.select(F.size(vec_col).alias("d")).first()
+    return None if first is None else first["d"]
+
+
 def _lsh_hashed(
     emb: DataFrame,
     vec_col: str,
     id_col: str,
     n_planes: int,
     seed: int,
+    dim: int | None,
 ) -> DataFrame:
     """(id, __v, __bkt, __n): the hyperplane-LSH hash stage shared by
     embedding_near_dups and semantic_decontaminate — sign-bit bucket
     from seeded planes riding in ONE broadcast single-row frame, plus
     the vector and its L2 norm for the in-bucket verify. Both callers
-    MUST hash with the same (n_planes, seed) for buckets to align."""
+    MUST hash with the same (n_planes, seed) for buckets to align.
+    `dim` is the caller's `_vec_dim` probe of `emb`."""
     import numpy as np
 
-    v0 = F.col(vec_col).cast("array<double>")
-    first = emb.select(F.size(vec_col).alias("d")).first()
-    if first is None:
+    v = F.col(vec_col).cast("array<double>")
+    if dim is None:
         # empty frame: no rows to hash — emit an empty result with the
         # contract schema (empty-corpus sweeps and drained filter
         # chains must not crash on first()[...]).
         return emb.select(
             F.col(id_col),
-            v0.alias("__v"),
+            v.alias("__v"),
             F.lit(0).cast("long").alias("__bkt"),
             F.lit(0.0).alias("__n"),
         ).limit(0)
-    dim = first["d"]
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
 
@@ -727,7 +735,6 @@ def _lsh_hashed(
         [([[float(x) for x in p] for p in planes],)],
         "__planes array<array<double>>",
     )
-    v = F.col(vec_col).cast("array<double>")
     bits = F.transform(
         F.col("__planes"),
         lambda p, i: F.when(
@@ -765,7 +772,9 @@ def embedding_near_dups(
     expression tree — plan size stays O(1) in n_planes, so 64-plane
     production configs don't blow up codegen; the 2-arg transform
     lambda's index argument supplies each plane's bit weight."""
-    hashed = _lsh_hashed(emb, vec_col, id_col, n_planes, seed)
+    hashed = _lsh_hashed(
+        emb, vec_col, id_col, n_planes, seed, _vec_dim(emb, vec_col)
+    )
     pairs = _bucket_pairs(
         hashed, ["__bkt"], max_bucket_size, [id_col, "__v", "__n"]
     )
@@ -797,18 +806,18 @@ def semantic_decontaminate(
     (_store_pairs, probe as the store side). Bucket caps apply per
     side, like minhash_dedup_incremental. Anti-join the result on
     corpus id to scrub."""
-    dc = emb.select(F.size(vec_col).alias("d")).first()
-    dp = probe_emb.select(F.size(vec_col).alias("d")).first()
-    if dc is not None and dp is not None and dc["d"] != dp["d"]:
+    dc = _vec_dim(emb, vec_col)
+    dp = _vec_dim(probe_emb, vec_col)
+    if dc is not None and dp is not None and dc != dp:
         # zip_with would null-pad the shorter vector -> cosine NULL ->
         # every pair silently filtered out: a false "corpus is clean"
         raise ValueError(
-            f"corpus ({dc['d']}-dim) and probe ({dp['d']}-dim) embeddings "
+            f"corpus ({dc}-dim) and probe ({dp}-dim) embeddings "
             "must come from the same model/dimension"
         )
-    hc = _lsh_hashed(emb, vec_col, id_col, n_planes, seed)
+    hc = _lsh_hashed(emb, vec_col, id_col, n_planes, seed, dc)
     hp = _lsh_hashed(
-        probe_emb, vec_col, probe_id_col, n_planes, seed
+        probe_emb, vec_col, probe_id_col, n_planes, seed, dp
     ).withColumnRenamed(probe_id_col, id_col)
     pairs = _store_pairs(
         hc, hp, ["__bkt"], max_bucket_size, [id_col, "__v", "__n"],

@@ -342,6 +342,41 @@ def test_elite_prefers_snaive_on_seasonal_data(spark):
     np.testing.assert_allclose(pred["y"].to_numpy(), want)
 
 
+def test_elite_backtest_refits_with_its_bank(spark):
+    """Backtest refits clone the instance, so every split's elite
+    refits with the instance's own bank (a clone rebuilt from
+    constructor kwargs dropped `bank` and refit the default one): a
+    one-member naive bank at top_k=1 backtests exactly like naive."""
+    from functime_spark.forecasting.elite import elite
+    from functime_spark.forecasting.naive import naive
+
+    rng = np.random.default_rng(4)
+    rows = [
+        (e, t, float(v))
+        for e in ("a", "b", "c", "d")
+        for t, v in enumerate(rng.normal(10, 3, 60))
+    ]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    key = ["entity", "t", "split"]
+    got = (
+        elite(freq="1i", bank={"naive": lambda: naive(freq="1i")}, top_k=1)
+        .backtest(y, test_size=3, n_splits=2)
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    want = (
+        naive(freq="1i")
+        .backtest(y, test_size=3, n_splits=2)
+        .toPandas()
+        .sort_values(key)
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(want) == 4 * 3 * 2
+    assert (got[key] == want[key]).all().all()
+    np.testing.assert_allclose(got["y"], want["y"], rtol=0, atol=1e-9)
+
+
 def test_auto_linear_picks_a_config(spark):
     from functime_spark.forecasting.automl import auto_linear_model
 
@@ -544,9 +579,17 @@ def test_gbt_native_hyperparameter_translation(spark, events):
     assert reg.getMaxIter() == 40 and reg.getMaxDepth() == 4
     assert reg.getFeatureSubsetStrategy() == "0.6" and reg.getSeed() == 3
 
-    # backtest refits round-trip the ORIGINAL native kwargs
-    kw = fc._init_kwargs()
-    assert kw["iterations"] == 40 and kw["rsm"] == 0.6
+    # backtest refits clone the instance: the ORIGINAL native kwargs
+    # and their translation ride along, and __init__ (with its
+    # translation warnings) does not run again
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        clone = fc._clone()
+    assert clone._native_kwargs["iterations"] == 40
+    assert clone._native_kwargs["rsm"] == 0.6
+    assert clone._mllib_extra == fc._mllib_extra and clone.state == {}
 
 
 def test_gbt_objective_label_constraint(spark):
@@ -1683,11 +1726,11 @@ def test_knn_scale_evals_runs_no_job(spark):
 
 
 def test_ann_clone_and_backtest_roundtrip(spark):
-    """Latent r7 find: base.backtest refits via
-    type(self)(**self._init_kwargs()), but ann.__init__ rejected the
-    inherited strategy/on_scale_wall keys — ann.backtest() raised
-    TypeError before it ever fit. Pin the clone round-trip and a real
-    2-split backtest; direct strategy stays rejected (ann is
+    """base.backtest refits a clone of the instance. A clone rebuilt
+    from constructor kwargs once broke here: ann.__init__ rejected the
+    inherited strategy/on_scale_wall keys, so ann.backtest() raised
+    TypeError before it ever fit. Pin the clone's attributes and a
+    real 2-split backtest; direct strategy stays rejected (ann is
     recursive-only, like the reference's IVF forecaster)."""
     import numpy as np
 
@@ -1701,7 +1744,8 @@ def test_ann_clone_and_backtest_roundtrip(spark):
     ]
     y = spark.createDataFrame(rows, "entity string, t long, y double")
     fc = ann(freq="1i", lags=3, n_neighbors=2, n_cells=4)
-    clone = type(fc)(**fc._init_kwargs())
+    clone = fc._clone()
+    assert type(clone) is ann and clone.state == {}
     assert clone.n_cells == 4 and clone.on_scale_wall == "warn"
     bt = fc.backtest(y, test_size=3, n_splits=2).toPandas()
     assert len(bt) == 2 * 2 * 3 and bt["y"].notna().all()

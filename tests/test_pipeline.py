@@ -2621,6 +2621,42 @@ def test_semantic_decontaminate_dim_mismatch_raises(spark):
     assert semantic_decontaminate(emb, empty).count() == 0
 
 
+def test_semantic_decontaminate_plans_with_two_jobs(spark):
+    """Building the frame probes each side's dimension once: the one
+    probe serves both the mismatch check and the plane draw, so plan
+    building runs 2 jobs (one per side), and embedding_near_dups 1."""
+    from functime_spark.pipeline.dedup import (
+        embedding_near_dups,
+        semantic_decontaminate,
+    )
+
+    # one partition each: a first() over empty leading partitions
+    # would take extra jobs of its own
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    probe = spark.createDataFrame(
+        [(100, [1.0, 1.0, 1.0, 0.5])], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    sc = spark.sparkContext
+
+    def plan_jobs(group, build):
+        sc.setJobGroup(group, "plan-time jobs")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert len(plan_jobs(
+        "test-decontam-plan", lambda: semantic_decontaminate(emb, probe)
+    )) <= 2
+    assert len(plan_jobs(
+        "test-near-dups-plan", lambda: embedding_near_dups(emb)
+    )) <= 1
+
+
 def test_domain_stats_pathless_query_and_port(spark):
     """Path-less URLs with query strings and non-default ports roll
     into the same registered-host row."""
