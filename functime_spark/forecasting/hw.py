@@ -26,8 +26,6 @@ the recursion never leaves the executor that holds the series.
 
 from __future__ import annotations
 
-import operator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -126,9 +124,14 @@ class holt_winters(EntityForecaster):
         )
 
         # the mode picks only the de-seasonalise operation and the
-        # seasonal observation (additive: y - l_{t-1} - b_{t-1};
-        # multiplicative: y / l_t); init, loop and output are shared
-        deseason = operator.truediv if mult else operator.sub
+        # seasonal observation, once here; init, loop and output are
+        # shared
+        deseason = (lambda v, s: v / s) if mult else (lambda v, s: v - s)
+        season_obs = (
+            (lambda v, lvl, trd, l_new: v / l_new)
+            if mult
+            else (lambda v, lvl, trd, l_new: v - lvl - trd)
+        )
 
         def fit_group(pdf):
             import pandas as pd
@@ -141,7 +144,7 @@ class holt_winters(EntityForecaster):
             for t in range(m, len(yv)):
                 s_tm = seas[t - m]
                 l_new = a * deseason(yv[t], s_tm) + (1 - a) * (lvl + trd)
-                obs = yv[t] / l_new if mult else yv[t] - lvl - trd
+                obs = season_obs(yv[t], lvl, trd, l_new)
                 seas.append(g * obs + (1 - g) * s_tm)
                 trd = be * (l_new - lvl) + (1 - be) * trd
                 lvl = l_new

@@ -339,27 +339,17 @@ class ann(knn):
         n_cells: int = 64,
         n_probe: int = 4,
         max_train_rows: int = 100_000,
-        strategy: str = "recursive",
-        max_horizons: int | None = None,
-        on_scale_wall: str = "warn",
         target_transform=None,
     ):
-        # strategy/max_horizons/on_scale_wall keep knn's signature;
-        # ann itself is recursive-only, like the reference's IVF
-        # forecaster (ref lance.py:16-113)
-        if strategy != "recursive":
-            raise ValueError(
-                f"ann supports only the recursive strategy, got {strategy!r}; "
-                "use knn for direct/ensemble"
-            )
+        # recursive-only, like the reference's IVF forecaster (ref
+        # lance.py:16-113); IVF probing is itself the route past the
+        # brute-force scale wall, so ann has no on_scale_wall either
         super().__init__(
             freq=freq,
             lags=lags,
             n_neighbors=n_neighbors,
             max_train_rows=max_train_rows,
-            strategy=strategy,
-            max_horizons=max_horizons,
-            on_scale_wall=on_scale_wall,
+            strategy="recursive",
             target_transform=target_transform,
         )
         self.n_cells = n_cells

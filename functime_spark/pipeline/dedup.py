@@ -693,9 +693,9 @@ def simhash_near_dups(
 
 
 def _vec_dim(emb: DataFrame, vec_col: str) -> int | None:
-    """Dimension of the first vector, None for an empty frame — the
-    one plan-time job per embedding side, shared by the dimension
-    check and the plane draw."""
+    """Dimension of the first vector, None for an empty frame — one
+    `first()` probe per embedding side, shared by the dimension check
+    and the plane draw."""
     first = emb.select(F.size(vec_col).alias("d")).first()
     return None if first is None else first["d"]
 

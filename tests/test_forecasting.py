@@ -1730,7 +1730,7 @@ def test_ann_clone_and_backtest_roundtrip(spark):
     from constructor kwargs once broke here: ann.__init__ rejected the
     inherited strategy/on_scale_wall keys, so ann.backtest() raised
     TypeError before it ever fit. Pin the clone's attributes and a
-    real 2-split backtest; direct strategy stays rejected (ann is
+    real 2-split backtest; ann takes no strategy (it is
     recursive-only, like the reference's IVF forecaster)."""
     import numpy as np
 
@@ -1746,11 +1746,12 @@ def test_ann_clone_and_backtest_roundtrip(spark):
     fc = ann(freq="1i", lags=3, n_neighbors=2, n_cells=4)
     clone = fc._clone()
     assert type(clone) is ann and clone.state == {}
-    assert clone.n_cells == 4 and clone.on_scale_wall == "warn"
+    assert clone.n_cells == 4 and clone.n_probe == 4
+    assert clone.strategy == "recursive"
     bt = fc.backtest(y, test_size=3, n_splits=2).toPandas()
     assert len(bt) == 2 * 2 * 3 and bt["y"].notna().all()
-    with pytest.raises(ValueError, match="recursive"):
-        ann(freq="1i", strategy="direct", max_horizons=3)
+    with pytest.raises(TypeError, match="strategy"):
+        ann(freq="1i", strategy="direct")
 
 
 def test_holt_vs_numpy(events, events_pdf):

@@ -2622,16 +2622,17 @@ def test_semantic_decontaminate_dim_mismatch_raises(spark):
 
 
 def test_semantic_decontaminate_plans_with_two_jobs(spark):
-    """Building the frame probes each side's dimension once: the one
-    probe serves both the mismatch check and the plane draw, so plan
-    building runs 2 jobs (one per side), and embedding_near_dups 1."""
+    """Building the frame runs one `first()` probe per side for its
+    dimension, shared by the mismatch check and the plane draw: on
+    single-partition inputs plan building runs 2 jobs (4 before the
+    probe was shared), and embedding_near_dups 1."""
     from functime_spark.pipeline.dedup import (
         embedding_near_dups,
         semantic_decontaminate,
     )
 
-    # one partition each: a first() over empty leading partitions
-    # would take extra jobs of its own
+    # the job bounds hold for single-partition inputs: a first() over
+    # empty leading partitions scans on in further jobs of its own
     emb = spark.createDataFrame(
         [(i, [float(i % 3), 1.0, float(i % 5), 0.5]) for i in range(12)],
         "vec_id long, embedding array<double>",
