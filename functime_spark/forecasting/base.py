@@ -302,11 +302,29 @@ def ses_weight(alpha: float, t: Column, n: Column) -> Column:
     """Closed-form SES weight of position t (1-based) in a length-n
     sequence. The recursion l_t = a x_t + (1-a) l_{t-1}, l_1 = x_1
     unrolls to l_n = (1-a)^(n-1) x_1 + sum_{t>=2} a (1-a)^(n-t) x_t.
-    The exponents are exact integers, so every caller's weighted sum
-    is bit-stable."""
+    The exponents are exact integers, so the weights are bit-stable;
+    callers sum them with `ordered_sum` so the sums are too."""
     a = float(alpha)
     return F.when(t == 1, F.pow(F.lit(1.0 - a), n - 1)).otherwise(
         F.lit(a) * F.pow(F.lit(1.0 - a), n - t)
+    )
+
+
+def ordered_sum(value: Column, order: Column) -> Column:
+    """Aggregate: the sum of the non-null `value`s added in `order`
+    (unique within the group), NULL when there are none — F.sum's
+    result, made independent of partitioning. F.sum merges partial
+    sums in shuffle-fetch order, so the last bits of a weighted double
+    sum moved between two runs of the same plan (up to 9.8e-16
+    relative on a seeded ses panel). Sorting the (order, value) pairs
+    and folding left to right pins every bit."""
+    pairs = F.sort_array(
+        F.collect_list(F.struct(order.alias("o"), value.alias("v")))
+    )
+    return F.aggregate(
+        F.filter(pairs, lambda x: x["v"].isNotNull()),
+        F.lit(None).cast("double"),
+        lambda acc, x: F.coalesce(acc + x["v"], x["v"]),
     )
 
 

@@ -27,7 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.forecasting.base import (
+    EntityForecaster,
+    ordered_sum,
+    positions,
+    ses_weight,
+)
 from functime_spark.materialize import materialize
 
 
@@ -70,8 +75,8 @@ class croston(EntityForecaster):
         j = nz.join(stats, on=p.entity)
         c = ses_weight(self.alpha, F.col("__i"), F.col("__k"))
         lv = j.groupBy(p.entity).agg(
-            F.sum(c * F.col("__z")).alias("__lz"),
-            F.sum(c * F.col("__p")).alias("__lp"),
+            ordered_sum(c * F.col("__z"), F.col("__i")).alias("__lz"),
+            ordered_sum(c * F.col("__p"), F.col("__i")).alias("__lp"),
         )
         # all-zero entities have no nz rows: left join -> null levels
         # -> forecast 0

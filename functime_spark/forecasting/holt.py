@@ -33,7 +33,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import EntityForecaster, positions
+from functime_spark.forecasting.base import EntityForecaster, ordered_sum, positions
 from functime_spark.materialize import materialize
 
 
@@ -135,8 +135,8 @@ class holt(EntityForecaster):
         wl = weight(F.col("ul"), F.col("v1l"), F.col("v2l"), 1.0)
         wb = weight(F.col("ub"), F.col("v1b"), F.col("v2b"), 0.0)
         state = j.groupBy(p.entity).agg(
-            F.sum(wl * F.col("__y")).alias("__l"),
-            F.sum(wb * F.col("__y")).alias("__b"),
+            ordered_sum(wl * F.col("__y"), t).alias("__l"),
+            ordered_sum(wb * F.col("__y"), t).alias("__b"),
         )
         return materialize(
             state.join(stats.select(p.entity, "low"), on=p.entity)

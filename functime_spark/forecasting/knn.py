@@ -126,16 +126,22 @@ def _direct_query(payload):
     """Horizon h scans reference columns h-1 .. h-1+lags (the direct
     design slice) plus the exogenous block after all `width` lag
     columns; the query is the last observed lags for every horizon.
-    Ref predict_direct _ar.py:277-330."""
+    Ref predict_direct _ar.py:277-330. Each slice's scan (its
+    contiguous copy and r.r) is built once per task, on first use,
+    and reused by every later Arrow batch; a task holds at most
+    max_horizons of them."""
     wide, targs, k, lags, width, mh = payload
+    scans = {}
 
     def step(h, lag, x):
         lo = min(h, mh - 1)
-        ref = wide[:, lo : lo + lags]
-        if x is not None:
-            ref = np.hstack([ref, wide[:, width:]])
+        if lo not in scans:
+            ref = wide[:, lo : lo + lags]
+            if x is not None:
+                ref = np.hstack([ref, wide[:, width:]])
+            scans[lo] = _brute_knn_step((np.ascontiguousarray(ref), targs, k))
         q = lag if x is None else np.hstack([lag, x])
-        return _brute_knn_step((np.ascontiguousarray(ref), targs, k))(q)
+        return scans[lo](q)
 
     return step
 

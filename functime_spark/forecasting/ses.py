@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.forecasting.base import (
+    EntityForecaster,
+    ordered_sum,
+    positions,
+    ses_weight,
+)
 from functime_spark.materialize import materialize
 
 
@@ -38,7 +43,8 @@ class ses(EntityForecaster):
         )
         c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
         lvl = rows.join(stats, on=p.entity).groupBy(p.entity).agg(
-            F.sum(c * F.col("__y")).alias("__l"), F.max("low").alias("low")
+            ordered_sum(c * F.col("__y"), F.col("__t")).alias("__l"),
+            F.max("low").alias("low"),
         )
         return materialize(lvl)
 

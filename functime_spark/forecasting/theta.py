@@ -25,7 +25,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import EntityForecaster, positions, ses_weight
+from functime_spark.forecasting.base import (
+    EntityForecaster,
+    ordered_sum,
+    positions,
+    ses_weight,
+)
 from functime_spark.materialize import materialize
 
 
@@ -45,12 +50,14 @@ class theta(EntityForecaster):
         p = self.state["panel"]
         rows = positions(y, p)
         i0 = F.col("__t") - 1  # 0-based trend index
-        i, yv = i0.cast("double"), F.col("__y")
+        i, yv, t = i0.cast("double"), F.col("__y"), F.col("__t")
+        # the index sums add small integers, exact in any order; the
+        # sums over y are added in position order
         ols = rows.groupBy(p.entity).agg(
             F.count(F.lit(1)).cast("double").alias("__n"),
             F.sum(i).alias("__si"),
-            F.sum(yv).alias("__sy"),
-            F.sum(i * yv).alias("__siy"),
+            ordered_sum(yv, t).alias("__sy"),
+            ordered_sum(i * yv, t).alias("__siy"),
             F.sum(i * i).alias("__sii"),
             F.max(p.time).alias("low"),
         )
@@ -75,7 +82,7 @@ class theta(EntityForecaster):
         # closed-form SES over z = 2y - (a + b*i)
         z = 2.0 * F.col("__y") - (F.col("__a") + F.col("__b") * i0)
         c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
-        lvl = j.groupBy(p.entity).agg(F.sum(c * z).alias("__l"))
+        lvl = j.groupBy(p.entity).agg(ordered_sum(c * z, t).alias("__l"))
         # both per-entity frames are materialized (n_entities rows):
         # coef above so the SES join consumes a pinned table instead of
         # re-embedding the windowed `rows` subtree, and the combined

@@ -148,8 +148,8 @@ def extract_audio_features(
     the multimodal decoder seam (default: the stdlib WAV codec; any
     registered/callable decoder returning {"array", "rate",
     "channels"} rides the same path). Narrow batch inputs are
-    rebalanced ahead of the kernel (spread_for_cpu — no-op at real
-    scale; the MFCC pass is the most expensive per-clip kernel in the
+    rebalanced ahead of the kernel (spread_for_cpu — only a narrow
+    input moves; the MFCC pass is the most expensive per-clip kernel in the
     audio tier, so a one-partition scan must not serialize it)."""
     from functime_spark.pipeline._util import spread_for_cpu
     from functime_spark.pipeline.multimodal import _resolve_decoder
@@ -336,8 +336,8 @@ def audio_fingerprints(
     row group — unsplittable, so one scan partition) is rebalanced
     before the kernel; the spectral pass costs ~200 us/clip and would
     otherwise run on one core of the whole cluster (guide §2.5). At
-    crawl scale the input parallelism already exceeds the cluster's
-    and the rebalance is a no-op (in-session A/B at sf0.1:
+    crawl scale the input has more partitions than the cluster has
+    core slots and the rebalance is a no-op (in-session A/B at sf0.1:
     audio_near_dups 4.00 -> 3.17 s median, identical pair counts)."""
     from functime_spark.pipeline._util import spread_for_cpu
     from functime_spark.pipeline.multimodal import _resolve_decoder

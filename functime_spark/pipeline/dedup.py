@@ -202,10 +202,14 @@ def minhash_signatures(
     projection. (The previous formulation exploded the corpus' entire
     shingle stream into a grouped min, paying a full shuffle of
     ~n_words x n_docs rows.) On a NARROW batch input (one row group)
-    an adaptive round-robin rebalance may precede the projection so
-    the sweep parallelizes — a no-op at real scale and on streams;
-    pass an already-partitioned frame to pin a zero-exchange plan.
-    Stateless per row, hence directly usable on a stream.
+    a round-robin rebalance to one partition per core slot precedes
+    the projection (`spread_for_cpu`), so the numpy sweep runs on
+    every core but starts no more Python tasks than there are slots:
+    each task pays 0.2–0.25 s of pyspark worker start-up (zipimport cache
+    invalidation, see `pipeline._util`), more than the sweep itself
+    over 500 docs. A no-op on wide inputs and on streams; pass an
+    already-partitioned frame to pin a zero-exchange plan. Stateless
+    per row, hence directly usable on a stream.
 
     Changing either hash derivation invalidates persisted signature
     stores — bump SIGNATURE_SCHEME and see minhash_dedup_incremental's

@@ -67,7 +67,7 @@ def fit_ngram_lm(
     over the unigram aggregate).
 
     r11 optimization: narrow train inputs rebalance before the
-    tokenization (spread_for_cpu — no-op at real scale): the pair
+    tokenization (spread_for_cpu — only a narrow input moves): the pair
     explode and the count aggregate's map-side combine are the fit's
     whole cost, and a one-row-group parquet corpus would run them on
     one core (guide §2.5). Count values are unchanged — integer sums

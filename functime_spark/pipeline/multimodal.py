@@ -1862,7 +1862,7 @@ def video_dhash(
     payloads emit no rows (the curate_media drop contract).
 
     r11 optimization: narrow batch inputs rebalance before the kernel
-    (spread_for_cpu — no-op at real scale): per-frame JPEG decode is
+    (spread_for_cpu — only a narrow input moves): per-frame JPEG decode is
     the most expensive per-row kernel in the repo, and a one-row-group
     parquet source would serialize it onto one core (guide §2.5)."""
     from functime_spark.pipeline._util import spread_for_cpu

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from functime_spark.pipeline._util import _cluster_parallelism
+
 # binaryFile materializes one whole shard per row: hard 2 GiB source
 # limit, full-shard task memory. Warn well under it (see
 # write_webdataset's scale_wall).
@@ -369,7 +371,8 @@ def read_webdataset_ranges(
 
     `index` accepts a previously materialized index (e.g. persisted
     next to the shards) to skip the header walk; `partitions` defaults
-    to the session shuffle partitioning. Uncompressed shards only —
+    to one per core slot, the rule of every Python stage
+    (`pipeline._util._cluster_parallelism`). Uncompressed shards only —
     gzip has no random access (see index_webdataset). Rows within a
     task are read in (shard, offset) order, so each file handle moves
     strictly forward — sequential I/O per task, one open per
@@ -381,9 +384,8 @@ def read_webdataset_ranges(
     idx = index if index is not None else index_webdataset(
         spark, path, pattern
     )
-    n = partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    # the decode below is a Python stage: one task per core slot
+    n = partitions or _cluster_parallelism(idx)
     # member-granular round-robin: big shards fan out across tasks
     parts = idx.repartition(n)
 

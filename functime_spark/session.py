@@ -6,6 +6,12 @@ Arrow for the pandas-UDF tier, and shuffle partition count tracking
 cores. On a 1000-executor cluster the same settings apply — only
 `shuffle.partitions` should scale with total cores (AQE coalesces the
 excess automatically).
+
+`shuffle.partitions` sizes JVM shuffles only. Python-kernel stages
+(grouped pandas UDFs, mapInPandas scans) are sized to the cores, one
+task per slot (`pipeline._util._cluster_parallelism`): each Python
+task pays a fixed worker start-up cost that 32 tiny tasks would
+multiply.
 """
 
 from __future__ import annotations

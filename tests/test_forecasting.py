@@ -1725,6 +1725,48 @@ def test_knn_scale_evals_runs_no_job(spark):
     assert evals == float(len(fc.state["train"][0]) * 3 * 3)
 
 
+def test_knn_direct_query_builds_each_slice_scan_once(monkeypatch):
+    """The direct/ensemble knn step builds one scan (contiguous slice
+    copy + r.r) per reference slice and reuses it for every later
+    Arrow batch and horizon; its answers are bit-identical to a scan
+    built fresh for each call."""
+    import importlib
+
+    import numpy as np
+
+    # the package re-exports the knn class under the module's name
+    knn_mod = importlib.import_module("functime_spark.forecasting.knn")
+    fresh = knn_mod._brute_knn_step
+    built = []
+
+    def counting(payload):
+        built.append(payload)
+        return fresh(payload)
+
+    monkeypatch.setattr(knn_mod, "_brute_knn_step", counting)
+    rng = np.random.default_rng(11)
+    lags, mh, k, n_x = 3, 4, 5, 2
+    width = lags + mh - 1
+    for with_x in (False, True):
+        built.clear()
+        wide = rng.normal(size=(200, width + (n_x if with_x else 0)))
+        targs = rng.normal(size=200)
+        step = knn_mod._direct_query((wide, targs, k, lags, width, mh))
+        for _batch in range(3):
+            lag = rng.normal(size=(7, lags))
+            x = rng.normal(size=(7, n_x)) if with_x else None
+            for h in range(mh + 2):  # horizons past mh reuse the last slice
+                lo = min(h, mh - 1)
+                ref = wide[:, lo : lo + lags]
+                q = lag
+                if with_x:
+                    ref = np.hstack([ref, wide[:, width:]])
+                    q = np.hstack([lag, x])
+                want = fresh((np.ascontiguousarray(ref), targs, k))(q)
+                np.testing.assert_array_equal(step(h, lag, x), want)
+        assert len(built) == mh
+
+
 def test_ann_clone_and_backtest_roundtrip(spark):
     """base.backtest refits a clone of the instance. A clone rebuilt
     from constructor kwargs once broke here: ann.__init__ rejected the

@@ -824,15 +824,51 @@ def test_python_kernel_group_stages_not_byte_coalesced(spark):
     """AQE coalesces shuffles by BYTES; per-entity panels are tiny in
     bytes but heavy in Python CPU, so an un-spread scipy group-map
     stage silently serializes onto one task (measured 3.5x on the
-    sf0.1 UDF feature pass). Pin: the group-map output keeps cluster
-    parallelism instead of collapsing to 1 partition."""
+    sf0.1 UDF feature pass). Pin: the group-map output keeps one
+    partition per core slot (defaultParallelism x _TASKS_PER_SLOT)
+    instead of collapsing to 1 partition, and is not sized to
+    shuffle.partitions (8 in this session)."""
     from functime_spark.functions.features_udf import extract_features_udf
     from functime_spark.operators.evaluation import normality_test
-    from functime_spark.pipeline._util import _cluster_parallelism
+    from functime_spark.pipeline._util import _TASKS_PER_SLOT, _cluster_parallelism
 
     rows = [(f"e{i % 40}", t, float(i % 7)) for i, t in enumerate(range(800))]
     y = spark.createDataFrame(rows, "entity string, t long, y double")
     target = _cluster_parallelism(y)
+    assert target == spark.sparkContext.defaultParallelism * _TASKS_PER_SLOT
+    assert target > 1
     out = extract_features_udf(y, ["sample_entropy"])
     assert out.rdd.getNumPartitions() == target
     assert normality_test(y).rdd.getNumPartitions() == target
+
+
+def test_python_kernel_stage_runs_one_task_per_slot(spark):
+    """The status tracker sees what the plan pin above promises: the
+    Python stage of an extract_features_udf collect runs exactly
+    defaultParallelism x _TASKS_PER_SLOT tasks. Each Python task pays
+    a fixed worker start-up cost (pipeline._util), so a return to
+    shuffle.partitions sizing shows here as more tasks."""
+    from functime_spark.functions.features_udf import extract_features_udf
+    from functime_spark.pipeline._util import _TASKS_PER_SLOT
+
+    sc = spark.sparkContext
+    rows = [(f"e{i % 40}", t, float(i % 7)) for i, t in enumerate(range(800))]
+    # 3 input partitions: the scan stage's task count differs from the
+    # target on any host with more than 3 slots
+    y = spark.createDataFrame(sc.parallelize(rows, 3), "entity string, t long, y double")
+    target = sc.defaultParallelism * _TASKS_PER_SLOT
+    group = "test-python-stage-tasks"
+    sc.setJobGroup(group, "extract_features_udf task count")
+    try:
+        extract_features_udf(y, ["sample_entropy"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = sorted(st.getJobIdsForGroup(group))
+    assert jobs
+    # the collect's last job ends in the result stage, where the
+    # grouped pandas UDF runs over the repartitioned panel
+    python_stage = st.getStageInfo(max(st.getJobInfo(jobs[-1]).stageIds))
+    assert python_stage.numTasks == target
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    assert {st.getStageInfo(s).numTasks for s in stages} <= {3, target}
