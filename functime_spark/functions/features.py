@@ -3,32 +3,46 @@
 Each feature re-expresses the semantics of the same-named function in
 the reference (functime feature_extractors.py — cited per feature) as a
 Spark aggregate expression over per-entity groups, with any required
-per-row context (lags, leads, per-entity moments, run ids) registered
-as *staged helper columns* computed by window functions.
+per-row context (lags, leads, positions, per-entity moments, value
+counts, run starts) registered as *staged helper columns*.
 
-Design — one shuffle for N features
------------------------------------
+Design — one shuffle, two sorts for N features
+----------------------------------------------
 ``extract_features(df, feats)`` builds every requested feature in a
 single plan:
 
-  stage 0..k   withColumns of window helpers (lag/lead/row index,
-               per-entity mean/std/min/max/quantiles, value counts,
-               run-length ids) — all Window specs partition by the
-               entity column, so Catalyst plans ONE exchange
-               (hashpartitioning(entity)) and sorts once per distinct
-               (partition, order) pair.
-  final        groupBy(entity).agg(f1, ..., fN) — reuses the same
-               partitioning, no second shuffle.
+  repartition  hashpartitioning(entity): the one exchange. It
+               satisfies every window below and the final groupBy
+               (subset rule), so no window ordering can add a second.
+  stage 0      ONE value-keyed window, (entity, value) in time order:
+               per-value counts and first occurrences, for the
+               duplicate and distinct-value features (expand-free,
+               where countDistinct would plan two more shuffles).
+  stage 1..2   ONE ordered (entity, time) chain: lags, leads, row
+               positions, cumulative sums and whole-series moments
+               (the full frame of the same spec) in stage 1; run
+               starts, the cumulative max of the positions where a
+               row flag changes, in stage 2. Flags and the previous
+               and next row's flags are row expressions over stage-1
+               lags/leads, so a run length is ``idx - start + 1`` and
+               no window is keyed by a run id.
+  final        groupBy(entity).agg(f1, ..., fN), fed in time order.
+               Keyed counts live here as conditional aggregates over
+               a static key domain: histogram bins, energy chunks and
+               the d! ordinal patterns — no key-partitioned window.
 
-At 100 TB this means feature extraction costs ONE shuffle of the panel
-regardless of how many features are requested (pinned by
-tests/test_plans.py): the up-front entity repartition satisfies every
-window spec — including subkey (entity, value)/(entity, bin) windows,
-which only add in-partition sorts — and the final groupBy; distinct-
-counting features are expressed expand-free via first-occurrence
-windows instead of countDistinct. Entities are the embarrassingly-
-parallel axis. No Python is involved at run time — everything below
-compiles to Catalyst expressions inside whole-stage codegen.
+The full registry plans 1 exchange, 2 sorts (the narrow input rows by
+(entity, value, time), then by (entity, time)) and 3 Window operators
+(pinned by tests/test_plans.py); it was 14 sorts and 16 Windows while
+run lengths and key counts had windows of their own. The helper and
+aggregate Columns of one (application, columns, feature spec) are
+built once and memoised: Columns name their inputs and hold no data,
+so a repeat call skips the py4j build and plans byte-identical
+expressions. With a handful of operators the generated classes fit
+Spark's default codegen cache, so a repeat call compiles nothing and
+needs no cache-size setting. Entities are the embarrassingly-parallel
+axis; no Python runs at execution time — everything compiles to
+Catalyst expressions inside whole-stage codegen.
 
 Null convention: series are assumed dense (no null target values),
 matching the reference's test fixtures; aggregates use F.count(x) = n.
@@ -36,6 +50,8 @@ matching the reference's test fixtures; aggregates use F.count(x) = n.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import math
 import threading
 from concurrent.futures import ThreadPoolExecutor
@@ -56,6 +72,13 @@ class PanelCtx:
     features is computed once) and assigned to *stages*: a helper may
     only reference columns from strictly earlier stages, because Spark
     does not allow nested window expressions in one projection.
+
+    Stage 0 holds only the value-keyed window (``vw``), stage 1 the
+    ordered windows (``ow``/``cw``/``ew``), stage 2 what derives from
+    them. The value-keyed window sorts the narrow input rows once by
+    (entity, value, time); the ordered chain then sorts once by
+    (entity, time) and hands the final aggregate its rows in time
+    order.
     """
 
     def __init__(self, entity: str, time: str, value: str):
@@ -75,12 +98,16 @@ class PanelCtx:
         return Window.partitionBy(self.entity).orderBy(self.time)
 
     @property
-    def ew(self):  # whole-entity frame
-        return Window.partitionBy(self.entity)
+    def ew(self):  # whole-entity frame, on the ordered spec so it shares its sort
+        return self.ow.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     @property
     def cw(self):  # cumulative frame
         return self.ow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+    @property
+    def vw(self):  # value-keyed window: each distinct value's rows in time order
+        return Window.partitionBy(self.entity, self.value).orderBy(self.time)
 
     # -- registry ----------------------------------------------------
     def helper(self, name: str, builder: Callable[[], Column], stage: int) -> Column:
@@ -99,43 +126,57 @@ class PanelCtx:
     def x(self) -> Column:
         return F.col(self.value)
 
-    # -- stage-0 helpers ---------------------------------------------
+    # -- stage-1 helpers: the ordered windows ------------------------
     def lag(self, k: int) -> Column:
-        return self.helper(f"__lag_{k}", lambda: F.lag(self.x, k).over(self.ow), 0)
+        return self.helper(f"__lag_{k}", lambda: F.lag(self.x, k).over(self.ow), 1)
 
     def lead(self, k: int) -> Column:
-        return self.helper(f"__lead_{k}", lambda: F.lead(self.x, k).over(self.ow), 0)
+        return self.helper(f"__lead_{k}", lambda: F.lead(self.x, k).over(self.ow), 1)
 
     def idx(self) -> Column:
         """Per-entity 0..n-1 position (time order)."""
         return self.helper(
-            "__idx", lambda: (F.row_number().over(self.ow) - F.lit(1)).cast("long"), 0
+            "__idx", lambda: (F.row_number().over(self.ow) - F.lit(1)).cast("long"), 1
         )
 
     def n(self) -> Column:
-        return self.helper("__n", lambda: F.count(self.x).over(self.ew), 0)
+        return self.helper("__n", lambda: F.count(self.x).over(self.ew), 1)
 
     def mean(self) -> Column:
-        return self.helper("__mean", lambda: F.avg(self.x).over(self.ew), 0)
+        return self.helper("__mean", lambda: F.avg(self.x).over(self.ew), 1)
 
     def std_pop(self) -> Column:
-        return self.helper("__std_pop", lambda: F.stddev_pop(self.x).over(self.ew), 0)
+        return self.helper("__std_pop", lambda: F.stddev_pop(self.x).over(self.ew), 1)
 
     def vmin(self) -> Column:
-        return self.helper("__min", lambda: F.min(self.x).over(self.ew), 0)
+        return self.helper("__min", lambda: F.min(self.x).over(self.ew), 1)
 
     def vmax(self) -> Column:
-        return self.helper("__max", lambda: F.max(self.x).over(self.ew), 0)
+        return self.helper("__max", lambda: F.max(self.x).over(self.ew), 1)
 
     def quantile(self, q: float) -> Column:
         key = f"__q_{str(q).replace('.', '_')}"
-        return self.helper(key, lambda: F.percentile(self.x, F.lit(q)).over(self.ew), 0)
+        return self.helper(key, lambda: F.percentile(self.x, F.lit(q)).over(self.ew), 1)
 
+    def cum_abs(self) -> Column:
+        return self.helper("__cum_abs", lambda: F.sum(F.abs(self.x)).over(self.cw), 1)
+
+    def tot_abs(self) -> Column:
+        return self.helper("__tot_abs", lambda: F.sum(F.abs(self.x)).over(self.ew), 1)
+
+    def diff(self) -> Column:
+        """x_t - x_{t-1} (null on first row, like Polars .diff())."""
+        lag1 = self.lag(1)
+        return self.x - lag1
+
+    # -- stage-0 helpers: the value-keyed window ---------------------
     def val_cnt(self) -> Column:
         """Occurrences of this row's value within its series."""
         return self.helper(
             "__val_cnt",
-            lambda: F.count(self.x).over(Window.partitionBy(self.entity, self.value)),
+            lambda: F.count(self.x).over(
+                self.vw.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            ),
             0,
         )
 
@@ -145,61 +186,33 @@ class PanelCtx:
         Lets distinct-counting features stay in the fused single-pass
         plan: Spark's countDistinct/sum_distinct trigger the
         expand+gid two-phase aggregate (two extra shuffles); counting
-        first occurrences is an exact, expand-free equivalent. The
-        (entity, value) window reuses the entity hash partitioning —
-        only an extra in-partition sort.
+        first occurrences is an exact, expand-free equivalent. It
+        shares ``vw`` with ``val_cnt``: one Window operator, one
+        in-partition sort, no exchange.
         """
-        return self.helper(
-            "__first_occ",
-            lambda: F.row_number().over(
-                Window.partitionBy(self.entity, self.value).orderBy(self.time)
-            )
-            == 1,
-            0,
-        )
+        return self.helper("__first_occ", lambda: F.row_number().over(self.vw) == 1, 0)
 
-    def cum_abs(self) -> Column:
-        return self.helper("__cum_abs", lambda: F.sum(F.abs(self.x)).over(self.cw), 0)
+    # -- run lengths -------------------------------------------------
+    def streak(self, key: str, flag: Column, prev: Column, nxt: Column):
+        """Run lengths of a boolean row flag, on the ordered chain.
 
-    def tot_abs(self) -> Column:
-        return self.helper("__tot_abs", lambda: F.sum(F.abs(self.x)).over(self.ew), 0)
-
-    # -- derived-expression helpers (arbitrary stage) ----------------
-    def expr_helper(self, name: str, expr_builder, stage: int) -> Column:
-        return self.helper(name, expr_builder, stage)
-
-    def diff(self) -> Column:
-        """x_t - x_{t-1} (null on first row, like Polars .diff())."""
-        lag1 = self.lag(1)
-        return self.x - lag1
-
-    # -- run-length (gaps-and-islands) machinery ---------------------
-    def streak(self, key: str, flag_builder: Callable[[], Column], flag_stage: int = 1):
-        """Register RLE helpers for a boolean per-row flag.
-
-        Returns (flag, run_len, run_start) columns. Mirrors the
-        reference's ``.rle()`` (feature_extractors.py:1013-1027) via
-        the classic change-marker + cumulative-sum island id.
+        ``flag``, ``prev`` and ``nxt`` are the flag of this, the
+        previous and the next row, written as row expressions over
+        stage-1 lags/leads (null where that row does not exist). A run
+        starts where the flag differs from the previous one; its start
+        is the cumulative max of those positions, so a row's running
+        length is ``idx - start + 1``. Returns (running length, run
+        end): the end is the last row of a true run, where the next
+        flag is not true. Mirrors the reference's ``.rle()``
+        (feature_extractors.py:1013-1027) without any run-keyed window.
         """
-        flag = self.helper(f"__flag_{key}", flag_builder, flag_stage)
-        chg = self.helper(
-            f"__chg_{key}",
-            lambda: (~flag.eqNullSafe(F.lag(flag).over(self.ow))).cast("long"),
-            flag_stage + 1,
-        )
-        grp = self.helper(
-            f"__grp_{key}", lambda: F.sum(chg).over(self.cw), flag_stage + 2
-        )
-        run_w = Window.partitionBy(self.entity, F.col(f"__grp_{key}"))
-        run_len = self.helper(
-            f"__len_{key}", lambda: F.count(F.lit(1)).over(run_w), flag_stage + 3
-        )
-        run_start = self.helper(
+        idx = self.idx()
+        start = self.helper(
             f"__start_{key}",
-            lambda: F.row_number().over(run_w.orderBy(self.time)) == 1,
-            flag_stage + 3,
+            lambda: F.max(F.when(~flag.eqNullSafe(prev), idx)).over(self.cw),
+            2,
         )
-        return flag, run_len, run_start
+        return idx - start + 1, flag & ~F.coalesce(nxt, F.lit(False))
 
 
 # ---------------------------------------------------------------------------
@@ -252,10 +265,10 @@ def benford_correlation(c: PanelCtx) -> Column:
     seeded counts directly via the closed form over nine conditional
     counts — a pure aggregate, no extra shuffle and no UDF.
     """
-    c.expr_helper(
+    c.helper(
         "__benford_digit",
         lambda: F.regexp_extract(c.x.cast("string"), "[1-9]", 0),
-        0,
+        1,
     )
     ben = [math.log10(1.0 + 1.0 / d) for d in range(1, 10)]
     # ONE F.expr call: building this closed form as Column objects cost
@@ -280,30 +293,41 @@ def benford_correlation(c: PanelCtx) -> Column:
     )
 
 
+def _entropy(key: str, domain) -> Column:
+    """-sum (c/N) ln(c/N) over the non-zero counts c of helper column
+    ``key`` taking each value of the static ``domain``; N counts the
+    non-null keys, and an entity with none is NULL.
+
+    Conditional counts in the final aggregate, so a histogram needs no
+    key-partitioned window (and no sort). One F.expr: the terms parse
+    JVM-side in one py4j call.
+    """
+    cnts = [f"count(CASE WHEN {key} = {k} THEN 1 END)" for k in domain]
+    tot = f"count({key})"
+    terms = " + ".join(
+        f"CASE WHEN {cn} > 0 THEN {cn} / {tot} * ln({cn} / {tot}) ELSE 0D END"
+        for cn in cnts
+    )
+    return F.expr(f"CASE WHEN {tot} > 0 THEN -({terms}) END")
+
+
 def binned_entropy(c: PanelCtx, bin_count: int = 10) -> Column:
     """Entropy of equal-width histogram counts. Ref :380-408.
 
     bin = floor((x - min) / (1e-12 + range/bins)); H = -sum p ln p with
-    p = bin_count/n. Computed without a second shuffle via the
-    per-row-contribution identity sum_rows ln(c_b/n)/n = sum_b p ln p.
+    p = bin_count/n, over the bins 0..bin_count (the maximum lands in
+    bin ``bin_count`` when the 1e-12 is lost to rounding).
     """
     vmin, vmax = c.vmin(), c.vmax()
-    bin_col = c.expr_helper(
-        f"__bin_{bin_count}",
+    key = f"__bin_{bin_count}"
+    c.helper(
+        key,
         lambda: F.floor(
             (c.x - vmin) / (F.lit(1e-12) + (vmax - vmin) / F.lit(bin_count))
         ),
-        1,
-    )
-    bin_cnt = c.expr_helper(
-        f"__bin_cnt_{bin_count}",
-        lambda: F.count(F.lit(1)).over(
-            Window.partitionBy(c.entity, F.col(f"__bin_{bin_count}"))
-        ),
         2,
     )
-    n = c.n()
-    return -F.sum(F.log(bin_cnt / n) / n)
+    return _entropy(key, range(bin_count + 1))
 
 
 def c3(c: PanelCtx, n_lags: int = 1) -> Column:
@@ -325,16 +349,8 @@ def change_quantiles(
     scalar summary instead of list, for a stable distributed output).
     """
     lo, hi = c.quantile(q_low), c.quantile(q_high)
-    inside = c.expr_helper(
-        f"__corridor_{q_low}_{q_high}",
-        lambda: c.x.between(lo, hi),
-        1,
-    )
-    prev_inside = c.expr_helper(
-        f"__corridor_prev_{q_low}_{q_high}",
-        lambda: F.coalesce(F.lag(inside).over(c.ow), F.lit(False)),
-        2,
-    )
+    inside = c.x.between(lo, hi)
+    prev_inside = F.coalesce(c.lag(1).between(lo, hi), F.lit(False))
     d = c.diff()
     if is_abs:
         d = F.abs(d)
@@ -378,28 +394,22 @@ def energy_ratios(c: PanelCtx, n_chunks: int = 10) -> Column:
     """Per-chunk sum(x^2) / total, over n_chunks equal segments. Ref :628-658.
 
     Chunk length = ceil(n / n_chunks) (the reference zero-pads to a
-    multiple); trailing all-padding chunks contribute ratio 0.
+    multiple); trailing all-padding chunks contribute ratio 0. One
+    conditional sum per chunk in the final aggregate.
     """
     n, idx = c.n(), c.idx()
-    chunk = c.expr_helper(
+    chunk = c.helper(
         f"__chunk_{n_chunks}",
         lambda: F.floor(idx / F.ceil(n / F.lit(n_chunks))),
-        1,
-    )
-    chunk_sum = c.expr_helper(
-        f"__chunk_sum_{n_chunks}",
-        lambda: F.sum(c.x * c.x).over(
-            Window.partitionBy(c.entity, F.col(f"__chunk_{n_chunks}"))
-        ),
         2,
     )
-    m = F.map_from_entries(
-        F.array_distinct(F.collect_list(F.struct(chunk.cast("int"), chunk_sum)))
-    )
-    total = F.sum(c.x * c.x)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_chunks - 1)),
-        lambda i: F.coalesce(F.element_at(m, i), F.lit(0.0)) / total,
+    sq = c.x * c.x
+    total = F.sum(sq)
+    return F.array(
+        *[
+            F.coalesce(F.sum(F.when(chunk == k, sq)), F.lit(0.0)) / total
+            for k in range(n_chunks)
+        ]
     )
 
 
@@ -472,18 +482,22 @@ def linear_trend(c: PanelCtx) -> Column:
     return F.struct(beta.alias("slope"), alpha.alias("intercept"), rss.alias("rss"))
 
 
+def _longest(c: PanelCtx, key: str, flag: Column, prev: Column, nxt: Column) -> Column:
+    """Longest true run of a row flag (0 when there is none)."""
+    run_len, _ = c.streak(key, flag, prev, nxt)
+    return F.coalesce(F.max(F.when(flag, run_len)), F.lit(0)).cast("long")
+
+
 def longest_streak_above_mean(c: PanelCtx) -> Column:
     """Longest run of x > mean. Ref :997-1027."""
     mu = c.mean()
-    flag, run_len, _ = c.streak("abovemean", lambda: c.x > mu, 1)
-    return F.coalesce(F.max(F.when(flag, run_len)), F.lit(0)).cast("long")
+    return _longest(c, "abovemean", c.x > mu, c.lag(1) > mu, c.lead(1) > mu)
 
 
 def longest_streak_below_mean(c: PanelCtx) -> Column:
     """Ref :1030-1060."""
     mu = c.mean()
-    flag, run_len, _ = c.streak("belowmean", lambda: c.x < mu, 1)
-    return F.coalesce(F.max(F.when(flag, run_len)), F.lit(0)).cast("long")
+    return _longest(c, "belowmean", c.x < mu, c.lag(1) < mu, c.lead(1) < mu)
 
 
 def mean_abs_change(c: PanelCtx) -> Column:
@@ -528,17 +542,8 @@ def mean_second_derivative_central(c: PanelCtx) -> Column:
 
 def number_crossings(c: PanelCtx, crossing_value: float = 0.0) -> Column:
     """Count of sign changes of (x > m). Ref :1165-1184."""
-    above = c.expr_helper(
-        f"__above_{str(crossing_value).replace('.', '_').replace('-', 'm')}",
-        lambda: c.x > F.lit(crossing_value),
-        0,
-    )
-    prev = F.lag(above).over(c.ow)
-    chg = c.expr_helper(
-        f"__cross_{str(crossing_value).replace('.', '_').replace('-', 'm')}",
-        lambda: F.when(above != prev, 1).otherwise(0),
-        1,
-    )
+    m = F.lit(crossing_value)
+    chg = F.when((c.x > m) != (c.lag(1) > m), 1).otherwise(0)
     return F.sum(chg).cast("long")
 
 
@@ -567,7 +572,8 @@ def permutation_entropy(c: PanelCtx, tau: int = 1, n_dims: int = 3) -> Column:
 
     Pattern id encodes the rank vector of (x_t, x_{t+1}, ..,
     x_{t+d-1}) with stable tie-breaking by position (= Polars
-    arg_sort); entropy is natural-log, normalized counts.
+    arg_sort); entropy is natural-log, normalized counts over the d!
+    possible patterns.
     """
     d = n_dims
     vals = [c.x] + [c.lead(i) for i in range(1, d)]
@@ -591,18 +597,13 @@ def permutation_entropy(c: PanelCtx, tau: int = 1, n_dims: int = 3) -> Column:
     if tau > 1:
         valid = valid & (idx % tau == 0)
     key = f"__pe_{tau}_{d}"
-    pat_col = c.expr_helper(key, lambda: F.when(valid, pattern), 1)
-    pat_cnt = c.expr_helper(
-        f"{key}_cnt",
-        lambda: F.count(pat_col).over(Window.partitionBy(c.entity, pat_col)),
-        2,
+    c.helper(key, lambda: F.when(valid, pattern), 2)
+    # the pattern ids of the d! rank vectors, enumerated in Python
+    domain = sorted(
+        sum(r * d**i for i, r in enumerate(ranks))
+        for ranks in itertools.permutations(range(d))
     )
-    pat_tot = c.expr_helper(
-        f"{key}_tot", lambda: F.count(pat_col).over(c.ew), 2
-    )
-    return -F.sum(
-        F.when(pat_col.isNotNull(), F.log(pat_cnt / pat_tot) / pat_tot)
-    )
+    return _entropy(key, domain)
 
 
 def range_count(
@@ -621,8 +622,6 @@ def range_count(
 
 def ratio_beyond_r_sigma(c: PanelCtx, ratio: float = 0.25) -> Column:
     """Share of points beyond mean ± r*std_pop. Ref :1401-1425."""
-    mu, sd = F.avg(c.x), F.stddev_pop(c.x)
-    lo, hi = mu - F.lit(ratio) * sd, mu + F.lit(ratio) * sd
     mu_h, sd_h = c.mean(), c.std_pop()
     outside = ~c.x.between(
         mu_h - F.lit(ratio) * sd_h, mu_h + F.lit(ratio) * sd_h
@@ -715,29 +714,29 @@ def range_change(c: PanelCtx, percentage: bool = True) -> Column:
     return F.max(c.x) - F.min(c.x)
 
 
-def _diff_streak(c: PanelCtx, above: bool, threshold: float):
-    key = f"__dstreak_{'ge' if above else 'le'}_{str(threshold).replace('.', '_').replace('-', 'm')}"
-    d = c.diff()
+def _diff_flags(c: PanelCtx, above: bool, threshold: float):
+    """(key, flag, prev, nxt) of diff >= / <= threshold, for
+    ``PanelCtx.streak``. The first row's flag is null: its run is
+    discarded, and it must not merge with an adjacent False run."""
+    t = F.lit(threshold)
 
-    def flag_builder():
-        cond = d >= threshold if above else d <= threshold
-        # keep the first-row null as null (its run is discarded anyway,
-        # but must not merge with an adjacent False run)
-        return F.when(c.lag(1).isNotNull(), cond)
+    def cond(d: Column) -> Column:
+        return d >= t if above else d <= t
 
-    return c.streak(key, flag_builder, 1)
+    lag1, lag2, lead1 = c.lag(1), c.lag(2), c.lead(1)
+    flag = F.when(lag1.isNotNull(), cond(c.x - lag1))
+    prev = F.when(lag2.isNotNull(), cond(lag1 - lag2))
+    return f"{'ge' if above else 'le'}_{threshold}", flag, prev, cond(lead1 - c.x)
 
 
 def longest_streak_above(c: PanelCtx, threshold: float = 0.0) -> Column:
     """Longest run of diff >= threshold. Ref :1805-1837."""
-    flag, run_len, _ = _diff_streak(c, True, threshold)
-    return F.coalesce(F.max(F.when(flag, run_len)), F.lit(0)).cast("long")
+    return _longest(c, *_diff_flags(c, True, threshold))
 
 
 def longest_streak_below(c: PanelCtx, threshold: float = 0.0) -> Column:
     """Longest run of diff <= threshold. Ref :1840-1872."""
-    flag, run_len, _ = _diff_streak(c, False, threshold)
-    return F.coalesce(F.max(F.when(flag, run_len)), F.lit(0)).cast("long")
+    return _longest(c, *_diff_flags(c, False, threshold))
 
 
 def longest_winning_streak(c: PanelCtx) -> Column:
@@ -755,24 +754,15 @@ def streak_length_stats(
 ) -> Column:
     """Distribution stats over run lengths of diff-threshold streaks.
 
-    Ref :1752-1802. p10/p90 use the reference's 'nearest' quantile
-    (Polars default: sorted value at round(q*(n-1))), median is the
-    true linear median — both replayed exactly in the DuckDB oracle.
-    Mode ties break to the smallest length (reference sorts then takes
-    first).
+    Ref :1752-1802. Each run's length is read at its last row. p10/p90
+    use the reference's 'nearest' quantile (Polars default: sorted
+    value at round(q*(n-1))), median is the true linear median — both
+    replayed exactly in the DuckDB oracle. Mode ties break to the
+    smallest length (reference sorts then takes first), as
+    ``mode(deterministic=True)`` does.
     """
-    flag, run_len, run_start = _diff_streak(c, above, threshold)
-    v = F.when(flag & run_start, run_len)
-    # per-length frequency among valid runs, for the mode
-    mode_key = f"__modecnt_{'ge' if above else 'le'}_{str(threshold).replace('.', '_').replace('-', 'm')}"
-    mode_cnt = c.expr_helper(
-        mode_key,
-        lambda: F.count(F.when(flag & run_start, 1)).over(
-            Window.partitionBy(c.entity, run_len)
-        ),
-        5,
-    )
-    mode = F.max_by(v, F.when(flag & run_start, F.struct(mode_cnt, -run_len)))
+    run_len, run_end = c.streak(*_diff_flags(c, above, threshold))
+    v = F.when(run_end, run_len)
     lens = F.array_sort(F.collect_list(v))  # nulls dropped by collect_list
     n_runs = F.size(lens)
 
@@ -788,7 +778,7 @@ def streak_length_stats(
         _nearest(0.1).alias("p10"),
         F.percentile(v, F.lit(0.5)).alias("median"),
         _nearest(0.9).alias("p90"),
-        mode.cast("long").alias("mode"),
+        F.mode(v, deterministic=True).cast("long").alias("mode"),
     )
 
 
@@ -858,6 +848,44 @@ FEATURES: dict = {
 }
 
 
+def _build(entity: str, time: str, value: str, specs: tuple):
+    """(stages, aggs) of one fused plan: the helper columns per stage
+    and the feature aggregates, each aliased to its name."""
+    ctx = PanelCtx(entity, time, value)
+
+    # Expression construction is py4j-round-trip bound (thousands of
+    # JVM calls for the full registry): build features concurrently so
+    # the socket latencies overlap. ex.map keeps output order; Column
+    # construction is pure JVM object creation (thread-safe), and the
+    # shared ctx registration is serialized by PanelCtx._lock.
+    def _one(item):
+        name, builder, params = item
+        return builder(ctx, **dict(params)).alias(name)
+
+    if len(specs) > 4:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            aggs = tuple(ex.map(_one, specs))
+    else:
+        aggs = tuple(_one(s) for s in specs)
+    return [st for st in ctx.stages if st], aggs
+
+
+@functools.lru_cache(maxsize=16)
+def _build_memo(app_id: str, entity: str, time: str, value: str, specs: tuple):
+    """``_build``, once per application. Columns name their inputs and
+    hold no data, so one build serves every frame with these column
+    names; keyed by the application id, a new session or JVM never
+    sees the Columns of an old one."""
+    return _build(entity, time, value, specs)
+
+
+def _app_id(df: DataFrame) -> str | None:
+    try:
+        return df.sparkSession.sparkContext.applicationId
+    except AttributeError:  # Spark Connect client: no sparkContext
+        return None
+
+
 def extract_features(
     df: DataFrame,
     feats: dict | list | None = None,
@@ -881,7 +909,6 @@ def extract_features(
     if isinstance(feats, list):
         feats = {name: FEATURES[name] for name in feats}
 
-    ctx = PanelCtx(entity, time, value)
     specs = []
     for name, spec in feats.items():
         if isinstance(spec, tuple):
@@ -890,32 +917,24 @@ def extract_features(
             builder, params = spec, {}
         else:  # params dict for a registry feature
             builder, params = FEATURES[name][0], spec
-        specs.append((name, builder, params))
-
-    # Expression construction is py4j-round-trip bound (~10k JVM calls
-    # for the full registry): build features concurrently so the
-    # socket latencies overlap. ex.map keeps output order; Column
-    # construction is pure JVM object creation (thread-safe), and the
-    # shared ctx registration is serialized by PanelCtx._lock.
-    def _build(item):
-        name, builder, params = item
-        return builder(ctx, **params).alias(name)
-
-    if len(specs) > 4:
-        with ThreadPoolExecutor(max_workers=8) as ex:
-            aggs = list(ex.map(_build, specs))
+        specs.append((name, builder, tuple(sorted(params.items()))))
+    specs, app_id = tuple(specs), _app_id(df)
+    try:
+        hash(specs)
+    except TypeError:  # unhashable params: nothing to key the memo on
+        app_id = None
+    if app_id is None:
+        stages, aggs = _build(entity, time, value, specs)
     else:
-        aggs = [_build(s) for s in specs]
+        stages, aggs = _build_memo(app_id, entity, time, value, specs)
 
     # pin the single shuffle up front: hashpartitioning(entity)
-    # satisfies every window spec below (entity-only AND subkey
-    # (entity, value)/(entity, bin) specs — subset rule) and the final
-    # groupBy, so the planner's window ordering can never introduce a
-    # second exchange
+    # satisfies every window spec below (entity-only AND the (entity,
+    # value) subkey spec — subset rule) and the final groupBy, so the
+    # planner's window ordering can never introduce a second exchange
     out = df.select(entity, time, value).repartition(F.col(entity))
-    for stage_cols in ctx.stages:
-        if stage_cols:
-            out = out.withColumns(stage_cols)
+    for stage_cols in stages:
+        out = out.withColumns(stage_cols)
     return out.groupBy(entity).agg(*aggs)
 
 

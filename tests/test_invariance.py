@@ -63,6 +63,12 @@ def _assert_invariant(spark, df, call):
     assert not moved, f"(input partitions, shuffle.partitions) {moved} differ from {first}"
 
 
+def _extract_features(df):
+    from functime_spark.functions.features import extract_features
+
+    return extract_features(df)
+
+
 def _extract_features_udf(df):
     from functime_spark.functions.features_udf import extract_features_udf
 
@@ -102,6 +108,7 @@ def _holt():
 
 
 CASES = {
+    "extract_features": (_panel, _extract_features),
     "extract_features_udf": (_panel, _extract_features_udf),
     "normality_test": (_panel, _normality_test),
     "minhash_dedup": (_docs, _minhash_dedup),

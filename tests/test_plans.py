@@ -3,6 +3,7 @@ codegen presence. A second shuffle sneaking into a panel operator is a
 2x regression at 100 TB — fail here, not there."""
 
 import os
+import re
 from pathlib import Path
 
 import pytest
@@ -45,6 +46,28 @@ def test_fused_native_features_single_shuffle(events):
     from functime_spark.plans import assert_max_exchanges
 
     assert_max_exchanges(extract_features(events), 1)
+
+
+def test_fused_native_features_plan_shape(events):
+    """Behind its one exchange the full registry sorts twice — once by
+    (entity, value, time) for the value-keyed window, once by (entity,
+    time) for the ordered chain — in 3 Window operators. Run lengths
+    and keyed counts (histogram bins, chunks, ordinal patterns) are
+    row expressions and conditional aggregates: no window partitions
+    by a helper column."""
+    from functime_spark.functions.features import extract_features
+    from functime_spark.plans import count_exchanges, explain_str
+
+    out = extract_features(events)
+    final = explain_str(out, "simple").split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bSort \[", final)) <= 2, final
+    # each Window line ends "AS <alias>#<id>], [partition keys](, [order])"
+    windows = re.findall(r"\bWindow \[.*AS \w+#\d+L?\], (\[.*)$", final, re.M)
+    assert len(windows) == len(re.findall(r"\bWindow \[", final)), final
+    assert 0 < len(windows) <= 3, final
+    helper_keyed = [w for w in windows if re.search(r"__(grp|len|bin|chunk|pe)_", w)]
+    assert helper_keyed == [], helper_keyed
+    assert count_exchanges(out) == 1
 
 
 def test_preprocessing_single_shuffle(events):
