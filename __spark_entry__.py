@@ -245,9 +245,9 @@ def q_forecast_naive(spark, sf_dir):
 
 def q_forecast_theta(spark, sf_dir):
     """Theta method (r9, beyond-reference): OLS trend over the integer
-    index + closed-form SES (alpha=0.5) on the theta=2 line, equal
-    combination — the oracle replays the OLS sums, the
-    (1-a)^(n-1)*z_1 + sum a*(1-a)^(n-t)*z_t level, and the
+    index + SES (alpha=0.5, folded as its recursion) on the theta=2
+    line, equal combination — the oracle replays the OLS sums, the
+    unrolled (1-a)^(n-1)*z_1 + sum a*(1-a)^(n-t)*z_t level, and the
     extrapolation term for term."""
     _ensure_nanos_conf(spark)
     from functime_spark.forecasting.theta import theta
@@ -259,10 +259,10 @@ def q_forecast_theta(spark, sf_dir):
 
 def q_forecast_holt(spark, sf_dir):
     """Holt linear-trend smoothing (r10, beyond-reference): the
-    weighted-sum (M-power) state computation must land on the SAME
-    level/trend the literal recursion produces — the oracle replays
-    the recursion itself with a recursive CTE per entity (alpha=0.5,
-    beta=0.25, phi=1: every M entry a dyadic rational)."""
+    engine folds the level/trend recursion over each entity's
+    time-sorted array; the oracle replays the same recursion with a
+    recursive CTE per entity (alpha=0.5, beta=0.25, phi=1: every
+    constant a dyadic rational)."""
     _ensure_nanos_conf(spark)
     from functime_spark.forecasting.holt import holt
 
@@ -310,7 +310,7 @@ def q_forecast_hw_mult(spark, sf_dir):
 def q_forecast_croston(spark, sf_dir):
     """Croston SBA intermittent-demand forecaster (r10,
     beyond-reference): zeros planted deterministically
-    (floor(value) % 3 == 0), twin closed-form SES over demand sizes
+    (floor(value) % 3 == 0), twin SES folded over demand sizes
     and inter-demand intervals (alpha=0.25 — 1-a and the SBA 1-a/2
     factor are exact dyadic doubles), flat-horizon forecast; the
     oracle replays the nonzero split, interval lags, SES weights, and
@@ -332,9 +332,9 @@ def q_forecast_croston(spark, sf_dir):
 
 def q_forecast_ses(spark, sf_dir):
     """Simple exponential smoothing (r10, beyond-reference): the
-    closed-form weighted level (alpha=0.5 — every weight a dyadic
-    rational) replayed as the same weighted sum in SQL; flat
-    horizon."""
+    level folded as its recursion (alpha=0.5), replayed as the
+    unrolled weighted sum in SQL (every weight a dyadic rational);
+    flat horizon."""
     _ensure_nanos_conf(spark)
     from functime_spark.forecasting.ses import ses
 

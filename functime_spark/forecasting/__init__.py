@@ -3,7 +3,9 @@ backtest / conformalize, `base.py`):
 
 - classical per-entity families (naive, snaive, ses, holt, theta,
   croston, holt_winters): one per-entity state frame each, forecasts
-  as closed-form horizon expressions (`EntityForecaster`);
+  as closed-form horizon expressions (`EntityForecaster`); the
+  smoothing families (ses, holt, theta, croston) fold their literal
+  recursion natively over each entity's time-sorted targets;
 - global autoregressive models on the lag design (linear, censored,
   knn/ann, trees), sharing one fh-step recursion kernel (`_ar.py`);
 - ensembles over both: elite (per-entity selection and blending) and

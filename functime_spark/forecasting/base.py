@@ -260,7 +260,13 @@ class EntityForecaster(Forecaster):
     supplies two things: `_fit_entities`, one frame (entity, low,
     params...) with one row per entity, and `_horizon`, the forecast
     at the 0-based `step` column as an expression over that row.
-    Cutoffs and the step explode are served here, once."""
+    Cutoffs and the step explode are served here, once.
+
+    The smoothing families (ses, holt, theta, croston) build that row
+    from `series`: one aggregate holding each entity's time-sorted
+    targets, over which an `F.aggregate` fold runs the family's
+    recursion. A NULL target is read as 0.0 — the same forecast as
+    the zero-filled series."""
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         entities = self._fit_entities(y)
@@ -285,46 +291,24 @@ class EntityForecaster(Forecaster):
         )
 
 
-def positions(y: DataFrame, p) -> DataFrame:
-    """(entity, __y double, __t 1-based position, time): the one
-    window pass the closed-form smoothing families (ses, holt, theta,
-    croston) fit over."""
-    w = Window.partitionBy(p.entity).orderBy(p.time)
-    return y.select(
-        p.entity,
-        F.col(p.target).cast("double").alias("__y"),
-        F.row_number().over(w).alias("__t"),
-        F.col(p.time),
+def sorted_values(p, value: Column | None = None) -> Column:
+    """Aggregate: `value` (default: the target) of each row of the
+    group as one array in time order — one hash aggregate (collect +
+    in-expression sort), the same for every layout of the input."""
+    v = F.col(p.target) if value is None else value
+    pairs = F.array_sort(
+        F.collect_list(F.struct(F.col(p.time).alias("t"), v.alias("v")))
     )
+    return F.transform(pairs, lambda s: s["v"])
 
 
-def ses_weight(alpha: float, t: Column, n: Column) -> Column:
-    """Closed-form SES weight of position t (1-based) in a length-n
-    sequence. The recursion l_t = a x_t + (1-a) l_{t-1}, l_1 = x_1
-    unrolls to l_n = (1-a)^(n-1) x_1 + sum_{t>=2} a (1-a)^(n-t) x_t.
-    The exponents are exact integers, so the weights are bit-stable;
-    callers sum them with `ordered_sum` so the sums are too."""
-    a = float(alpha)
-    return F.when(t == 1, F.pow(F.lit(1.0 - a), n - 1)).otherwise(
-        F.lit(a) * F.pow(F.lit(1.0 - a), n - t)
-    )
-
-
-def ordered_sum(value: Column, order: Column) -> Column:
-    """Aggregate: the sum of the non-null `value`s added in `order`
-    (unique within the group), NULL when there are none — F.sum's
-    result, made independent of partitioning. F.sum merges partial
-    sums in shuffle-fetch order, so the last bits of a weighted double
-    sum moved between two runs of the same plan (up to 9.8e-16
-    relative on a seeded ses panel). Sorting the (order, value) pairs
-    and folding left to right pins every bit."""
-    pairs = F.sort_array(
-        F.collect_list(F.struct(order.alias("o"), value.alias("v")))
-    )
-    return F.aggregate(
-        F.filter(pairs, lambda x: x["v"].isNotNull()),
-        F.lit(None).cast("double"),
-        lambda acc, x: F.coalesce(acc + x["v"], x["v"]),
+def series(y: DataFrame, p) -> DataFrame:
+    """(entity, low, __y): one aggregate per entity, `__y` its targets
+    in time order as doubles with a NULL read as 0.0 — the one input
+    the smoothing folds (ses, holt, theta, croston) run over."""
+    filled = F.coalesce(F.col(p.target).cast("double"), F.lit(0.0))
+    return y.groupBy(p.entity).agg(
+        F.max(p.time).alias("low"), sorted_values(p, filled).alias("__y")
     )
 
 

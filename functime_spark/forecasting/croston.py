@@ -14,26 +14,18 @@ sequence is smoothed with SES (same alpha, the classical choice):
 
 flat across the horizon. All-zero series forecast 0.
 
-Scale shape — the theta/SES discipline twice: SES evaluates in CLOSED
-FORM (l_k = (1-a)^(k-1) x_1 + sum_{i>=2} a (1-a)^(k-i) x_i), so the
-fit is one window pass over the panel (row positions), a filter to
-the nonzero rows + one lag window for intervals, and ONE weighted-sum
-aggregate producing both levels. No UDF, no iteration; the state
-frame is n_entities rows.
+The fit is ONE aggregate per entity (`base.series`: the time-sorted
+targets) and one native `F.aggregate` fold over that array that
+steps both SES recursions at each nonzero value — no UDF, no window,
+no join; the state frame is n_entities rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import (
-    EntityForecaster,
-    ordered_sum,
-    positions,
-    ses_weight,
-)
-from functime_spark.materialize import materialize
+from functime_spark.forecasting.base import EntityForecaster, series
 
 
 class croston(EntityForecaster):
@@ -54,36 +46,35 @@ class croston(EntityForecaster):
 
     def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        rows = positions(y, p)
-        cut = materialize(
-            rows.groupBy(p.entity).agg(F.max(p.time).alias("low"))
+        a = float(self.alpha)
+        # t: 1-based position, last: position of the previous demand;
+        # the levels stay NULL until the first demand seeds them
+        zero = F.struct(
+            F.lit(0.0).alias("t"),
+            F.lit(0.0).alias("last"),
+            F.lit(None).cast("double").alias("lz"),
+            F.lit(None).cast("double").alias("lp"),
         )
-        nz = rows.where(F.col("__y") != 0.0)
-        wd = Window.partitionBy(p.entity).orderBy("__t")
-        nz = nz.select(
-            p.entity,
-            F.col("__y").alias("__z"),
-            (
-                F.col("__t")
-                - F.coalesce(F.lag("__t").over(wd), F.lit(0))
-            ).cast("double").alias("__p"),
-            F.row_number().over(wd).alias("__i"),  # demand index 1..k
-        )
-        # closed-form SES weights over the demand index, applied to
-        # BOTH the size and interval sequences in the SAME aggregate
-        stats = nz.groupBy(p.entity).agg(F.max("__i").alias("__k"))
-        j = nz.join(stats, on=p.entity)
-        c = ses_weight(self.alpha, F.col("__i"), F.col("__k"))
-        lv = j.groupBy(p.entity).agg(
-            ordered_sum(c * F.col("__z"), F.col("__i")).alias("__lz"),
-            ordered_sum(c * F.col("__p"), F.col("__i")).alias("__lp"),
-        )
-        # all-zero entities have no nz rows: left join -> null levels
-        # -> forecast 0
-        return materialize(cut.join(lv, on=p.entity, how="left"))
+
+        def step(s, v):
+            t = s["t"] + 1.0
+            gap = t - s["last"]
+            lz = F.coalesce(F.lit(a) * v + F.lit(1.0 - a) * s["lz"], v)
+            lp = F.coalesce(F.lit(a) * gap + F.lit(1.0 - a) * s["lp"], gap)
+            demand = v != 0.0
+            return F.struct(
+                t.alias("t"),
+                F.when(demand, t).otherwise(s["last"]).alias("last"),
+                F.when(demand, lz).otherwise(s["lz"]).alias("lz"),
+                F.when(demand, lp).otherwise(s["lp"]).alias("lp"),
+            )
+
+        fold = F.aggregate(F.col("__y"), zero, step)
+        # all-zero entities keep NULL levels -> forecast 0
+        return series(y, p).select(p.entity, "low", fold.alias("__s"))
 
     def _horizon(self, step: Column) -> Column:
         bias = 1.0 - self.alpha / 2.0 if self.variant == "sba" else 1.0
         return F.coalesce(
-            F.lit(bias) * F.col("__lz") / F.col("__lp"), F.lit(0.0)
+            F.lit(bias) * F.col("__s.lz") / F.col("__s.lp"), F.lit(0.0)
         )

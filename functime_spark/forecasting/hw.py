@@ -10,14 +10,16 @@ b_m = (mean(y_{m+1..2m}) - mean(y_1..m)) / m, s_i = y_i - l_m):
     s_t = gamma * (y_t - l_{t-1} - b_{t-1}) + (1 - gamma) * s_{t-m}
     yhat_{n+h} = l_n + h * b_n + s_{n-m+1+((h-1) mod m)}
 
-Engine-tier decision, measured against its siblings: SES and Holt
-unroll natively because their state is 1- and 2-dimensional (the
-M-power weight tables are O(maxT) scalars/pairs). Holt-Winters' state
-is (m+2)-dimensional, so the same unrolling ships an
-O(maxT * m^2)-entry weight tensor plus an O(maxT * m * 2m)
-init-coupling tensor — for hourly/daily seasonality (m = 24) that is
-megabytes of broadcast literals feeding 26 sums per observation. The
-inherently sequential per-entity kernel is the honest shape here:
+Engine-tier decision, measured against its siblings: ses, holt,
+theta and croston fit by a native `F.aggregate` fold over each
+entity's time-sorted targets, their state a few scalars. Here the
+state carries the m-slot season, and a fold can only rebuild it as a
+new array every step (`concat(slice(s, 2, m - 1), array(s_new))`), an
+O(m) copy per observation. Fitting 2000 entities x 500 points
+(4 vCPUs, 3 warm reps) that fold took 5.0-5.7 s against this
+kernel's 3.0-3.4 s at m = 168; at m = 24 it took 2.1-3.3 s against
+3.0-3.9 s. The copy grows with m, so one kernel serves every period.
+The inherently sequential per-entity kernel is the honest shape here:
 ONE Arrow-batched applyInPandas pass over entity groups (the
 boxcox/deseasonalize tier), state O(m) per entity, entities the
 parallel axis — at 100 TB the fit scales by adding executors, and

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import EntityForecaster
+from functime_spark.forecasting.base import EntityForecaster, sorted_values
 
 
 class naive(EntityForecaster):
@@ -38,12 +38,7 @@ class snaive(EntityForecaster):
 
     def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        # one hash aggregate (collect + in-expression sort + tail
-        # slice) instead of a window pass building a list per row
-        sorted_vals = F.transform(
-            F.array_sort(F.collect_list(F.struct(p.time, p.target))),
-            lambda s: s[p.target],
-        )
+        sorted_vals = sorted_values(p)
         tail = F.when(
             F.size(sorted_vals) <= self.sp, sorted_vals
         ).otherwise(F.slice(sorted_vals, -self.sp, self.sp))

@@ -6,9 +6,9 @@ applies it twice). Beyond-reference as a NAMED forecaster.
     l_t = alpha * y_t + (1 - alpha) * l_{t-1},  l_1 = y_1
     yhat_h = l_n  (flat)
 
-Evaluated in CLOSED FORM (the theta/SES weighted sum): ONE window
-pass for positions + ONE weighted aggregate per entity — no UDF, no
-iteration; state is n_entities rows.
+The fit is ONE aggregate per entity (`base.series`: the time-sorted
+targets) and a native `F.aggregate` fold that runs the recursion
+above over that array — no UDF, no window; state is n_entities rows.
 """
 
 from __future__ import annotations
@@ -16,13 +16,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import (
-    EntityForecaster,
-    ordered_sum,
-    positions,
-    ses_weight,
-)
-from functime_spark.materialize import materialize
+from functime_spark.forecasting.base import EntityForecaster, series
+
+
+def ses_level(values: Column, alpha: float) -> Column:
+    """l_n of the SES recursion over a non-empty double array. The
+    fold starts from NULL, so the first element seeds the level."""
+    a = float(alpha)
+    return F.aggregate(
+        values,
+        F.lit(None).cast("double"),
+        lambda l, x: F.coalesce(F.lit(a) * x + F.lit(1.0 - a) * l, x),
+    )
 
 
 class ses(EntityForecaster):
@@ -37,16 +42,9 @@ class ses(EntityForecaster):
 
     def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        rows = positions(y, p)
-        stats = rows.groupBy(p.entity).agg(
-            F.max("__t").alias("__n"), F.max(p.time).alias("low")
+        return series(y, p).select(
+            p.entity, "low", ses_level(F.col("__y"), self.alpha).alias("__l")
         )
-        c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
-        lvl = rows.join(stats, on=p.entity).groupBy(p.entity).agg(
-            ordered_sum(c * F.col("__y"), F.col("__t")).alias("__l"),
-            F.max("low").alias("low"),
-        )
-        return materialize(lvl)
 
     def _horizon(self, step: Column) -> Column:
         return F.col("__l")

@@ -12,12 +12,11 @@ level:
 
     yhat_h = 0.5 * (a + b * (n - 1 + h)) + 0.5 * l_n
 
-SES is evaluated in CLOSED FORM (the recursion l_t = a*z_t +
-(1-a)*l_{t-1} with l_1 = z_1 unrolls to a weighted sum), so the whole
-fit is TWO aggregate passes over the windowed panel (OLS sums, then
-the SES level joined against the MATERIALIZED coefficients) —
-no UDF, no iteration, no driver loop. At 100 TB: everything is
-entity-partitioned; the state frame is n_entities rows.
+The fit is ONE aggregate per entity (`base.series`: the time-sorted
+targets) and two native `F.aggregate` folds over that array: one
+adds the OLS sums in time order, one runs the SES recursion over z
+(`ses.ses_level`) — no UDF, no window, no join; state is n_entities
+rows.
 """
 
 from __future__ import annotations
@@ -25,13 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from functime_spark.forecasting.base import (
-    EntityForecaster,
-    ordered_sum,
-    positions,
-    ses_weight,
-)
-from functime_spark.materialize import materialize
+from functime_spark.forecasting.base import EntityForecaster, series
+from functime_spark.forecasting.ses import ses_level
 
 
 class theta(EntityForecaster):
@@ -48,48 +42,40 @@ class theta(EntityForecaster):
 
     def _fit_entities(self, y: DataFrame) -> DataFrame:
         p = self.state["panel"]
-        rows = positions(y, p)
-        i0 = F.col("__t") - 1  # 0-based trend index
-        i, yv, t = i0.cast("double"), F.col("__y"), F.col("__t")
-        # the index sums add small integers, exact in any order; the
-        # sums over y are added in position order
-        ols = rows.groupBy(p.entity).agg(
-            F.count(F.lit(1)).cast("double").alias("__n"),
-            F.sum(i).alias("__si"),
-            ordered_sum(yv, t).alias("__sy"),
-            ordered_sum(i * yv, t).alias("__siy"),
-            F.sum(i * i).alias("__sii"),
-            F.max(p.time).alias("low"),
+        # n, sum y and sum i*y over the 0-based index i, added in time order
+        zero = F.struct(*(F.lit(0.0).alias(k) for k in ("n", "sy", "siy")))
+        sums = F.aggregate(
+            F.col("__y"),
+            zero,
+            lambda s, v: F.struct(
+                (s["n"] + 1.0).alias("n"),
+                (s["sy"] + v).alias("sy"),
+                (s["siy"] + s["n"] * v).alias("siy"),
+            ),
         )
-        den = F.col("__n") * F.col("__sii") - F.col("__si") * F.col("__si")
-        b = F.when(
-            den != 0,
-            (F.col("__n") * F.col("__siy") - F.col("__si") * F.col("__sy"))
-            / den,
-        ).otherwise(F.lit(0.0))
-        coef = materialize(
-            ols.select(
-                p.entity,
-                "__n",
-                "low",
-                b.alias("__b"),
-                ((F.col("__sy") - b * F.col("__si")) / F.col("__n")).alias(
-                    "__a"
-                ),
-            )
+        ols = series(y, p).select(p.entity, "low", "__y", sums.alias("__o"))
+        n, sy, siy = F.col("__o.n"), F.col("__o.sy"), F.col("__o.siy")
+        # the index sums are small integers, exact in closed form
+        si = n * (n - 1.0) / 2.0
+        sii = (n - 1.0) * n * (2.0 * n - 1.0) / 6.0
+        den = n * sii - si * si
+        b = F.when(den != 0, (n * siy - si * sy) / den).otherwise(F.lit(0.0))
+        coef = ols.select(
+            p.entity,
+            "low",
+            "__y",
+            n.alias("__n"),
+            b.alias("__b"),
+            ((sy - b * si) / n).alias("__a"),
         )
-        j = rows.join(coef, on=p.entity)
-        # closed-form SES over z = 2y - (a + b*i)
-        z = 2.0 * F.col("__y") - (F.col("__a") + F.col("__b") * i0)
-        c = ses_weight(self.alpha, F.col("__t"), F.col("__n"))
-        lvl = j.groupBy(p.entity).agg(ordered_sum(c * z, t).alias("__l"))
-        # both per-entity frames are materialized (n_entities rows):
-        # coef above so the SES join consumes a pinned table instead of
-        # re-embedding the windowed `rows` subtree, and the combined
-        # state here so predict() is a window-free read of a tiny
-        # frame — the full-panel window runs exactly twice total
-        # (once per aggregate)
-        return materialize(coef.join(lvl, on=p.entity))
+        # a and b are columns of their own select (each read twice, so
+        # the optimizer keeps the projections apart): the z transform
+        # reads them per element, not the OLS expressions behind them
+        z = F.transform(
+            "__y", lambda v, i: 2.0 * v - (F.col("__a") + F.col("__b") * i)
+        )
+        level = ses_level(z, self.alpha).alias("__l")
+        return coef.select(p.entity, "low", "__n", "__a", "__b", level)
 
     def _horizon(self, step: Column) -> Column:
         # step s = horizon s+1 => trend index n - 1 + (s+1) = n + s

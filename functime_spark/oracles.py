@@ -1380,8 +1380,10 @@ def operator_oracles() -> dict:
     )
 
     # forecast_theta (r9): OLS over the 0-based index, z = 2y - trend,
-    # closed-form SES level, equal-weight combination — alpha = 0.5 so
-    # 1 - alpha is exact in both engines.
+    # SES level, equal-weight combination. The engine folds the SES
+    # recursion over each entity's time-sorted z; the oracle sums its
+    # unrolled weights — alpha = 0.5, so every weight is a dyadic
+    # rational and the two agree to float noise under the round.
     o["forecast_theta"] = (
         "WITH r AS (SELECT user_id, ts, value, "
         "CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 "
@@ -1406,13 +1408,13 @@ def operator_oracles() -> dict:
         "generate_series(1, 4) AS g(s) ORDER BY c.user_id, ts"
     )
 
-    # forecast_holt (r10): the ENGINE computes the final (level,
-    # trend) state as M-power weighted sums; the oracle replays the
-    # LITERAL recursion l_t = a*y + (1-a)*(l + b), b_t = be*(l_t - l)
-    # + (1-be)*b with a recursive CTE stepping every entity in
-    # lockstep — a = 0.5, be = 0.25, phi = 1, so every recursion
-    # constant is a dyadic rational and the two formulations agree to
-    # float noise well under the 6-decimal round.
+    # forecast_holt (r10): the engine folds the LITERAL recursion
+    # l_t = a*y + (1-a)*(l + b), b_t = be*(l_t - l) + (1-be)*b over
+    # each entity's time-sorted array; the oracle replays it with a
+    # recursive CTE stepping every entity in lockstep — a = 0.5,
+    # be = 0.25, phi = 1, so every recursion constant is a dyadic
+    # rational and the two agree to float noise well under the
+    # 6-decimal round.
     o["forecast_holt"] = (
         "WITH RECURSIVE r AS (SELECT user_id, ts, "
         "CAST(value AS DOUBLE) AS y, row_number() OVER "
@@ -1513,10 +1515,12 @@ def operator_oracles() -> dict:
         "generate_series(1, 26) AS g(s) ORDER BY f.user_id, ts"
     )
 
-    # forecast_croston (r10): nonzero split + interval lag + the
-    # theta-style closed-form SES weights applied to BOTH sequences in
-    # one aggregate; alpha = 0.25 so 1-a = 0.75 and the SBA factor
-    # 1 - a/2 = 0.875 are exact dyadic doubles in both engines.
+    # forecast_croston (r10): the engine folds both SES recursions
+    # (demand sizes, intervals) over each entity's time-sorted array;
+    # the oracle replays the nonzero split + interval lag and sums the
+    # unrolled SES weights of BOTH sequences in one aggregate;
+    # alpha = 0.25 so 1-a = 0.75 and the SBA factor 1 - a/2 = 0.875
+    # are exact dyadic doubles in both engines.
     _ses_w = (
         "CASE WHEN i = 1 THEN pow(0.75, kk.k - 1) "
         "ELSE 0.25 * pow(0.75, kk.k - i) END"
@@ -1542,8 +1546,9 @@ def operator_oracles() -> dict:
         "generate_series(1, 3) AS g(s) ORDER BY c.user_id, ts"
     )
 
-    # forecast_ses (r10): the closed-form SES weighted sum replayed
-    # directly (alpha = 0.5: every weight is a dyadic rational).
+    # forecast_ses (r10): the engine folds the SES recursion over each
+    # entity's time-sorted array; the oracle sums its unrolled weights
+    # (alpha = 0.5: every weight is a dyadic rational).
     o["forecast_ses"] = (
         "WITH r AS (SELECT user_id, ts, CAST(value AS DOUBLE) AS y, "
         "row_number() OVER (PARTITION BY user_id ORDER BY ts) AS t "

@@ -24,6 +24,24 @@ def _pdf(df, cols=("user_id", "ts")):
     return df.toPandas().sort_values(list(cols)).reset_index(drop=True)
 
 
+def _with_short(events, events_pdf):
+    """events plus a 1-point and a 2-point entity: the edge lengths of
+    the smoothing folds' initial state."""
+    import datetime as dt
+
+    import pandas as pd
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (-1, base, 7.0),
+        (-2, base, 4.0),
+        (-2, base + dt.timedelta(hours=1), 9.5),
+    ]
+    short = events.sparkSession.createDataFrame(rows, events.schema)
+    pdf = pd.concat([events_pdf, pd.DataFrame(rows, columns=events.columns)])
+    return events.unionByName(short), pdf
+
+
 def test_naive(events, events_pdf):
     from functime_spark.forecasting.naive import naive
 
@@ -52,15 +70,17 @@ def test_snaive(events, events_pdf):
 
 def test_theta_vs_numpy(events, events_pdf):
     """theta (r9): per-entity forecasts match a hand-rolled numpy
-    Theta — OLS trend on the 0-based index, SES RECURSION (the closed
-    form in the operator must equal the literal recursion) on
-    z = 2y - trend, equal-weight combination."""
+    Theta — OLS trend on the 0-based index, the literal SES recursion
+    on z = 2y - trend, equal-weight combination — down to 1-point
+    (zero OLS denominator) and 2-point entities."""
     from functime_spark.forecasting.theta import theta
 
     alpha, fh = 0.3, 4
-    fc = theta(freq="1h", alpha=alpha).fit(events)
+    y, y_pdf = _with_short(events, events_pdf)
+    fc = theta(freq="1h", alpha=alpha).fit(y)
     pred = _pdf(fc.predict(fh))
-    for uid, grp in events_pdf.sort_values("ts").groupby("user_id"):
+    assert pred["user_id"].nunique() == y_pdf["user_id"].nunique()
+    for uid, grp in y_pdf.sort_values("ts").groupby("user_id"):
         yv = grp["value"].to_numpy(dtype=float)
         n = len(yv)
         t = np.arange(n, dtype=float)
@@ -1797,11 +1817,11 @@ def test_ann_clone_and_backtest_roundtrip(spark):
 
 
 def test_holt_vs_numpy(events, events_pdf):
-    """holt (r10): the weighted-sum (M-power) formulation must equal
-    the LITERAL level/trend recursion, per entity, for both classic
-    (phi=1) and damped trend; degenerate one-point series fall back
-    to the flat naive; bad constants raise; base-class backtest
-    composes."""
+    """holt (r10): the fitted state equals the literal level/trend
+    recursion, per entity, for both classic (phi=1) and damped trend,
+    down to 2-point entities (b_1 = y_2 - y_1) and 1-point ones, which
+    fall back to the flat naive (b = 0); bad constants raise;
+    base-class backtest composes."""
     from functime_spark.forecasting.holt import holt
 
     def recursion(yv, a, b, phi):
@@ -1812,10 +1832,12 @@ def test_holt_vs_numpy(events, events_pdf):
             l = l_new
         return l, t
 
+    y, y_pdf = _with_short(events, events_pdf)
     for a, bb, phi in ((0.5, 0.25, 1.0), (0.4, 0.3, 0.9)):
-        fc = holt(freq="1h", alpha=a, beta=bb, phi=phi).fit(events)
+        fc = holt(freq="1h", alpha=a, beta=bb, phi=phi).fit(y)
         pred = _pdf(fc.predict(3))
-        for uid, grp in events_pdf.sort_values("ts").groupby("user_id"):
+        assert pred["user_id"].nunique() == y_pdf["user_id"].nunique()
+        for uid, grp in y_pdf.sort_values("ts").groupby("user_id"):
             yv = grp["value"].to_numpy(dtype=float)
             l, t = recursion(yv, a, bb, phi)
             want = []
@@ -1830,15 +1852,10 @@ def test_holt_vs_numpy(events, events_pdf):
             )
             np.testing.assert_allclose(got, want, rtol=1e-8)
 
-    # degenerate single-observation entity -> flat naive
-    import datetime as _dt
-
-    one = events.sparkSession.createDataFrame(
-        [("solo", _dt.datetime(2024, 1, 1), 7.0)],
-        "user_id string, ts timestamp, value double",
+    # the single-observation entity -> flat naive
+    np.testing.assert_allclose(
+        pred[pred["user_id"] == -1]["value"].to_numpy(), [7.0] * 3
     )
-    p = _pdf(holt(freq="1h").fit(one).predict(2))
-    np.testing.assert_allclose(p["value"].to_numpy(), [7.0, 7.0])
 
     with pytest.raises(ValueError, match="alpha"):
         holt(freq="1h", alpha=0.0)
@@ -2016,10 +2033,11 @@ def test_holt_oracle_covers_n1_entity(spark):
 
 
 def test_croston_vs_numpy(events, events_pdf):
-    """croston (r10): the closed-form twin-SES levels must equal the
-    literal Croston recursion on the demand/interval sequences of a
-    planted intermittent series; SBA applies the (1 - a/2) factor;
-    all-zero series forecast 0; bad params raise."""
+    """croston (r10): the fitted levels equal the literal Croston
+    recursion on the demand/interval sequences of planted
+    intermittent series, down to 1-point and 2-point entities; SBA
+    applies the (1 - a/2) factor; all-zero series forecast 0; bad
+    params raise."""
     from functime_spark.forecasting.croston import croston
 
     spark = events.sparkSession
@@ -2033,16 +2051,19 @@ def test_croston_vs_numpy(events, events_pdf):
             rows.append((e, _dt.datetime(2024, 1, 1) + _dt.timedelta(hours=t), v))
     for t in range(40):  # all-zero entity
         rows.append(("z", _dt.datetime(2024, 1, 1) + _dt.timedelta(hours=t), 0.0))
+    # edge lengths: one demand; a zero then a demand; two demands
+    for e, vals in (("one", [5.0]), ("gap", [0.0, 3.0]), ("two", [2.0, 6.0])):
+        for t, v in enumerate(vals):
+            rows.append((e, _dt.datetime(2024, 1, 1) + _dt.timedelta(hours=t), v))
     y = spark.createDataFrame(rows, "user_id string, ts timestamp, value double")
-    pdf = {
-        e: [r[2] for r in rows if r[0] == e] for e in ("x", "y", "z")
-    }
+    entities = ("x", "y", "z", "one", "gap", "two")
+    pdf = {e: [r[2] for r in rows if r[0] == e] for e in entities}
 
     a = 0.2
     for variant, bias in (("croston", 1.0), ("sba", 1.0 - a / 2)):
         fc = croston(freq="1h", alpha=a, variant=variant).fit(y)
         pred = _pdf(fc.predict(3))
-        for e in ("x", "y", "z"):
+        for e in entities:
             yv = pdf[e]
             zs, ps, last = [], [], 0
             for i, v in enumerate(yv, start=1):
@@ -2073,14 +2094,17 @@ def test_croston_vs_numpy(events, events_pdf):
 
 
 def test_ses_vs_numpy(events, events_pdf):
-    """ses (r10): the closed-form weighted level equals the literal
-    SES recursion per entity; forecasts are flat; bad alpha raises."""
+    """ses (r10): the fitted level equals the literal SES recursion
+    per entity, down to 1-point and 2-point entities; forecasts are
+    flat; bad alpha raises."""
     from functime_spark.forecasting.ses import ses
 
     a = 0.3
-    fc = ses(freq="1h", alpha=a).fit(events)
+    y, y_pdf = _with_short(events, events_pdf)
+    fc = ses(freq="1h", alpha=a).fit(y)
     pred = _pdf(fc.predict(3))
-    for uid, grp in events_pdf.sort_values("ts").groupby("user_id"):
+    assert pred["user_id"].nunique() == y_pdf["user_id"].nunique()
+    for uid, grp in y_pdf.sort_values("ts").groupby("user_id"):
         yv = grp["value"].to_numpy(dtype=float)
         lvl = yv[0]
         for v in yv[1:]:
@@ -2090,3 +2114,60 @@ def test_ses_vs_numpy(events, events_pdf):
 
     with pytest.raises(ValueError, match="alpha"):
         ses(freq="1h", alpha=0.0)
+
+
+def test_smoothing_reads_null_target_as_zero(spark):
+    """ses, holt, theta and croston read a NULL target as 0.0: each
+    forecasts a series with a NULL exactly as the zero-filled one."""
+    from functime_spark.forecasting.croston import croston
+    from functime_spark.forecasting.holt import holt
+    from functime_spark.forecasting.ses import ses
+    from functime_spark.forecasting.theta import theta
+
+    vals = [3.0, 5.0, None, 4.0, 6.0, 2.0]
+    schema = "entity string, t long, y double"
+    with_null = spark.createDataFrame(
+        [("a", t, v) for t, v in enumerate(vals)], schema
+    )
+    filled = spark.createDataFrame(
+        [("a", t, 0.0 if v is None else v) for t, v in enumerate(vals)], schema
+    )
+    for make in (ses, holt, theta, croston):
+        got, want = (
+            [r["y"] for r in make(freq="1i").fit(df).predict(3).orderBy("t").collect()]
+            for df in (with_null, filled)
+        )
+        assert got == want, make.__name__
+    one = theta(freq="1i").fit(with_null).predict(1).collect()[0]["y"]
+    assert one == pytest.approx(3.3063, abs=1e-4)
+
+
+def test_entity_fit_runs_no_job(spark):
+    """fit of snaive and the smoothing families builds a lazy state
+    frame, one aggregate deep: no Spark job runs until it is read."""
+    from functime_spark.forecasting.croston import croston
+    from functime_spark.forecasting.holt import holt
+    from functime_spark.forecasting.naive import snaive
+    from functime_spark.forecasting.ses import ses
+    from functime_spark.forecasting.theta import theta
+
+    rows = [(e, t, float((t * 7 + i) % 11)) for i, e in enumerate("abc") for t in range(30)]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    sc = spark.sparkContext
+    jobs = {}
+    for fc in (
+        snaive(freq="1i", sp=4),
+        ses(freq="1i"),
+        holt(freq="1i"),
+        theta(freq="1i"),
+        croston(freq="1i"),
+    ):
+        name = type(fc).__name__
+        group = f"test-entity-fit-{name}"
+        sc.setJobGroup(group, f"{name} fit")
+        try:
+            fc.fit(y)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == dict.fromkeys(jobs, 0)

@@ -26,6 +26,13 @@ def _panel(spark, n_entities=12, n_times=48):
     return spark.createDataFrame(rows, "entity string, t long, y double")
 
 
+def _intermittent(spark):
+    # the panel with none, a third or two thirds of each entity's
+    # values zeroed, so croston's demand/interval split has gaps
+    zero = "(t * t + CAST(substring(entity, 2) AS INT)) % 3 = 0"
+    return _panel(spark).selectExpr("entity", "t", f"IF({zero}, 0.0, y) AS y")
+
+
 def _docs(spark):
     words = [f"w{i}" for i in range(40)]
     rows = []
@@ -107,6 +114,24 @@ def _holt():
     return holt(freq="1i", alpha=0.4, beta=0.2, phi=0.9)
 
 
+def _theta():
+    from functime_spark.forecasting.theta import theta
+
+    return theta(freq="1i", alpha=0.3)
+
+
+def _croston():
+    from functime_spark.forecasting.croston import croston
+
+    return croston(freq="1i", alpha=0.2, variant="sba")
+
+
+def _snaive():
+    from functime_spark.forecasting.naive import snaive
+
+    return snaive(freq="1i", sp=5)
+
+
 CASES = {
     "extract_features": (_panel, _extract_features),
     "extract_features_udf": (_panel, _extract_features_udf),
@@ -114,6 +139,9 @@ CASES = {
     "minhash_dedup": (_docs, _minhash_dedup),
     "ses_predict_backtest": (_panel, _forecast(_ses)),
     "holt_predict_backtest": (_panel, _forecast(_holt)),
+    "theta_predict_backtest": (_panel, _forecast(_theta)),
+    "croston_predict_backtest": (_intermittent, _forecast(_croston)),
+    "snaive_predict_backtest": (_panel, _forecast(_snaive)),
 }
 
 
