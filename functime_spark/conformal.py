@@ -1,8 +1,8 @@
 """Standalone conformal-interval helpers (ref conformal.py:6-74).
 
-`Forecaster.conformalize` wraps the full backtest -> residual ->
-interval flow; this module exposes the reference's lower-level
-`enbpi` contract for users who already hold predictions and residuals.
+`Forecaster.conformalize` runs the backtest -> residual flow and
+builds its intervals here; `enbpi` is the reference's lower-level
+contract, for users who already hold predictions and residuals.
 """
 
 from __future__ import annotations

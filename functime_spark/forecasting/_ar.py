@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from functime_spark.panel import panel_cols
 from functime_spark.compat import broadcast_value
-from functime_spark.forecasting.base import Forecaster
+from functime_spark.forecasting.base import Forecaster, sorted_values
 
 
 def make_reduction(y: DataFrame, lags: int, X: DataFrame | None = None) -> DataFrame:
@@ -63,15 +63,12 @@ def make_y_lag(y: DataFrame, max_lag: int) -> DataFrame:
     hash aggregate: collect (time, value) structs, sort in-expression,
     slice the tail — no window pass building an O(n) list per ROW
     (the previous formulation churned n lists per entity and kept 1).
-    `low` rides in the SAME aggregate so predict's future-range
-    generation reads the persisted n_entities-row state instead of
-    re-scanning and re-aggregating the full panel.
+    `low` rides in the SAME aggregate and through `predict_ar`, so
+    predict stamps its timestamps from this n_entities-row state
+    instead of re-scanning and re-aggregating the full panel.
     """
     p = panel_cols(y)
-    sorted_vals = F.transform(
-        F.array_sort(F.collect_list(F.struct(p.time, p.target))),
-        lambda s: s[p.target],
-    )
+    sorted_vals = sorted_values(p)
     # Python [-k:] semantics: series shorter than max_lag keep all
     # rows (Spark's slice(-k) returns [] when |start| > length)
     tail = F.when(
@@ -257,13 +254,13 @@ class LinearBackend:
 
 def mean_ensemble(a: DataFrame, b: DataFrame) -> DataFrame:
     """ensemble strategy = mean of recursive + direct predictions
-    (ref predict_autoreg _ar.py:357-371). Inputs: (entity, step,
+    (ref predict_autoreg _ar.py:357-371). Inputs: (entity, low, step,
     __yhat)."""
-    e = a.columns[0]
+    keys = [a.columns[0], "low", "step"]
     return (
         a.withColumnRenamed("__yhat", "__r")
-        .join(b.withColumnRenamed("__yhat", "__d"), on=[e, "step"])
-        .select(e, "step", ((F.col("__r") + F.col("__d")) / 2).alias("__yhat"))
+        .join(b.withColumnRenamed("__yhat", "__d"), on=keys)
+        .select(*keys, ((F.col("__r") + F.col("__d")) / 2).alias("__yhat"))
     )
 
 
@@ -296,14 +293,12 @@ def attach_future_x(
       backtest (base.py's irregular-panel contract; ADVICE r5).
     """
     entity = y_lag.columns[0]
-    e, t = X_future.columns[:2]
-    aggs = []
-    for c in x_cols:
-        sorted_vals = F.transform(
-            F.array_sort(F.collect_list(F.struct(t, c))), lambda s: s[c]
-        )
-        aggs.append(F.slice(sorted_vals, 1, fh).alias(f"__x_{c}"))
-    xf = X_future.groupBy(F.col(e).alias(entity)).agg(*aggs)
+    px = panel_cols(X_future)
+    aggs = [
+        F.slice(sorted_values(px, F.col(c)), 1, fh).alias(f"__x_{c}")
+        for c in x_cols
+    ]
+    xf = X_future.groupBy(F.col(px.entity).alias(entity)).agg(*aggs)
     out = y_lag.join(xf, on=entity, how="left")
     short = F.lit(False)
     for c in x_cols:
@@ -341,7 +336,8 @@ def predict_ar(
     make_step: Callable,
     recursive: bool = True,
 ) -> DataFrame:
-    """The one fh-step Arrow kernel: (entity, step, __yhat), step 0-based.
+    """The one fh-step Arrow kernel: (entity, low, step, __yhat), step
+    0-based, each entity's cutoff `low` passed through from the state.
 
     `payload` is broadcast once; `make_step(payload)` runs once per
     task and returns ``step(h, lag_feats, x_h) -> yhat`` where
@@ -352,7 +348,7 @@ def predict_ar(
     mode keeps the last observed lags for every horizon (ref
     predict_direct _ar.py:277-330)."""
     entity = state.columns[0]
-    entity_dtype = dict(state.dtypes)[entity]
+    dtypes = dict(state.dtypes)
     x_names = [c[len("__x_"):] for c in state.columns if c.startswith("__x_")]
     b = broadcast_value(state.sparkSession, payload)
 
@@ -378,12 +374,13 @@ def predict_ar(
             yield pd.DataFrame(
                 {
                     entity: np.repeat(ents, fh),
+                    "low": np.repeat(pdf["low"].to_numpy(), fh),
                     "step": np.tile(np.arange(fh), len(ents)),
                     "__yhat": preds.ravel(),
                 }
             )
 
-    schema = f"{entity} {entity_dtype}, step int, __yhat double"
+    schema = f"{entity} {dtypes[entity]}, low {dtypes['low']}, step int, __yhat double"
     return state.mapInPandas(run, schema=schema)
 
 
@@ -470,12 +467,11 @@ class ARForecaster(Forecaster):
         self._fit_y_lag(y)
 
     def _fit_y_lag(self, y: DataFrame) -> None:
-        """Persist the recursion state and serve cutoffs from it
-        (make_y_lag carries `low`), so predict's future ranges read
-        n_entities cached rows instead of re-aggregating the panel."""
-        yl = make_y_lag(y, self.lags).persist()
-        self.state["y_lag"] = yl
-        self.state["cutoffs"] = yl.select(yl.columns[0], "low")
+        """Persist the recursion state. It carries `low` (make_y_lag),
+        which every predict path passes through to its values, so
+        predict's timestamps read n_entities cached rows instead of
+        re-aggregating the panel."""
+        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
 
     def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
         state = self.state["y_lag"]

@@ -1,14 +1,17 @@
 """Forecaster base class: fit / predict / backtest / conformalize.
 
 Mirrors functime base/forecaster.py:88-361. State is a small bundle of
-driver-held DataFrames: `cutoffs` (entity, low = max time — ref
-forecaster.py:196-199) plus whatever the concrete forecaster stores
-(last values, lag buffers, fitted model params).
+driver-held DataFrames: whatever the concrete forecaster stores (last
+values, lag buffers, fitted model params). The frame that produces a
+forecast's values also carries each entity's cutoff `low` (its max
+time — ref forecaster.py:196-199), so predict stamps the future
+timestamps onto the values with one projection (`ranges.future_time`):
+no second frame, no join.
 
 Two shapes share this lifecycle: the global autoregressive models
-(`_ar.ARForecaster`) and the classical per-entity families
-(`EntityForecaster`: one per-entity state frame, a closed-form
-horizon expression over it).
+(`_ar.ARForecaster`, whose `y_lag` recursion state holds `low`) and
+the classical per-entity families (`EntityForecaster`: one per-entity
+state frame holding `low`, a closed-form horizon expression over it).
 
 The reference's entity string-cache (model.py:10-44) is skipped:
 Tungsten handles string group keys natively (SURVEY §4.2).
@@ -19,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from functime_spark.conformal import enbpi
+from functime_spark.forecasting.ranges import future_points, future_time
 from functime_spark.panel import panel_cols
 from functime_spark.serialize import SparkStatePickleMixin
 from functime_spark.materialize import materialize as _materialize
@@ -44,9 +49,6 @@ class Forecaster(SparkStatePickleMixin):
         if self.target_transform is not None:
             y = self.target_transform.transform(y)
         self.state["panel"] = p
-        self.state["cutoffs"] = (
-            y.groupBy(p.entity).agg(F.max(p.time).alias("low"))
-        )
         self._fit(y, X)
         return self
 
@@ -57,24 +59,22 @@ class Forecaster(SparkStatePickleMixin):
         return y_pred
 
     def _predict(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        """Default: stitch per-step values onto freq-generated future
-        timestamps. Subclasses implement `_predict_values`."""
-        from functime_spark.forecasting.ranges import (
-            explode_future_ranges,
-            make_future_ranges,
-        )
-
+        """Stamp each value row with its future timestamp: one
+        projection over `_predict_values`, no join."""
         p = self.state["panel"]
-        futures = make_future_ranges(self.state["cutoffs"], fh, self.freq, p.time)
-        rows = explode_future_ranges(futures)
         vals = self._predict_values(fh, X)
-        return rows.join(vals, on=[p.entity, "step"], how="inner").select(
-            p.entity, p.time, F.col("__yhat").alias(p.target)
+        time = future_time(
+            F.col("low"), F.col("step"), self.freq, dict(vals.dtypes)["low"]
+        )
+        return vals.filter(F.col("step") < future_points(fh, self.freq)).select(
+            p.entity, time.alias(p.time), F.col("__yhat").alias(p.target)
         )
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
-        """(entity, step, __yhat) with step 0-based — timestamp-free
-        predictions, used by both predict() and backtest()."""
+        """(entity, low, step, __yhat) with step 0-based and `low` the
+        entity's cutoff — predictions that carry what predict() needs
+        to time-stamp them; backtest() ignores `low` and aligns steps
+        to the actual test timestamps."""
         raise NotImplementedError
 
     def _clone(self) -> "Forecaster":
@@ -100,7 +100,7 @@ class Forecaster(SparkStatePickleMixin):
         """localCheckpoint every DataFrame in the fitted state.
 
         All state frames are n_entities-scale aggregates (last values,
-        seasonal tails, lag buffers, cutoffs); materializing them cuts
+        seasonal tails, lag buffers); materializing them cuts
         downstream prediction plans from re-deriving each aggregate off
         the full panel to reading a cached block. Ensemble callers
         (elite) use this so a bank of k models doesn't re-scan the
@@ -215,43 +215,31 @@ class Forecaster(SparkStatePickleMixin):
         (the reference's Polars default is nearest)."""
         alphas = alphas or [0.1, 0.9]
         p = panel_cols(y)
-        # backtest() localCheckpoints its (tiny) result; quantiles and the
-        # point forecast are likewise n_entities-scale, so materializing
-        # them keeps the final plan free of the panel-rescanning lineage
-        # (and of the false-exchange-reuse duplication — see backtest()).
+        # backtest() localCheckpoints its (tiny) result; the residuals
+        # and the point forecast are likewise n_entities-scale, so
+        # materializing them keeps the final plan free of the
+        # panel-rescanning lineage (and of the false-exchange-reuse
+        # duplication — see backtest()).
         y_preds = self.backtest(y, test_size=test_size, n_splits=n_splits, X=X)
         target = y_preds.columns[2]
         actual = y.withColumnRenamed(p.target, "__actual")
-        resid = (
-            y_preds.join(actual, on=[p.entity, p.time], how="inner")
-            .withColumn("__resid", F.col("__actual") - F.col(target))
+        resid = _materialize(
+            y_preds.join(actual, on=[p.entity, p.time], how="inner").select(
+                p.entity, p.time, (F.col("__actual") - F.col(target)).alias("__resid")
+            )
         )
-        q_aggs = [
-            F.percentile("__resid", F.lit(a)).alias(f"__q_{_akey(a)}")
-            for a in alphas
-        ]
-        quantiles = _materialize(resid.groupBy(p.entity).agg(*q_aggs))
         y_point = _materialize(self.fit(y, X).predict(fh, X_future))
         combined = y_point.select(p.entity, p.time, target).unionByName(
             y_preds.select(p.entity, p.time, target)
         )
-        out = combined.join(F.broadcast(quantiles), on=p.entity, how="left")
-        # one posexplode pass, not an n_alphas-way self-union: a single
-        # scan of `out` emits every (quantile-adjusted value, label) pair
-        pairs = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.col(target) + F.col(f"__q_{_akey(a)}")).alias(target),
-                        F.lit(int(round(a * 100))).alias("quantile"),
-                    )
-                    for a in alphas
-                ]
-            )
-        ).alias("__pair")
-        return out.select(p.entity, p.time, pairs).select(
-            p.entity, p.time, f"__pair.{target}", "__pair.quantile"
-        )
+        out = enbpi(combined, resid, alphas)
+        # enbpi labels each row by its raw alpha; the reference's
+        # conformalize labels it int(alpha*100)
+        label = F.lit(int(round(alphas[-1] * 100)))
+        for a in reversed(alphas[:-1]):
+            is_a = F.col("quantile") == float(a)
+            label = F.when(is_a, int(round(a * 100))).otherwise(label)
+        return out.withColumn("quantile", label)
 
 
 class EntityForecaster(Forecaster):
@@ -260,7 +248,8 @@ class EntityForecaster(Forecaster):
     supplies two things: `_fit_entities`, one frame (entity, low,
     params...) with one row per entity, and `_horizon`, the forecast
     at the 0-based `step` column as an expression over that row.
-    Cutoffs and the step explode are served here, once.
+    The step explode is served here, once, and carries `low` through
+    to predict's timestamps.
 
     The smoothing families (ses, holt, theta, croston) build that row
     from `series`: one aggregate holding each entity's time-sorted
@@ -269,11 +258,8 @@ class EntityForecaster(Forecaster):
     the zero-filled series."""
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
-        entities = self._fit_entities(y)
-        self.state["entities"] = entities
-        # cutoffs ride in the same per-entity frame: predict's future
-        # ranges read it, not a second full-panel aggregate
-        self.state["cutoffs"] = entities.select(self.state["panel"].entity, "low")
+        # the one state frame: its `low` stamps predict's timestamps
+        self.state["entities"] = self._fit_entities(y)
 
     def _fit_entities(self, y: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
@@ -287,7 +273,7 @@ class EntityForecaster(Forecaster):
             "*", F.explode(F.sequence(F.lit(0), F.lit(fh - 1))).alias("step")
         )
         return rows.select(
-            entity, "step", self._horizon(F.col("step")).alias("__yhat")
+            entity, "low", "step", self._horizon(F.col("step")).alias("__yhat")
         )
 
 
@@ -310,7 +296,3 @@ def series(y: DataFrame, p) -> DataFrame:
     return y.groupBy(p.entity).agg(
         F.max(p.time).alias("low"), sorted_values(p, filled).alias("__y")
     )
-
-
-def _akey(a: float) -> str:
-    return str(a).replace(".", "_")

@@ -165,7 +165,7 @@ class elite(Forecaster):
         # instead of re-scanning the panel once per bank member
         for fc in self.state["fitted_bank"].values():
             fc._materialize_state()
-        self._materialize_state()  # own selection + cutoffs frames
+        self._materialize_state()  # own selection frames
         y.unpersist()
 
     def _fit_stacker(self, y: DataFrame, all_preds: DataFrame, ranked: DataFrame, p):
@@ -217,7 +217,7 @@ class elite(Forecaster):
                 on=[p.entity, "__model"],
                 how="inner",
             )
-            .groupBy(p.entity, "step")
+            .groupBy(p.entity, "low", "step")
             .agg(F.avg("__yhat").alias("__yhat"))
         )
         stacker = self.state.get("stacker")
@@ -235,14 +235,14 @@ class elite(Forecaster):
                 on=[p.entity, "__model"],
                 how="inner",
             )
-            .groupBy(p.entity, "step")
+            .groupBy(p.entity, "low", "step")
             .pivot("__rank", ranks)
             .agg(F.first("__yhat"))
         )
         yhat = F.lit(float(b0))
         for i, r in enumerate(ranks):
             yhat = yhat + F.lit(float(coefs[i])) * F.col(str(r))
-        stacked = feats.dropna().select(p.entity, "step", yhat.alias("__yhat"))
+        stacked = feats.dropna().select(p.entity, "low", "step", yhat.alias("__yhat"))
         rest = mean_blend.join(
             stacked.select(p.entity).distinct(), on=p.entity, how="left_anti"
         )

@@ -95,9 +95,8 @@ class holt_winters(EntityForecaster):
         if self._x_on_short == "drop":
             # backtest convention: entities too short for the
             # two-cycle init (or nonpositive under multiplicative)
-            # emit NO state rows (they drop out of the split via the
-            # inner predict join, like the croston all-zero left-join
-            # path) instead of aborting the whole backtest
+            # emit NO state rows, hence no forecast rows, and drop out
+            # of the split instead of aborting the whole backtest
             ok = stats.where(~bad).select(p.entity)
             y = y.join(F.broadcast(ok), on=p.entity, how="left_semi")
         else:

@@ -131,7 +131,7 @@ class gradient_boosted_model(ARForecaster):
         # lineage cut, each horizon branch re-enters as one scan, and
         # nothing stays registered in the cache manager (ADVICE r6)
         base = state.select(
-            p.entity, *feat_cols, *[F.col(f"__x_{c}") for c in x_cols]
+            p.entity, "low", *feat_cols, *[F.col(f"__x_{c}") for c in x_cols]
         )
         if x_cols:
             base = materialize(base)
@@ -140,6 +140,7 @@ class gradient_boosted_model(ARForecaster):
             model = models[min(h, len(models) - 1)]
             withx = base.select(
                 p.entity,
+                "low",
                 *[F.col(f"__f_{k}") for k in range(1, lags + 1)],
                 *[
                     F.element_at(f"__x_{c}", h + 1).alias(f"__xv_{c}")
@@ -149,6 +150,7 @@ class gradient_boosted_model(ARForecaster):
             steps.append(
                 model.transform(assembler.transform(withx)).select(
                     p.entity,
+                    "low",
                     F.lit(h).alias("step"),
                     F.col("prediction").alias("__yhat"),
                 )
@@ -183,20 +185,22 @@ class gradient_boosted_model(ARForecaster):
                 F.element_at(f"__x_{c}", h + 1).alias(f"__xv_{c}")
                 for c in x_cols
             ]
-            featd = state.select(p.entity, "__buf", *xarr, *feat_cols)
+            featd = state.select(p.entity, "low", "__buf", *xarr, *feat_cols)
             scored = model.transform(assembler.transform(featd)).select(
                 p.entity,
+                "low",
                 "__buf",
                 *xarr,
                 F.col("prediction").alias("__yhat"),
             )
             steps.append(
                 scored.select(
-                    p.entity, F.lit(h).alias("step"), F.col("__yhat")
+                    p.entity, "low", F.lit(h).alias("step"), F.col("__yhat")
                 )
             )
             state = scored.select(
                 p.entity,
+                "low",
                 F.concat(
                     F.slice("__buf", 2, lags - 1) if lags > 1 else F.array(),
                     F.array("__yhat"),

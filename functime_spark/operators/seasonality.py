@@ -159,22 +159,24 @@ def add_holiday_effects(
     return out
 
 
+def _future_index(df: DataFrame, fh: int, freq: str) -> DataFrame:
+    """(entity, time): each entity's future timestamps after its max
+    time, by the same rule as predict (`ranges.make_future_ranges`)."""
+    from functime_spark.forecasting.ranges import make_future_ranges
+
+    p = panel_cols(df)
+    cutoffs = df.groupBy(p.entity).agg(F.max(p.time).alias("low"))
+    return make_future_ranges(cutoffs, fh, freq, p.time).select(
+        p.entity, F.explode(p.time).alias(p.time)
+    )
+
+
 def make_future_calendar_effects(
     df: DataFrame, attrs: list, fh: int, freq: str
 ) -> DataFrame:
     """Calendar attrs over the per-entity future index. Ref
     calendar.py:119-134."""
-    from functime_spark.forecasting.ranges import (
-        explode_future_ranges,
-        make_future_ranges,
-    )
-
-    p = panel_cols(df)
-    cutoffs = df.groupBy(p.entity).agg(F.max(p.time).alias("low"))
-    future = explode_future_ranges(
-        make_future_ranges(cutoffs, fh, freq, p.time)
-    ).select(p.entity, p.time)
-    return add_calendar_effects(future, attrs)
+    return add_calendar_effects(_future_index(df, fh, freq), attrs)
 
 
 def make_future_holiday_effects(
@@ -183,14 +185,4 @@ def make_future_holiday_effects(
     """Holiday columns over the per-entity future index. Ref
     calendar.py:137-152. Needs the `holidays` package (see
     add_holiday_effects)."""
-    from functime_spark.forecasting.ranges import (
-        explode_future_ranges,
-        make_future_ranges,
-    )
-
-    p = panel_cols(df)
-    cutoffs = df.groupBy(p.entity).agg(F.max(p.time).alias("low"))
-    future = explode_future_ranges(
-        make_future_ranges(cutoffs, fh, freq, p.time)
-    ).select(p.entity, p.time)
-    return add_holiday_effects(future, country_codes)
+    return add_holiday_effects(_future_index(df, fh, freq), country_codes)

@@ -3,7 +3,8 @@
 The reference contract (tests/test_forecasting.py:71-86) is that a
 FITTED forecaster cloudpickles and predicts identically after a
 round-trip. Our fitted state holds small per-entity Spark DataFrames
-(cutoffs, lag buffers, scale params — n_entities rows each); pickling
+(per-entity states with their cutoff `low`, lag buffers, scale
+params — n_entities rows each); pickling
 materializes them to (schema-json, row-tuples) and unpickling rebuilds
 them on the active SparkSession (or a fresh one in a new process).
 

@@ -71,13 +71,4 @@ def get_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    # A/B iteration aid (r11 optimization rounds): semicolon-separated
-    # k=v overrides applied LAST, so interleaved config experiments
-    # (e.g. canChangeCachedPlanOutputPartitioning) don't need source
-    # edits between process pairs. Never set by the driver — unset
-    # (the default) is byte-identical to the block above.
-    for pair in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if "=" in pair:
-            k, _, v = pair.partition("=")
-            builder = builder.config(k.strip(), v.strip())
     return builder.getOrCreate()

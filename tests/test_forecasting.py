@@ -124,6 +124,9 @@ def test_future_ranges_calendar(spark):
     ).select("entity", F.col("low").cast("timestamp"))
     out = make_future_ranges(cutoffs, 3, "1mo", "t").collect()[0]["t"]
     assert [str(t.date()) for t in out] == ["2024-02-29", "2024-03-31", "2024-04-30"]
+    # each step counts from the cutoff, not from the previous step
+    out = make_future_ranges(cutoffs, 3, "1q", "t").collect()[0]["t"]
+    assert [str(t.date()) for t in out] == ["2024-04-30", "2024-07-31", "2024-10-31"]
 
 
 def test_future_ranges_integer(spark):
@@ -132,6 +135,34 @@ def test_future_ranges_integer(spark):
     cutoffs = spark.createDataFrame([("a", 10)], "entity string, low long")
     out = make_future_ranges(cutoffs, 4, "1i", "t").collect()[0]["t"]
     assert out == [11, 12, 13, 14]
+    # 'ki' keeps the reference's ceil(fh/k) points
+    out = make_future_ranges(cutoffs, 5, "2i", "t").collect()[0]["t"]
+    assert out == [11, 13, 15]
+
+
+@pytest.mark.parametrize("freq", ["1i", "2i", "1h", "1mo"])
+def test_predict_timestamps_match_future_ranges(spark, freq):
+    """predict stamps its values with exactly the timestamps
+    make_future_ranges gives for the fit panel's cutoffs — ceil(fh/k)
+    points at 'ki' — for a per-entity family and a global AR one."""
+    from functime_spark.forecasting import linear_model, naive
+    from functime_spark.forecasting.ranges import make_future_ranges
+
+    fh = 5
+    rows = [(e, t, float(t % 4 + i)) for i, e in enumerate("ab") for t in range(1, 13 + i)]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    if not freq.endswith("i"):
+        y = y.select("entity", F.timestamp_seconds(F.col("t") * 3600 + 1800).alias("t"), "y")
+    cutoffs = y.groupBy("entity").agg(F.max("t").alias("low"))
+    want = sorted(
+        (r[0], t)
+        for r in make_future_ranges(cutoffs, fh, freq, "t").collect()
+        for t in r[1]
+    )
+    assert len(want) == 2 * (3 if freq == "2i" else fh)
+    for fc in (naive(freq=freq), linear_model(freq=freq, lags=2)):
+        got = sorted((r[0], r[1]) for r in fc.fit(y).predict(fh).collect())
+        assert got == want, type(fc).__name__
 
 
 def test_linear_model_recovers_ar_process(spark):

@@ -781,6 +781,51 @@ def test_elite_selection_joins_not_forced_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+@pytest.mark.parametrize(
+    "family,exchanges",
+    [("naive", 1), ("snaive", 1), ("ses", 1), ("holt", 1), ("theta", 1),
+     ("croston", 1), ("holt_winters", 0)],
+)
+def test_entity_predict_is_one_exchange_no_join(spark, family, exchanges):
+    """A per-entity family's predict reads its one state aggregate:
+    the values frame carries each entity's cutoff `low`, so the
+    future timestamps are a projection over it — one hash exchange
+    (the state's groupBy; none for holt_winters, whose kernel-built
+    state is materialized at fit) and no join back to a cutoffs
+    frame."""
+    from functime_spark import forecasting as fcs
+    from functime_spark.plans.checks import count_exchanges, explain_str
+
+    rows = [
+        (e, t, float((t % 5) * 2 + 1) + i)
+        for i, e in enumerate(["a", "b"])
+        for t in range(1, 21)
+    ]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    kw = {"sp": 4} if family in ("snaive", "holt_winters") else {}
+    pred = getattr(fcs, family)(freq="1i", **kw).fit(y).predict(3)
+    plan = explain_str(pred, "simple")
+    assert count_exchanges(pred) == exchanges, plan
+    assert not re.search(r"Join|CartesianProduct", plan), plan
+    assert pred.count() == 6
+
+
+def test_ar_predict_plan_has_no_join(spark):
+    """The global AR predict passes the recursion state's `low`
+    through its kernel: no join stitches timestamps onto values."""
+    from functime_spark.forecasting import linear_model
+    from functime_spark.plans.checks import explain_str
+
+    rows = [(e, t, float(t % 3 + i)) for i, e in enumerate("ab") for t in range(1, 21)]
+    y = spark.createDataFrame(rows, "entity string, t long, y double")
+    fc = linear_model(freq="1i", lags=3).fit(y)
+    pred = fc.predict(3)
+    plan = explain_str(pred, "simple")
+    assert not re.search(r"Join|CartesianProduct", plan), plan
+    assert pred.count() == 6
+    fc.state["y_lag"].unpersist()
+
+
 def test_salted_join_no_broadcast_of_big_side(spark):
     """The salted join must stay a shuffle join on (key, salt) — if
     Catalyst broadcast the exploded right side the salting would be
