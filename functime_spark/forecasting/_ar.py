@@ -22,6 +22,7 @@ split of responsibilities:
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from typing import Callable, Iterator
 
 import numpy as np
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from functime_spark.panel import panel_cols
 from functime_spark.compat import broadcast_value
 from functime_spark.forecasting.base import Forecaster, sorted_values
+from functime_spark.materialize import pinned
 
 
 def make_reduction(y: DataFrame, lags: int, X: DataFrame | None = None) -> DataFrame:
@@ -122,8 +124,8 @@ class LinearBackend:
     @property
     def single_pass(self) -> bool:
         """True when fit is ONE aggregate job (normal-equation solve
-        or sufficient-stats coordinate descent) — callers should not
-        persist a design that is read once."""
+        or sufficient-stats coordinate descent) — callers should not pin
+        a design that is read once."""
         return (
             self.elastic_net_param == 0.0
             or self.reg_param == 0.0
@@ -408,7 +410,7 @@ class ARForecaster(Forecaster):
     and ensemble (`mean_ensemble` of both)."""
 
     # True when _fit_design reads its design in one pass: the
-    # recursive design is then not persisted (a cache-write for no reuse)
+    # recursive design is then not pinned (a cache-write for no reuse)
     _reads_design_once = False
 
     def __init__(
@@ -439,21 +441,18 @@ class ARForecaster(Forecaster):
         x_cols = list(X.columns[2:]) if X is not None else []
         self.state["x_cols"] = x_cols
 
-        def fit_models(width: int, horizons, persist: bool) -> list:
+        def fit_models(width: int, horizons, reread: bool) -> list:
             design = make_reduction(y, width, X)
-            if persist:
-                design = design.persist()
-            models = [
-                self._fit_design(
-                    design,
-                    [f"{target}__lag_{j}" for j in range(h, self.lags + h)] + x_cols,
-                    target,
-                )
-                for h in horizons
-            ]
-            if persist:
-                design.unpersist()
-            return models
+            with pinned(design) if reread else nullcontext(design) as design:
+                return [
+                    self._fit_design(
+                        design,
+                        [f"{target}__lag_{j}" for j in range(h, self.lags + h)]
+                        + x_cols,
+                        target,
+                    )
+                    for h in horizons
+                ]
 
         if self.strategy in ("recursive", "ensemble"):
             self.state["recursive_model"] = fit_models(
@@ -467,11 +466,12 @@ class ARForecaster(Forecaster):
         self._fit_y_lag(y)
 
     def _fit_y_lag(self, y: DataFrame) -> None:
-        """Persist the recursion state. It carries `low` (make_y_lag),
-        which every predict path passes through to its values, so
-        predict's timestamps read n_entities cached rows instead of
-        re-aggregating the panel."""
-        self.state["y_lag"] = make_y_lag(y, self.lags).persist()
+        """The recursion state, lazy and one aggregate deep (never
+        persisted: nothing would release it). It carries `low`
+        (make_y_lag), which every predict path passes through to its
+        values, so predict's timestamps come from this n_entities-row
+        state instead of a second aggregate over the panel."""
+        self.state["y_lag"] = make_y_lag(y, self.lags)
 
     def _future_state(self, fh: int, X: DataFrame | None) -> DataFrame:
         state = self.state["y_lag"]

@@ -50,6 +50,7 @@ from functime_spark.forecasting.linear import (
 )
 from functime_spark.forecasting.ses import ses
 from functime_spark.forecasting.tree import gradient_boosted_model
+from functime_spark.materialize import pinned
 from functime_spark.operators.metrics import smape
 
 
@@ -141,23 +142,23 @@ class _auto_base(Forecaster):
         }
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
-        y = y.persist()
-        self.n_fit_trials_ = 0
-        if self.search == "grid":
-            best, best_score = self._search_grid(y, X)
-        elif self.search == "cfo":
-            best, best_score = self._search_cfo(y, X)
-        else:
-            best, best_score = self._search_halving(y, X)
-        if best is None:  # degenerate panel: fall back to smallest config
-            best = self._fallback_candidate()
-            best_score = float("inf")
-        self.best_params_ = best
-        self.best_score_ = best_score
-        inner = self._family(**best).fit(y, X)
+        # every trial's backtest and the final refit read y
+        with pinned(y) as y:
+            self.n_fit_trials_ = 0
+            if self.search == "grid":
+                best, best_score = self._search_grid(y, X)
+            elif self.search == "cfo":
+                best, best_score = self._search_cfo(y, X)
+            else:
+                best, best_score = self._search_halving(y, X)
+            if best is None:  # degenerate panel: fall back to smallest config
+                best = self._fallback_candidate()
+                best_score = float("inf")
+            self.best_params_ = best
+            self.best_score_ = best_score
+            inner = self._family(**best).fit(y, X)
         self.state.update(inner.state)
         self._inner = inner
-        y.unpersist()
 
     def _search_grid(self, y: DataFrame, X: DataFrame | None = None):
         """Exhaustive: every candidate pays the full n_splits backtest."""

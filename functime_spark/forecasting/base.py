@@ -26,7 +26,7 @@ from functime_spark.conformal import enbpi
 from functime_spark.forecasting.ranges import future_points, future_time
 from functime_spark.panel import panel_cols
 from functime_spark.serialize import SparkStatePickleMixin
-from functime_spark.materialize import materialize as _materialize
+from functime_spark.materialize import materialize as _materialize, pinned
 
 
 class Forecaster(SparkStatePickleMixin):
@@ -97,14 +97,10 @@ class Forecaster(SparkStatePickleMixin):
         raise NotImplementedError
 
     def _materialize_state(self) -> None:
-        """localCheckpoint every DataFrame in the fitted state.
-
-        All state frames are n_entities-scale aggregates (last values,
-        seasonal tails, lag buffers); materializing them cuts
-        downstream prediction plans from re-deriving each aggregate off
-        the full panel to reading a cached block. Ensemble callers
-        (elite) use this so a bank of k models doesn't re-scan the
-        panel k times per predict."""
+        """Materialize every DataFrame in the fitted state: each is an
+        n_entities-scale aggregate, so an ensemble (elite) predicts
+        from k checkpointed blocks instead of re-scanning the panel
+        once per bank member."""
         for key, val in self.state.items():
             if isinstance(val, DataFrame):
                 self.state[key] = _materialize(val)
@@ -126,72 +122,59 @@ class Forecaster(SparkStatePickleMixin):
         step join), so irregular panels backtest correctly — the
         reference assumes freq-regular series here.
 
-        The stacked result is localCheckpoint-ed: it is tiny
-        (n_splits x n_entities x test_size rows) while its lineage embeds
-        n_splits window-split + refit subtrees. Materializing cuts every
-        downstream plan (conformalize / rank / elite) from ~20 re-scans
-        of the source panel to zero, and pins the values: re-executions
-        of the un-truncated lineage tripped a false broadcast-exchange
-        reuse in the deep union-of-joins plan (session-sticky row
-        duplication — every output row matched a second, column-swapped
-        quantile row; spark.sql.exchange.reuse=false confirmed the
-        diagnosis)."""
+        The stacked result is materialized (localCheckpoint): it is
+        tiny (n_splits x n_entities x test_size rows) while its lineage
+        embeds n_splits window-split + refit subtrees, and callers
+        re-read it (conformalize reads it twice, elite's smape and
+        stacker once each). On the benchmark's 3-split backtest,
+        dropping this pin made the pass slower (forecast_backtest
+        median pass_s 5.38 -> 5.88 s over seeds 1-5, 4 vCPUs): each
+        later read would re-run every split's filter and predict plan."""
         from functime_spark.operators.cross_validation import _annotate, _window_split
 
         p = panel_cols(y)
-        # annotate (per-entity row index + length) ONCE and cache it:
-        # every split's train AND test is a cheap filter on this frame,
-        # so the whole backtest pays one window+shuffle pass over the
-        # panel instead of 2*n_splits.
-        ann = _annotate(y)
-        annotated = (ann[0].persist(), ann[1])
-        splits = _window_split(
-            y, test_size, n_splits, step_size, window_size, annotated=annotated
-        )
-        preds = []
-        for i, (train, test) in splits.items():
-            # each split refits a clone. Clones share
-            # self.target_transform (fit-on-transform resets its state
-            # each split; the loop is sequential, so each split's
-            # invert sees that split's fitted params)
-            fitted = self._clone()
-            # short-coverage entities (series shorter than this split's
-            # test window, or too short for a forecaster's init — e.g.
-            # holt_winters' two-cycle requirement) drop out of the
-            # split instead of aborting the backtest — irregular
-            # panels are supported here. Set BEFORE fit so _fit
-            # implementations can honor the drop convention too.
-            fitted._x_on_short = "drop"
-            # X joins the train design on (entity, time), so passing the
-            # full exogenous panel is safe; the predict side must see
-            # ONLY the test-time rows (attach_future_x slices the
-            # earliest fh rows of whatever it is given)
-            fitted.fit(train, X)
-            X_test = (
-                X.join(
-                    test.select(p.entity, p.time), on=[p.entity, p.time], how="left_semi"
+        # annotate (per-entity row index + length) once, pinned for the
+        # call: every split's train AND test is a cheap filter on it, so
+        # the backtest pays one window+shuffle pass, not 2*n_splits
+        annotated = _annotate(y)
+        step = F.row_number().over(Window.partitionBy(p.entity).orderBy(p.time)) - 1
+        with pinned(annotated[0]):
+            splits = _window_split(
+                y, test_size, n_splits, step_size, window_size, annotated=annotated
+            )
+            preds = []
+            for i, (train, test) in splits.items():
+                # a clone per split; clones share self.target_transform,
+                # refit on each split's train (the loop is sequential)
+                fitted = self._clone()
+                # entities too short for this split's test window or for
+                # a family's init (holt_winters' two cycles) drop out of
+                # the split instead of aborting it; set before fit so
+                # _fit implementations can honor the drop too
+                fitted._x_on_short = "drop"
+                # X joins the train design on (entity, time); predict
+                # must see only the test-time X rows (attach_future_x
+                # slices the earliest fh rows of whatever it is given)
+                fitted.fit(train, X)
+                X_test = (
+                    X.join(test.select(p.entity, p.time), [p.entity, p.time], "left_semi")
+                    if X is not None
+                    else None
                 )
-                if X is not None
-                else None
-            )
-            vals = fitted._predict_values(test_size, X_test)
-            step = (
-                F.row_number().over(Window.partitionBy(p.entity).orderBy(p.time)) - 1
-            )
-            test_idx = test.withColumn("step", step)
-            y_pred = test_idx.join(vals, on=[p.entity, "step"], how="inner").select(
-                p.entity, p.time, F.col("__yhat").alias(p.target)
-            )
-            if fitted.target_transform is not None:
-                y_pred = fitted.target_transform.invert(y_pred)
-            preds.append(y_pred.withColumn("split", F.lit(i)))
-        out = preds[0]
-        for nxt in preds[1:]:
-            out = out.unionByName(nxt)
-        # eager: runs while the annotated frame is still cached
-        out = _materialize(out)
-        annotated[0].unpersist()
-        return out
+                vals = fitted._predict_values(test_size, X_test)
+                y_pred = (
+                    test.withColumn("step", step)
+                    .join(vals, on=[p.entity, "step"], how="inner")
+                    .select(p.entity, p.time, F.col("__yhat").alias(p.target))
+                )
+                if fitted.target_transform is not None:
+                    y_pred = fitted.target_transform.invert(y_pred)
+                preds.append(y_pred.withColumn("split", F.lit(i)))
+            out = preds[0]
+            for nxt in preds[1:]:
+                out = out.unionByName(nxt)
+            # eager: runs while the annotated frame is pinned
+            return _materialize(out)
 
     def conformalize(
         self,
@@ -215,20 +198,16 @@ class Forecaster(SparkStatePickleMixin):
         (the reference's Polars default is nearest)."""
         alphas = alphas or [0.1, 0.9]
         p = panel_cols(y)
-        # backtest() localCheckpoints its (tiny) result; the residuals
-        # and the point forecast are likewise n_entities-scale, so
-        # materializing them keeps the final plan free of the
-        # panel-rescanning lineage (and of the false-exchange-reuse
-        # duplication — see backtest()).
+        # backtest() materializes its (tiny) result, which is read
+        # twice below; the residuals and the point forecast are each
+        # read once, so they stay lazy
         y_preds = self.backtest(y, test_size=test_size, n_splits=n_splits, X=X)
         target = y_preds.columns[2]
         actual = y.withColumnRenamed(p.target, "__actual")
-        resid = _materialize(
-            y_preds.join(actual, on=[p.entity, p.time], how="inner").select(
-                p.entity, p.time, (F.col("__actual") - F.col(target)).alias("__resid")
-            )
+        resid = y_preds.join(actual, on=[p.entity, p.time], how="inner").select(
+            p.entity, p.time, (F.col("__actual") - F.col(target)).alias("__resid")
         )
-        y_point = _materialize(self.fit(y, X).predict(fh, X_future))
+        y_point = self.fit(y, X).predict(fh, X_future)
         combined = y_point.select(p.entity, p.time, target).unionByName(
             y_preds.select(p.entity, p.time, target)
         )

@@ -22,7 +22,7 @@ from functime_spark.forecasting.linear import linear_model, ridge
 from functime_spark.forecasting.naive import naive, snaive
 from functime_spark.operators.metrics import smape
 from functime_spark.panel import panel_cols
-from functime_spark.materialize import materialize
+from functime_spark.materialize import pinned
 
 
 def _default_bank(freq: str, sp: int, lags: int) -> dict:
@@ -117,56 +117,56 @@ class elite(Forecaster):
 
     def _fit(self, y: DataFrame, X: DataFrame | None = None):
         p = self.state["panel"]
-        y = y.persist()
-        bank = self.bank or _default_bank(self.freq, self.sp, self.lags)
+        # every bank member backtests and fits on y
+        with pinned(y) as y:
+            bank = self.bank or _default_bank(self.freq, self.sp, self.lags)
 
-        scores = None  # (entity, __model, smape)
-        all_preds = None  # lasso only: stacked backtest preds per model
-        for name, maker in bank.items():
-            try:
-                preds = maker().backtest(
-                    y, test_size=self.test_size, n_splits=self.n_splits
-                )
-            except Exception:
-                continue
-            s = smape(y, preds.drop("split")).withColumn("__model", F.lit(name))
-            scores = s if scores is None else scores.unionByName(s)
-            if self.ensemble_strategy == "lasso":
-                tagged = preds.drop("split").withColumn("__model", F.lit(name))
-                all_preds = (
-                    tagged if all_preds is None else all_preds.unionByName(tagged)
-                )
+            scores = None  # (entity, __model, smape)
+            all_preds = None  # lasso only: stacked backtest preds per model
+            for name, maker in bank.items():
+                try:
+                    preds = maker().backtest(
+                        y, test_size=self.test_size, n_splits=self.n_splits
+                    )
+                except Exception:
+                    continue
+                s = smape(y, preds.drop("split")).withColumn("__model", F.lit(name))
+                scores = s if scores is None else scores.unionByName(s)
+                if self.ensemble_strategy == "lasso":
+                    tagged = preds.drop("split").withColumn("__model", F.lit(name))
+                    all_preds = (
+                        tagged if all_preds is None else all_preds.unionByName(tagged)
+                    )
 
-        # per-entity top-k by smape; entities with no finite score get
-        # the naive fallback (ref elite.py:376-387)
-        # model name as secondary sort: equal-smape ties must resolve
-        # the same way on every run (and in the correctness oracle)
-        rank_w = Window.partitionBy(p.entity).orderBy("smape", "__model")
-        ranked = (
-            scores.filter(F.col("smape").isNotNull() & ~F.isnan("smape"))
-            .withColumn("__rank", F.row_number().over(rank_w))
-            .filter(F.col("__rank") <= self.top_k)
-            .select(p.entity, "__model", "__rank")
-        )
-        selection = ranked.select(p.entity, "__model")
-        all_entities = y.select(p.entity).distinct()
-        covered = selection.select(p.entity).distinct()
-        fallback = all_entities.join(covered, on=p.entity, how="left_anti").select(
-            p.entity, F.lit("naive").alias("__model")
-        )
-        self.state["selection"] = selection.unionByName(fallback).persist()
-        if self.ensemble_strategy == "lasso" and all_preds is not None:
-            self._fit_stacker(y, all_preds, ranked, p)
-        self.state["fitted_bank"] = {
-            name: maker().fit(y) for name, maker in bank.items()
-        }
-        # materialize each member's n_entities-scale state while y is
-        # still cached: predict then unions k tiny checkpointed frames
-        # instead of re-scanning the panel once per bank member
-        for fc in self.state["fitted_bank"].values():
-            fc._materialize_state()
-        self._materialize_state()  # own selection frames
-        y.unpersist()
+            # per-entity top-k by smape; entities with no finite score get
+            # the naive fallback (ref elite.py:376-387)
+            # model name as secondary sort: equal-smape ties must resolve
+            # the same way on every run (and in the correctness oracle)
+            rank_w = Window.partitionBy(p.entity).orderBy("smape", "__model")
+            ranked = (
+                scores.filter(F.col("smape").isNotNull() & ~F.isnan("smape"))
+                .withColumn("__rank", F.row_number().over(rank_w))
+                .filter(F.col("__rank") <= self.top_k)
+                .select(p.entity, "__model", "__rank")
+            )
+            selection = ranked.select(p.entity, "__model")
+            all_entities = y.select(p.entity).distinct()
+            covered = selection.select(p.entity).distinct()
+            fallback = all_entities.join(covered, on=p.entity, how="left_anti").select(
+                p.entity, F.lit("naive").alias("__model")
+            )
+            self.state["selection"] = selection.unionByName(fallback)
+            if self.ensemble_strategy == "lasso" and all_preds is not None:
+                self._fit_stacker(y, all_preds, ranked, p)
+            self.state["fitted_bank"] = {
+                name: maker().fit(y) for name, maker in bank.items()
+            }
+            # materialize each member's n_entities-scale state while y is
+            # still pinned: predict then unions k tiny checkpointed frames
+            # instead of re-scanning the panel once per bank member
+            for fc in self.state["fitted_bank"].values():
+                fc._materialize_state()
+            self._materialize_state()  # own selection frames
 
     def _fit_stacker(self, y: DataFrame, all_preds: DataFrame, ranked: DataFrame, p):
         """Global L1 stacker over the top-k backtest matrix (ref
@@ -203,7 +203,7 @@ class elite(Forecaster):
         M = np.asarray([[row[i] for i in range(self.top_k + 1)] for row in rows])
         b0, coefs = _lasso_ic(M[:, : self.top_k], M[:, self.top_k])
         self.state["stacker"] = (b0, [float(c) for c in coefs])
-        self.state["selection_rank"] = materialize(ranked)
+        self.state["selection_rank"] = ranked  # materialized by _fit
 
     def _predict_values(self, fh: int, X: DataFrame | None = None) -> DataFrame:
         p = self.state["panel"]

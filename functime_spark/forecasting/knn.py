@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from functime_spark.forecasting._ar import ARForecaster, make_reduction, predict_ar
+from functime_spark.materialize import pinned
 
 
 def _kmeans(X: np.ndarray, k: int, iters: int = 10, seed: int = 7) -> np.ndarray:
@@ -206,26 +207,24 @@ class knn(ARForecaster):
         x_cols = list(X.columns[2:]) if X is not None else []
         self.state["x_cols"] = x_cols
         feature_cols = [f"{p.target}__lag_{k}" for k in range(1, width + 1)]
-        cached = (
-            make_reduction(y, width, X)
-            .select(*feature_cols, *x_cols, p.target, p.entity)
-            .persist()
+        cached = make_reduction(y, width, X).select(
+            *feature_cols, *x_cols, p.target, p.entity
         )
-        # one action materializes the cache (the collect below re-reads
-        # it) and counts the rows and the entities the scale wall needs
-        counts = cached.agg(
-            F.count(F.lit(1)).alias("n"), F.countDistinct(p.entity).alias("e")
-        ).first()
-        n = counts["n"]
-        self.state["n_entities"] = counts["e"]
-        self.state["sampled"] = n > self.max_train_rows
-        design = cached.select(*feature_cols, *x_cols, p.target)
-        if self.state["sampled"]:
-            design = design.sample(
-                fraction=min(1.0, self.max_train_rows / n * 1.05), seed=7
-            ).limit(self.max_train_rows)
-        pdf = design.toPandas()
-        cached.unpersist()
+        with pinned(cached) as cached:
+            # one action fills the pin (the collect below re-reads it)
+            # and counts the rows and the entities the scale wall needs
+            counts = cached.agg(
+                F.count(F.lit(1)).alias("n"), F.countDistinct(p.entity).alias("e")
+            ).first()
+            n = counts["n"]
+            self.state["n_entities"] = counts["e"]
+            self.state["sampled"] = n > self.max_train_rows
+            design = cached.select(*feature_cols, *x_cols, p.target)
+            if self.state["sampled"]:
+                design = design.sample(
+                    fraction=min(1.0, self.max_train_rows / n * 1.05), seed=7
+                ).limit(self.max_train_rows)
+            pdf = design.toPandas()
         feats = pdf[feature_cols + x_cols].to_numpy(dtype="float64")
         targs = pdf[p.target].to_numpy(dtype="float64")
         return feats, targs

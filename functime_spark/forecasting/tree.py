@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from functime_spark.forecasting._ar import ARForecaster, make_reduction
-from functime_spark.materialize import materialize
+from functime_spark.materialize import materialize, pinned
 
 _CHECKPOINT_EVERY = 8
 
@@ -118,18 +118,13 @@ class gradient_boosted_model(ARForecaster):
             outputCol="__features",
             handleInvalid="keep",
         )
-        # lag-only path: no persist — each horizon re-selects this
-        # cheap projection exactly once off the persisted y_lag state,
-        # and a persist here would leak one cached frame per
-        # predict/backtest split for the session's lifetime (ADVICE r5).
-        # WITH exogenous X the incoming state is the un-persisted
-        # attach_future_x frame, so without a pin the X_future groupBy +
-        # broadcast join would re-execute once per horizon branch of the
-        # union (fh times) at action time; a lazy persist+unpersist
-        # cannot bracket that (the action runs after this function
-        # returns), so materialize eagerly — one n_entities-scale job,
-        # lineage cut, each horizon branch re-enters as one scan, and
-        # nothing stays registered in the cache manager (ADVICE r6)
+        # lag-only: no pin — each horizon re-selects this projection of
+        # the lazy y_lag state, whose one exchange the union's horizon
+        # branches share (exchange reuse). WITH exogenous X the state is
+        # the attach_future_x frame, whose X_future groupBy + broadcast
+        # join would re-run per horizon branch at action time, after
+        # this function returns — past any call-scoped pin. So it is
+        # materialized: one n_entities-scale job, one scan per branch.
         base = state.select(
             p.entity, "low", *feat_cols, *[F.col(f"__x_{c}") for c in x_cols]
         )
@@ -176,6 +171,11 @@ class gradient_boosted_model(ARForecaster):
         )
         steps = []
         for h in range(fh):
+            # the lazy state itself, then every _CHECKPOINT_EVERY steps:
+            # each horizon branch of the union re-enters as one scan
+            # instead of re-deriving the chain back to the panel
+            if h % _CHECKPOINT_EVERY == 0:
+                state = materialize(state, eager=False)
             # lag_k = k-th from the end of the ascending buffer;
             # exogenous step h = (h+1)-th element of each future array
             feat_cols = [
@@ -207,8 +207,6 @@ class gradient_boosted_model(ARForecaster):
                 ).alias("__buf"),
                 *xarr,
             )
-            if (h + 1) % _CHECKPOINT_EVERY == 0 and h + 1 < fh:
-                state = materialize(state, eager=False)
         out = steps[0]
         for nxt in steps[1:]:
             out = out.unionByName(nxt)
@@ -665,61 +663,62 @@ class boosted_stumps(ARForecaster):
                 "to gradient_boosted_model / random_forest_model instead"
             )
         p = self.state["panel"]
-        design = make_reduction(y, self.lags).persist()
+        design = make_reduction(y, self.lags)
         feat_names = [f"{p.target}__lag_{k}" for k in range(1, self.lags + 1)]
-        cols = [F.col(c).cast("double") for c in feat_names]
-        if self.max_candidates is not None:
-            # snap each feature to approx-quantile edges: candidate
-            # cardinality is bounded at max_candidates regardless of
-            # data size (one approxQuantile pass; assignment is a
-            # native array search, no Python)
-            probs = [
-                i / self.max_candidates for i in range(1, self.max_candidates)
-            ]
-            all_edges = design.stat.approxQuantile(feat_names, probs, 0.001)
-            snapped = []
-            self.state["snap_edges"] = []
-            for c, edges in zip(cols, all_edges):
-                uniq = sorted(set(edges))
-                self.state["snap_edges"].append(uniq)
-                arr = F.array(*[F.lit(float(v)) for v in uniq])
-                below = F.filter(arr, lambda e: e <= c)
-                snap = F.when(
-                    F.size(below) > 0, F.element_at(below, -1)
-                ).otherwise(F.lit(float(uniq[0])))
-                snapped.append(snap)
-            cols = snapped
-        else:
-            self.state["snap_edges"] = None
-        self.state["f0"] = float(
-            design.agg(F.avg(F.col(p.target)).alias("m")).first()["m"]
-        )
-        stumps: list = []
-        lr = float(self.learning_rate)
-        for _ in range(self.n_iter):
-            resid = F.col(p.target).cast("double") - self._stump_expr(stumps, cols)
-            # ONE fused action per round: all features ride a single
-            # posexplode projection into one (feature, value) hash
-            # aggregate; prefix/total cumsums run in windows
-            # PARTITIONED BY feature (never global); the cross-feature
-            # argmax is the same (gain desc, feature asc, value asc)
-            # tie-break the old per-feature loop applied
-            scored = _scored_candidates(design, cols, resid)
-            row = scored.orderBy(
-                F.desc("gain"), F.asc("__f"), F.asc("__v")
-            ).first()
-            if row is None:
-                break
-            stumps.append(
-                (int(row["__f"]), row["__v"], lr * row["ml"], lr * row["mr"])
+        # every boosting round scans the design
+        with pinned(design) as design:
+            cols = [F.col(c).cast("double") for c in feat_names]
+            if self.max_candidates is not None:
+                # snap each feature to approx-quantile edges: candidate
+                # cardinality is bounded at max_candidates regardless of
+                # data size (one approxQuantile pass; assignment is a
+                # native array search, no Python)
+                probs = [
+                    i / self.max_candidates for i in range(1, self.max_candidates)
+                ]
+                all_edges = design.stat.approxQuantile(feat_names, probs, 0.001)
+                snapped = []
+                self.state["snap_edges"] = []
+                for c, edges in zip(cols, all_edges):
+                    uniq = sorted(set(edges))
+                    self.state["snap_edges"].append(uniq)
+                    arr = F.array(*[F.lit(float(v)) for v in uniq])
+                    below = F.filter(arr, lambda e: e <= c)
+                    snap = F.when(
+                        F.size(below) > 0, F.element_at(below, -1)
+                    ).otherwise(F.lit(float(uniq[0])))
+                    snapped.append(snap)
+                cols = snapped
+            else:
+                self.state["snap_edges"] = None
+            self.state["f0"] = float(
+                design.agg(F.avg(F.col(p.target)).alias("m")).first()["m"]
             )
+            stumps: list = []
+            lr = float(self.learning_rate)
+            for _ in range(self.n_iter):
+                resid = F.col(p.target).cast("double") - self._stump_expr(stumps, cols)
+                # ONE fused action per round: all features ride a single
+                # posexplode projection into one (feature, value) hash
+                # aggregate; prefix/total cumsums run in windows
+                # PARTITIONED BY feature (never global); the cross-feature
+                # argmax is the same (gain desc, feature asc, value asc)
+                # tie-break the old per-feature loop applied
+                scored = _scored_candidates(design, cols, resid)
+                row = scored.orderBy(
+                    F.desc("gain"), F.asc("__f"), F.asc("__v")
+                ).first()
+                if row is None:
+                    break
+                stumps.append(
+                    (int(row["__f"]), row["__v"], lr * row["ml"], lr * row["mr"])
+                )
         self.state["stumps"] = stumps
         self.state["recursive_model"] = (
             self.state["f0"],
             stumps,
             self.state["snap_edges"],
         )
-        design.unpersist()
         self._fit_y_lag(y)
 
     @staticmethod
@@ -855,7 +854,7 @@ class boosted_trees_d2(ARForecaster):
         then broadcast back onto the binned frame to key the per-side
         child pass; root and child winners ride one ``collect``.
         Returns (root | None, {side: (j, v, ml, mr)}). Candidate
-        passes over the persisted binned frame are unchanged (one for
+        passes over the pinned binned frame are unchanged (one for
         the root, one for the children — same two cache scans the
         two-action shape paid); only the driver round-trips collapse.
         Windows stay PARTITIONED; the broadcast carries one row."""
@@ -954,32 +953,33 @@ class boosted_trees_d2(ARForecaster):
             lo, hi = float(row[f"__lo{j}"]), float(row[f"__hi{j}"])
             bins.append((lo, (hi - lo) / float(B) if hi > lo else 0.0))
         self.state["bins"] = bins
-        # materialize the integer-binned design once; every round's two
+        # pin the integer-binned design for the fit; every round's two
         # candidate passes scan this cached narrow frame
         binned = design.select(
             F.col(p.target).cast("double").alias("__y"), *self._bin_exprs()
-        ).persist()
+        )
         bcols = [F.col(f"__b{j}") for j in range(n_feats)]
         trees: list = []
         lr = float(self.learning_rate)
-        for _ in range(self.n_iter):
-            resid = F.col("__y") - self._tree_expr(trees, bcols)
-            # r12: root + both children in ONE action per round
-            root, subs = self._round_splits(binned, bcols, resid)
-            if root is None:
-                break
-            rj, rv, ml, mr = root
-            children = []
-            for s, fallback in ((0, ml), (1, mr)):
-                sub = subs.get(s)
-                if sub is None:
-                    # no valid child split: leaf at lr * side residual
-                    # mean — already on the root argmax row (sl/cl)
-                    children.append(("leaf", lr * fallback))
-                else:
-                    sj, sv, dl, dr = sub
-                    children.append(("split", sj, sv, lr * dl, lr * dr))
-            trees.append((rj, rv, children[0], children[1]))
+        with pinned(binned) as binned:
+            for _ in range(self.n_iter):
+                resid = F.col("__y") - self._tree_expr(trees, bcols)
+                # r12: root + both children in ONE action per round
+                root, subs = self._round_splits(binned, bcols, resid)
+                if root is None:
+                    break
+                rj, rv, ml, mr = root
+                children = []
+                for s, fallback in ((0, ml), (1, mr)):
+                    sub = subs.get(s)
+                    if sub is None:
+                        # no valid child split: leaf at lr * side residual
+                        # mean — already on the root argmax row (sl/cl)
+                        children.append(("leaf", lr * fallback))
+                    else:
+                        sj, sv, dl, dr = sub
+                        children.append(("split", sj, sv, lr * dl, lr * dr))
+                trees.append((rj, rv, children[0], children[1]))
         self.state["trees"] = trees
         self.state["recursive_model"] = (
             self.state["f0"],
@@ -987,7 +987,6 @@ class boosted_trees_d2(ARForecaster):
             self.state["bins"],
             self.max_bins,
         )
-        binned.unpersist()
         self._fit_y_lag(y)
 
     @staticmethod

@@ -1,39 +1,37 @@
-"""Spark-Connect-safe materialization.
+"""Spark-Connect-safe materialization, and the one caching rule.
 
-``DataFrame.localCheckpoint`` is the cheapest lineage cut on a classic
-session (block-manager persisted, no cluster-wide checkpoint dir), and
-the repo leans on it everywhere a small derived frame feeds several
-plan branches (count tables, signature stores, backtest stacks,
-connected-components rounds). Spark Connect, however, only grew a
-localCheckpoint RPC recently and older Connect servers reject it — so
-the 100 TB story must survive a Connect-only cluster.
+Forecasting caches by one rule:
 
-``materialize`` is the single seam: localCheckpoint when the session
-supports it, else CHECKPOINT-TO-TABLE — write the frame to a parquet
-directory and read it back. That is a true lineage cut (the persist
-alternative keeps the full logical plan alive, which lets planning
-cost and the cache-manager's strong references grow without bound
-across iterative fits — measured as a session death 40 minutes into
-the forced-fallback suite), works over pure SQL/DataFrame RPCs, and
-keeps every scan-amplification plan pin intact (each materialized
-frame re-enters the plan as ONE parquet scan).
+1. a frame one call re-reads is cached for that call by ``pinned``,
+   which releases what it cached and leaves a caller's cache alone;
+2. a fitted forecaster's state frames are never ``persist()``-ed
+   (nothing would release them): they stay lazy, one aggregate deep,
+   or are materialized;
+3. ``materialize`` serves later calls that re-read a bounded plan:
+   the backtest result, elite's bank states, the holt_winters kernel
+   state and the GBT recursion; its blocks go when the frame does.
 
-The fallback directory defaults to ``<spark.sql.warehouse.dir>/
-_functime_materialize/<session-uuid>`` — shared storage on a real
-cluster, ``spark-warehouse/`` locally — and is overridable with
-``FUNCTIME_SPARK_MATERIALIZE_DIR``. Files live until the directory is
-cleaned like any checkpoint dir.
-
-Set ``FUNCTIME_SPARK_NO_LOCAL_CHECKPOINT=1`` to force the fallback
-path (used by the test suite to prove Connect-compatibility of every
-call site without a Connect server in the container).
+``materialize`` is the one lineage cut: ``DataFrame.localCheckpoint``
+(block-manager persisted, no checkpoint dir), or, on a Spark Connect
+server without that RPC, a parquet write and read-back, which also
+cuts the lineage and re-enters every plan as one scan. A persist, by
+contrast, keeps the full plan alive in the cache manager: across
+iterative fits that grew until the session died. The fallback
+directory is ``<spark.sql.warehouse.dir>/_functime_materialize/
+<session-uuid>`` unless ``FUNCTIME_SPARK_MATERIALIZE_DIR`` is set;
+its files live until it is cleaned like any checkpoint dir.
+``FUNCTIME_SPARK_NO_LOCAL_CHECKPOINT=1`` forces the fallback (the test
+suite runs every call site through it without a Connect server).
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from contextlib import contextmanager
+from typing import Iterator
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 FORCE_FALLBACK = os.environ.get("FUNCTIME_SPARK_NO_LOCAL_CHECKPOINT", "") == "1"
@@ -99,3 +97,19 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     path = _fallback_path(spark)
     df.write.parquet(path)
     return spark.read.parquet(path)
+
+
+@contextmanager
+def pinned(df: DataFrame) -> Iterator[DataFrame]:
+    """Cache `df` for the block unless it is cached already (the
+    session's cache manager answers `storageLevel`, so a frame the
+    caller persisted is used as it is), and release exactly what was
+    cached on exit, also on a raise (MLlib's handlePersistence)."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()

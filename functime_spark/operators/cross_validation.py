@@ -3,8 +3,9 @@
 Mirrors functime cross_validation.py. Each split is a lazily-filtered
 DataFrame: one window pass attaches per-entity row index + length,
 then every train/test split is a cheap row-range predicate on the SAME
-annotated frame — so persisting the annotated frame makes n_splits
-scans share one shuffle (the reference's dict-of-LazyFrames maps to
+annotated frame — so pinning the annotated frame for the call
+(``materialize.pinned``, as ``Forecaster.backtest`` does) makes
+n_splits scans share one shuffle (the reference's dict-of-LazyFrames maps to
 exactly this).
 """
 
@@ -56,7 +57,7 @@ def _window_split(df: DataFrame, test_size: int, n_splits: int, step_size: int, 
     reversed [test_size, test_size + step, ..., test_size + (n_splits-1)*step].
 
     Pass `annotated` (the `_annotate(df)` result) to share ONE
-    row-index window pass across every split — callers that persist it
+    row-index window pass across every split — callers that pin it
     (backtest) turn 2*n_splits window+shuffle passes into one."""
     if annotated is not None:
         ann, e = annotated

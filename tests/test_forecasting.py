@@ -428,6 +428,71 @@ def test_elite_backtest_refits_with_its_bank(spark):
     np.testing.assert_allclose(got["y"], want["y"], rtol=0, atol=1e-9)
 
 
+def test_forecasting_leaves_the_session_cache_as_it_found_it(spark):
+    """A call caches only for its own duration (`materialize.pinned`)
+    and a fitted forecaster holds no persisted frame: after each call
+    the session's cache holds as many entries as before it, and the
+    caller's persisted y is still cached (a pin never releases what
+    the caller cached)."""
+    from pyspark.sql import DataFrame
+
+    from functime_spark.forecasting import (
+        auto_linear_model,
+        boosted_stumps,
+        elite,
+        knn,
+        linear_model,
+    )
+    from functime_spark.forecasting.tree import boosted_trees_d2
+
+    rows = [
+        (e, t, 10.0 + i + (t % 5) * 2.0 + ((t * 7919 + i) % 13) / 13.0)
+        for i, e in enumerate("abcd")
+        for t in range(48)
+    ]
+    y = spark.createDataFrame(rows, "entity string, t long, y double").persist()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    kw = {"freq": "1i", "lags": 3}
+
+    def call(what, f):
+        before = cache.cachedData().size()
+        out = f()
+        if isinstance(out, DataFrame):
+            out.collect()
+        assert cache.cachedData().size() == before, what
+        assert y.storageLevel.useMemory, what
+        return out
+
+    try:
+        y.count()
+        fc = call("linear fit", lambda: linear_model(**kw).fit(y))
+        call("linear predict", lambda: fc.predict(3))
+        call("linear backtest", lambda: fc.backtest(y, test_size=3, n_splits=2))
+        call(
+            "linear conformalize",
+            lambda: fc.conformalize(y, fh=3, test_size=3, n_splits=2),
+        )
+        ens = call(
+            "elite fit",
+            lambda: elite(sp=5, test_size=3, n_splits=2, **kw).fit(y),
+        )
+        call("elite predict", lambda: ens.predict(3))
+        auto = call(
+            "auto_linear_model fit",
+            lambda: auto_linear_model(
+                freq="1i", min_lags=2, max_lags=4, test_size=3, n_splits=2
+            ).fit(y),
+        )
+        call("auto_linear_model predict", lambda: auto.predict(3))
+        call("knn fit", lambda: knn(**kw).fit(y))
+        call("boosted_stumps fit", lambda: boosted_stumps(n_iter=2, **kw).fit(y))
+        call(
+            "boosted_trees_d2 fit", lambda: boosted_trees_d2(n_iter=2, **kw).fit(y)
+        )
+    finally:
+        y.unpersist()
+
+
 def test_auto_linear_picks_a_config(spark):
     from functime_spark.forecasting.automl import auto_linear_model
 

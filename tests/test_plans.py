@@ -823,7 +823,6 @@ def test_ar_predict_plan_has_no_join(spark):
     plan = explain_str(pred, "simple")
     assert not re.search(r"Join|CartesianProduct", plan), plan
     assert pred.count() == 6
-    fc.state["y_lag"].unpersist()
 
 
 def test_salted_join_no_broadcast_of_big_side(spark):
